@@ -4,13 +4,28 @@ Mirrors the reference's table-scan surface (SURVEY.md §2.1 S1-S3): the
 reference reads whole tables from PostgreSQL/CSV into pandas; here tables are
 parquet directories read lazily so Catalyst can push filters and prune
 columns down to the scan.
+
+Schema cache: a schema-less ``spark.read.parquet`` runs one Spark job to
+infer the schema from the file footers, and the reference's q1-q10 pass
+reads 20 tables.  :func:`read_parquet` keeps, per session, one entry per
+path: the inferred schema, keyed on the path's file signature (every file's
+relative name, size and mtime, plus its inode on a local filesystem; see
+``sources/fs.py``) and the values the session sets for ``SCHEMA_CONFS``.
+When both match, the read passes the cached schema and launches no job.
+When either differs (files added, removed or rewritten, or a
+schema-affecting setting changed), the read infers as before and its schema
+replaces the entry.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .sources.fs import filesystem_for
 
 TABLE_NAMES = (
     "region",
@@ -32,6 +47,40 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # SF but stay far below fact tables -- Spark's own threshold decides those).
 ALWAYS_BROADCAST = {"region", "nation"}
 
+#: Session settings that change the schema Spark infers from the same files.
+SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: session -> path -> ((file signature, SCHEMA_CONFS values), schema); a
+#: lost race between two readers stores an equally valid entry
+_schemas: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[tuple, StructType]]
+] = weakref.WeakKeyDictionary()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when the
+    path's files or the schema-affecting settings changed since the
+    last read (see the module docstring)."""
+    key = (
+        filesystem_for(spark, path).signature(path),
+        tuple(spark.conf.get(k, None) for k in SCHEMA_CONFS),
+    )
+    cache = _schemas.setdefault(spark, {})
+    hit = cache.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    cache[path] = (key, df.schema)
+    return df
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
@@ -39,7 +88,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _events(spark, path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _events(spark: SparkSession, path: str) -> DataFrame:
@@ -58,7 +107,7 @@ def _events(spark: SparkSession, path: str) -> DataFrame:
     The reader never mutates session conf; timezone/legacy settings belong
     to the session factory (session.py) / entry boundary.
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 

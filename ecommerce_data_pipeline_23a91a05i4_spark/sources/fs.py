@@ -28,6 +28,7 @@ load_warehouse.py); an engine that owns its files must supply it.
 from __future__ import annotations
 
 import fnmatch
+import os
 import posixpath
 import shutil
 from pathlib import Path
@@ -94,8 +95,6 @@ class PosixFS:
         exist — the optimistic-concurrency commit verb of the manifest
         log (sources/txtable.py).  hard-link(2) is atomic and fails with
         EEXIST when another writer won the race."""
-        import os
-
         os.link(str(src), str(dst))  # raises FileExistsError on conflict
         os.unlink(str(src))
 
@@ -113,6 +112,22 @@ class PosixFS:
         """Last-modification time (epoch seconds) — the age signal the
         manifest log's vacuum retention guard uses."""
         return Path(path).stat().st_mtime
+
+    def signature(self, path: str) -> tuple:
+        """Sorted (relative name, size, mtime ns, inode) of every file
+        under ``path`` (``path`` itself when it is a file; empty when it
+        does not exist) — what catalog.py keys its schema cache on."""
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns, st.st_ino),)
+        out = []
+        for d, _, names in os.walk(path):
+            for n in names:
+                full = os.path.join(d, n)
+                st = os.stat(full)
+                rel = os.path.relpath(full, path)
+                out.append((rel, st.st_size, st.st_mtime_ns, st.st_ino))
+        return tuple(sorted(out))
 
     def size(self, path: str) -> int:
         """One file's byte length — the bin-packing signal
@@ -252,6 +267,28 @@ class HadoopFS:
         return int(
             self._fs(path).getFileStatus(self._jpath(path)).getLen()
         )
+
+    def signature(self, path: str) -> tuple:
+        """PosixFS.signature through one recursive listing, with the
+        mtime in ms; the Hadoop API has no portable inode, so that slot
+        is None."""
+        fs = self._fs(path)
+        base = self._jpath(path)
+        if not fs.exists(base):
+            return ()
+        base_str = str(fs.makeQualified(base).toUri().getPath()).rstrip("/")
+        it = fs.listFiles(base, True)
+        out = []
+        while it.hasNext():
+            status = it.next()
+            full = str(status.getPath().toUri().getPath())
+            out.append((
+                full[len(base_str) + 1:],
+                int(status.getLen()),
+                int(status.getModificationTime()),
+                None,
+            ))
+        return tuple(sorted(out))
 
     def list_data_files(self, path: str) -> list[str]:
         fs = self._fs(path)

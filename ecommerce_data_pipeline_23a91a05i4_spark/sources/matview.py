@@ -117,7 +117,7 @@ def table_changes(
             )
             if not paths:
                 return None
-            return t.spark.read.parquet(*paths).select(
+            return t._read_dvs(paths).select(
                 F.col("file_key").alias("_tx_key"),
                 F.col("pos").alias("_tx_pos"),
             )

@@ -80,12 +80,17 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .fs import filesystem_for
 
 LOG_DIR = "_txlog"
 DATA_DIR = "data"
+
+#: the layout _stage_dv writes every deletion-vector file in
+DV_SCHEMA = StructType(
+    [StructField("file_key", StringType()), StructField("pos", LongType())]
+)
 
 #: _commit sentinel: carry the parent manifest's column mapping forward
 _INHERIT = object()
@@ -848,11 +853,16 @@ class TxTable:
         )
         if not dv_paths:
             return out
-        dv = self.spark.read.parquet(*dv_paths).select(
+        dv = self._read_dvs(dv_paths).select(
             F.col("file_key").alias("_tx_key"),
             F.col("pos").alias("_tx_pos"),
         )
         return out.join(dv, ["_tx_key", "_tx_pos"], "left_anti")
+
+    def _read_dvs(self, paths: list[str]) -> DataFrame:
+        """Deletion-vector rows of ``paths``, read with the schema
+        _stage_dv wrote them in (no inference job)."""
+        return self.spark.read.schema(DV_SCHEMA).parquet(*paths)
 
     def _read_entries(
         self,
@@ -1057,8 +1067,11 @@ class TxTable:
             for i, c in enumerate(pcols):
                 aggs.append(F.min(F.col(c)).alias(f"mn_{i}"))
                 aggs.append(F.max(F.col(c)).alias(f"mx_{i}"))
+            # read back with the schema just written (partition column
+            # included): no inference job
             stats_rows = (
-                self.spark.read.parquet(commit_dir)
+                self.spark.read.schema(df.schema)
+                .parquet(commit_dir)
                 .select(F.input_file_name().alias("_f"), *map(F.col, pcols))
                 .groupBy("_f")
                 .agg(*aggs)
@@ -1130,7 +1143,8 @@ class TxTable:
                 )
             ).alias("cp")
             pos_rows = (
-                self.spark.read.parquet(commit_dir)
+                self.spark.read.schema(df.schema)
+                .parquet(commit_dir)
                 .select(F.input_file_name().alias("_f"), probes)
                 .select("_f", "cp.ci", "cp.pos")
                 .distinct()
@@ -2869,7 +2883,7 @@ class TxTable:
             self.path, DATA_DIR, f"c-{uuid.uuid4().hex}"
         )
         df.select(
-            F.col("file_key").cast("string"), F.col("pos").cast("long")
+            *[F.col(f.name).cast(f.dataType) for f in DV_SCHEMA.fields]
         ).coalesce(1).write.mode("errorifexists").parquet(commit_dir)
         rels = self.fs.list_data_files(commit_dir)
         if len(rels) != 1:
@@ -2975,8 +2989,7 @@ class TxTable:
             )
             if old_paths:
                 dv_rows = dv_rows.unionByName(
-                    self.spark.read.parquet(*old_paths)
-                    .select("file_key", "pos")
+                    self._read_dvs(old_paths)
                     .filter(F.col("file_key").isin(list(hit_info)))
                 )
             dv_rel = self._stage_dv(dv_rows)

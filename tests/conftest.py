@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import warnings
 from pathlib import Path
 
 import pytest
@@ -38,8 +39,10 @@ def pytest_collection_modifyitems(config, items):
     marker by default so the driver-side run completes within its
     budget (VERDICT r12 next #7); sessions run the FULL suite with
     ``-m ""`` (and regenerate the list from ``--durations`` output when
-    the shape shifts).  Data-driven on purpose: no per-test churn, and
-    an entry that stops matching simply stops tagging."""
+    the shape shifts).  Data-driven on purpose: no per-test churn.  An
+    entry that stops matching stops tagging, and is reported as a
+    warning when its file was collected, so the list cannot go stale
+    unseen."""
     listing = Path(__file__).with_name("slowtail.txt")
     if not listing.exists():
         return
@@ -51,3 +54,15 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.nodeid in slow:
             item.add_marker(pytest.mark.slowtail)
+    collected = {item.nodeid for item in items}
+    files = {nodeid.split("::", 1)[0] for nodeid in collected}
+    stale = sorted(
+        n for n in slow - collected if n.split("::", 1)[0] in files
+    )
+    if stale:
+        warnings.warn(
+            pytest.PytestWarning(
+                "tests/slowtail.txt entries that match no collected "
+                "test: " + ", ".join(stale)
+            )
+        )

@@ -1642,6 +1642,43 @@ def test_bloom_index_point_lookup(spark, tmp_path):
         TxTable(spark, str(tmp_path / "x"), bloom_col="k", bloom_bits=4)
 
 
+@pytest.mark.parametrize("partition_by", [None, "p"])
+def test_append_reads_its_staged_files_with_known_schema(
+    spark, tmp_path, partition_by
+):
+    """The stats and bloom passes read the just-staged files back with
+    the schema that wrote them, so an append launches the write job and
+    two jobs per pass — no schema-inference job (7 jobs when each pass
+    inferred) — and the recorded stats still describe the new files."""
+
+    def rows(lo, hi):
+        return (
+            spark.range(lo, hi)
+            .withColumn("k", F.col("id") * 2)
+            .withColumn("p", (F.col("id") % 3).cast("string"))
+        )
+
+    t = TxTable(spark, str(tmp_path / "t"), stats_col="k", bloom_col="k")
+    t.init(rows(0, 100), partition_by=partition_by)
+    before = {e["path"] for e in t.manifest()["files"]}
+    sc = spark.sparkContext
+    group = f"append_known_schema_{partition_by}"
+    sc.setJobGroup(group, "append")
+    try:
+        t.append(rows(100, 150))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(jobs) == 5
+    new = [e for e in t.manifest()["files"] if e["path"] not in before]
+    assert new and all(e["bloom"] for e in new)
+    lo = min(e["stats"]["k"][0] for e in new)
+    hi = max(e["stats"]["k"][1] for e in new)
+    assert (lo, hi) == (200, 298)
+    assert t.snapshot().count() == 150
+
+
 def test_analyze_stats_carry_and_validation(spark, tmp_path):
     """analyze() records n_rows / nulls / min-max / HLL NDV as a
     metadata-only commit; later commits carry the stats forward with
