@@ -841,7 +841,6 @@ def semdedup(
     sub_seed: int = SEMDEDUP_SUB_SEED,
     dim: int = 64,
     assign_bits: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023: cluster the
     embedding space, then prune near-identical pairs WITHIN clusters
@@ -886,15 +885,13 @@ def semdedup(
     (test/ground-truth escape hatch); seed mode always assigns exactly
     (k seeds are a small constant by contract).
 
-    ``materialize`` (default True): the assignment relation feeds THREE
-    consumers (both pairwise self-join sides and the dropped-flag
-    join), so it is localCheckpoint-ed EAGERLY — building the returned
-    DataFrame therefore already executes the full assignment, drops its
-    lineage (not re-derivable on executor loss), and fixes a plan
-    boundary downstream rewrites cannot cross (ADVICE r12: this
-    eager-execution contract must be explicit).  Pass False to keep the
-    plan fully lazy/recomputable — each consumer then re-runs the
-    assignment subtree (the pre-r12 12-scan plan shape).
+    Eager execution: the assignment relation feeds THREE consumers
+    (both pairwise self-join sides and the dropped-flag join), so it is
+    localCheckpoint-ed EAGERLY — building the returned DataFrame
+    therefore already executes the full assignment, drops its lineage
+    (not re-derivable on executor loss), and fixes a plan boundary
+    downstream rewrites cannot cross (ADVICE r12: this eager-execution
+    contract must be explicit).
 
     Scale: bucketed assignment is an equi-join on the SRP key (the
     exact path is a broadcast cross join against k·dim doubles); one
@@ -942,11 +939,9 @@ def semdedup(
     # three consumers follow — both sides of the pairwise self-join and
     # the final dropped-flag join — and without a checkpoint each re-ran
     # the bucketed centroid assignment and the sub/chunk windows (t44's
-    # plan re-scanned the embeddings 12 times).  Gated by
-    # ``materialize`` (see docstring) so callers can opt out of the
-    # eager-execution/lineage-drop contract.
-    if materialize:
-        assigned = assigned.localCheckpoint(eager=True)
+    # plan re-scanned the embeddings 12 times).  See the docstring's
+    # eager-execution contract.
+    assigned = assigned.localCheckpoint(eager=True)
     a, b = assigned.alias("a"), assigned.alias("b")
     dropped = (
         a.join(
@@ -1332,14 +1327,7 @@ class AnnIndex:
                  bits_per_band: int = 3, dim: int = 64,
                  seed: int = 7, pq: bool = False, pq_m: int = 16,
                  pq_ksub: int = 16,
-                 pq_train_mod: int | None = None,
-                 stats_on_keys: bool = False) -> None:
-        # stats_on_keys records per-file [min, max] of the band MV's
-        # vector id (and the codes MV's), so refresh-time merges prune
-        # their hit-file detection to the delta's id range (TxTable.
-        # merge, optimization r13) — opt in, pays one stats pass per
-        # staged file, wins when ids are monotone (the common corpus
-        # shape)
+                 pq_train_mod: int | None = None) -> None:
         from ..sources.txtable import TxTable
 
         self.corpus = corpus
@@ -1353,11 +1341,7 @@ class AnnIndex:
         self.pq_m = pq_m
         self.pq_ksub = pq_ksub
         self.pq_train_mod = pq_train_mod
-        self._id_stats = ["id"] if stats_on_keys else None
-        self.bands_mv = TxTable(
-            corpus.spark, root.rstrip("/") + "/bands",
-            stats_col=self._id_stats,
-        )
+        self.bands_mv = TxTable(corpus.spark, root.rstrip("/") + "/bands")
         if pq:
             # PQ sidecar state (VERDICT r11 next #1's "compose the
             # PQ/IVF machinery"): codebooks FROZEN at build (classic
@@ -1367,8 +1351,7 @@ class AnnIndex:
                 corpus.spark, root.rstrip("/") + "/codebooks"
             )
             self.codes_mv = TxTable(
-                corpus.spark, root.rstrip("/") + "/codes",
-                stats_col=self._id_stats,
+                corpus.spark, root.rstrip("/") + "/codes"
             )
 
     def _band_rows(self, df: DataFrame) -> DataFrame:

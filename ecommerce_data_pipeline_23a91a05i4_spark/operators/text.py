@@ -852,6 +852,18 @@ def bm25_topk_from_index(
     alongside postings (Bm25Index's termdf matview: one row-local
     array_distinct explode, df = docs containing the term).
 
+    Eager work: building the returned DataFrame already runs Spark
+    jobs.  Up to four driver collects turn the control plane into
+    literal relations, each bounded by ``_PRUNE_LITERAL_CAP`` rows:
+    the batch's (query_id, term) pairs (skipped when ``query_pairs``
+    is given), the distinct query terms (only when neither the pairs
+    nor ``vocab_terms`` are at hand), the vocabulary's (term, df)
+    rows from ``term_df``, and the one corpus-stats row.  Then one
+    eager ``localCheckpoint`` materializes the phase-1 (query, doc)
+    candidate pairs, which the tf2 restriction and the per-query
+    pairs join both consume; the result's lineage starts there, so
+    it is not re-derivable on executor loss.
+
     Returns ``(query_id, rank, doc_id, n_terms_matched, score)``,
     rank 1..k per query."""
     return _bm25_pruned_plan(
@@ -1012,18 +1024,7 @@ class Bm25Index:
     _M_TDF: dict = {}  # n_rows IS the document frequency
 
     def __init__(self, corpus, root: str, id_col: str = "doc_id",
-                 text_col: str = "text",
-                 stats_on_keys: bool = False) -> None:
-        """``stats_on_keys=True`` records per-file [min, max] stats for
-        each MV's merge keys (doc_id on doclen, term on termdf), so
-        refresh-time merges manifest-prune their hit-file detection to
-        the delta's key range (TxTable.merge, optimization r13).  Opt
-        in — every staged file then pays one extra stats pass — and
-        worth it exactly when deltas are key-range-clustered: monotone
-        doc ids make doclen refreshes touch O(delta-range) files on a
-        100 TB index.  The postings MV is excluded: its layout (term
-        buckets, full doc range per file) records stats no delta can
-        prune on, so the pass would be pure cost."""
+                 text_col: str = "text") -> None:
         from ..sources.txtable import TxTable
 
         self.corpus = corpus
@@ -1031,18 +1032,12 @@ class Bm25Index:
         self.text_col = text_col
         spark = corpus.spark
         self.postings = TxTable(spark, root.rstrip("/") + "/postings")
-        self.doclen = TxTable(
-            spark, root.rstrip("/") + "/doclen",
-            stats_col=["doc_id"] if stats_on_keys else None,
-        )
+        self.doclen = TxTable(spark, root.rstrip("/") + "/doclen")
         self.cstats = TxTable(spark, root.rstrip("/") + "/cstats")
         # per-term document frequencies — the max-score upper-bound
         # state (VERDICT r11 next #4): one row per corpus-vocabulary
         # term, maintained by the same signed-delta algebra
-        self.termdf = TxTable(
-            spark, root.rstrip("/") + "/termdf",
-            stats_col=["term"] if stats_on_keys else None,
-        )
+        self.termdf = TxTable(spark, root.rstrip("/") + "/termdf")
 
     # row-local transforms (the mv_init/mv_refresh contract)
     def _tok_rows(self, df: DataFrame) -> DataFrame:

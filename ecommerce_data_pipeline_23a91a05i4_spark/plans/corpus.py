@@ -23,6 +23,7 @@ from ..functions.exprs import quant
 from ..operators import dedup as dd
 from ..operators.graph import connected_components
 from ..operators.text import bm25_scores, bm25_scores_relational, norm_text
+from ._gate import Scratch, gate
 from .llmdata import JACCARD_MAX_DOC_FREQ, JACCARD_THRESHOLD
 
 TFIDF_TOP_K = 3
@@ -661,7 +662,10 @@ def t94_bm25_query_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def t99_incremental_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t99_incremental_bm25_index(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """INCREMENTAL BM25 corpus statistics over the change feed
     (VERDICT r10 next #6): a standing retrieval service keeps the
     inverted index — postings (term, doc, tf), doc lengths, corpus
@@ -681,16 +685,12 @@ def t99_incremental_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores row-identical to bm25_scores_relational on the final text.
     The oracle replays everything from the raw corpus at the final
     state (documents minus the %5==4 band)."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..operators.text import bm25_scores_from_index, tokens
     from ..sources.matview import mv_init, mv_refresh
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix=f"t99_{_uuid.uuid4().hex[:8]}_")
+    base = scratch.dir
 
     def tok_rows(df: DataFrame) -> DataFrame:
         # row-local transform: doc -> one row per token occurrence
@@ -708,75 +708,71 @@ def t99_incremental_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("corpus").alias("scope"),
         )
 
-    try:
-        corpus = TxTable(spark, base + "/corpus")
-        corpus.init(docs.filter(F.col("doc_id") % 3 != 2).coalesce(2))
-        postings = TxTable(spark, base + "/postings")
-        doclen = TxTable(spark, base + "/doclen")
-        cstats = TxTable(spark, base + "/cstats")
-        snap0 = corpus.snapshot()
-        mv_init(postings, snap0, ["term", "doc_id"], {"tf": "1"},
-                transform=tok_rows)
-        mv_init(doclen, snap0, ["doc_id"], {"dl": "dl"},
-                transform=doc_rows)
-        mv_init(cstats, snap0, ["scope"],
-                {"n_docs": "1", "total_tokens": "dl"}, transform=doc_rows)
-        v_init = corpus.latest_version()
-        corpus.append(docs.filter(F.col("doc_id") % 3 == 2).coalesce(1))
-        corpus.delete_dv(F.col("doc_id") % 5 == 4)
-        # ONE refresh per MV absorbs the append AND the delete
-        mv_refresh(postings, corpus, ["term", "doc_id"], {"tf": "1"},
-                   from_version=v_init, transform=tok_rows)
-        mv_refresh(doclen, corpus, ["doc_id"], {"dl": "dl"},
-                   from_version=v_init, transform=doc_rows)
-        mv_refresh(cstats, corpus, ["scope"],
-                   {"n_docs": "1", "total_tokens": "dl"},
-                   transform=doc_rows, from_version=v_init)
-        final = corpus.snapshot()
-        # t94's query derivation, over the FINAL corpus
-        toks = final.select(
-            F.explode(tokens(F.col("text"))).alias("term")
-        ).filter((F.col("term") != "") & (F.length("term") >= 4))
-        vocab = (
-            toks.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .orderBy(F.desc("c"), "term")
-            .limit(200)
-        )
-        qt = vocab.withColumn(
-            "rn", F.row_number().over(Window.orderBy(F.desc("c"), "term"))
-        ).select(
-            F.floor((F.col("rn") - F.lit(1)) / F.lit(2))
-            .cast("long")
-            .alias("query_id"),
-            "term",
-        ).localCheckpoint(eager=True)  # one derivation, two consumers
-        scored = bm25_scores_from_index(
-            postings.snapshot().select("term", "doc_id", "tf"),
-            doclen.snapshot().select("doc_id", "dl"),
-            cstats.snapshot().select("n_docs", "total_tokens"),
-            qt,
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
-        top = (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= 3)
-            .select("query_id", "rank", "doc_id", "n_terms_matched", "score")
-        )
-        # the maintained index and the full text recompute must agree
-        # ROW-IDENTICALLY (shared scoring tail; exact integer sums)
-        recompute = bm25_scores_relational(final, "doc_id", "text", qt)
-        same = (
-            scored.exceptAll(recompute).isEmpty()
-            and recompute.exceptAll(scored).isEmpty()
-        )
-        return (
-            top.withColumn("index_matches_recompute", F.lit(same))
-            .orderBy("query_id", "rank")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    corpus = TxTable(spark, base + "/corpus")
+    corpus.init(docs.filter(F.col("doc_id") % 3 != 2).coalesce(2))
+    postings = TxTable(spark, base + "/postings")
+    doclen = TxTable(spark, base + "/doclen")
+    cstats = TxTable(spark, base + "/cstats")
+    snap0 = corpus.snapshot()
+    mv_init(postings, snap0, ["term", "doc_id"], {"tf": "1"},
+            transform=tok_rows)
+    mv_init(doclen, snap0, ["doc_id"], {"dl": "dl"},
+            transform=doc_rows)
+    mv_init(cstats, snap0, ["scope"],
+            {"n_docs": "1", "total_tokens": "dl"}, transform=doc_rows)
+    v_init = corpus.latest_version()
+    corpus.append(docs.filter(F.col("doc_id") % 3 == 2).coalesce(1))
+    corpus.delete_dv(F.col("doc_id") % 5 == 4)
+    # ONE refresh per MV absorbs the append AND the delete
+    mv_refresh(postings, corpus, ["term", "doc_id"], {"tf": "1"},
+               from_version=v_init, transform=tok_rows)
+    mv_refresh(doclen, corpus, ["doc_id"], {"dl": "dl"},
+               from_version=v_init, transform=doc_rows)
+    mv_refresh(cstats, corpus, ["scope"],
+               {"n_docs": "1", "total_tokens": "dl"},
+               transform=doc_rows, from_version=v_init)
+    final = corpus.snapshot()
+    # t94's query derivation, over the FINAL corpus
+    toks = final.select(
+        F.explode(tokens(F.col("text"))).alias("term")
+    ).filter((F.col("term") != "") & (F.length("term") >= 4))
+    vocab = (
+        toks.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.desc("c"), "term")
+        .limit(200)
+    )
+    qt = vocab.withColumn(
+        "rn", F.row_number().over(Window.orderBy(F.desc("c"), "term"))
+    ).select(
+        F.floor((F.col("rn") - F.lit(1)) / F.lit(2))
+        .cast("long")
+        .alias("query_id"),
+        "term",
+    ).localCheckpoint(eager=True)  # one derivation, two consumers
+    scored = bm25_scores_from_index(
+        postings.snapshot().select("term", "doc_id", "tf"),
+        doclen.snapshot().select("doc_id", "dl"),
+        cstats.snapshot().select("n_docs", "total_tokens"),
+        qt,
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "doc_id")
+    top = (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= 3)
+        .select("query_id", "rank", "doc_id", "n_terms_matched", "score")
+    )
+    # the maintained index and the full text recompute must agree
+    # ROW-IDENTICALLY (shared scoring tail; exact integer sums)
+    recompute = bm25_scores_relational(final, "doc_id", "text", qt)
+    same = (
+        scored.exceptAll(recompute).isEmpty()
+        and recompute.exceptAll(scored).isEmpty()
+    )
+    return (
+        top.withColumn("index_matches_recompute", F.lit(same))
+        .orderBy("query_id", "rank")
+    )
 
 
 def t101_bm25_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

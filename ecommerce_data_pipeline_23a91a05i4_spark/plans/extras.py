@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.exprs import dsum, mean2, quant, r2
 from ..operators.text import tokens
+from ._gate import Scratch, gate
 
 SALT_BUCKETS = 16
 
@@ -478,7 +479,10 @@ def t19_winnow_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def t64_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t64_jdbc_roundtrip(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Database interop end-to-end (reference S2, the PostgreSQL leg:
     ingest_to_staging.py loads tables into the database,
     staging_to_production.py:138-141 reads them back).  The gate runs
@@ -494,10 +498,6 @@ def t64_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is asserted (4 input partitions), so the gate also pins the
     scale posture: a silent fall-back to a single-connection read
     fails loudly."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.jdbc import (
         derby_url,
         partition_bounds,
@@ -509,47 +509,37 @@ def t64_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal"
     )
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    base = tempfile.mkdtemp(prefix=f"t64_{_uuid.uuid4().hex[:8]}_")
-    url = derby_url(base + "/db")
-    try:
-        write_jdbc(cust, url, "customer", mode="overwrite")
-        write_jdbc(nation, url, "nation", mode="overwrite")
-        lo, hi = partition_bounds(spark, url, "customer", "c_custkey")
-        c = read_jdbc(
-            spark,
-            url,
-            "customer",
-            partition_column="c_custkey",
-            lower_bound=lo,
-            upper_bound=hi,
-            num_partitions=4,
+    url = derby_url(scratch.dir + "/db")
+    write_jdbc(cust, url, "customer", mode="overwrite")
+    write_jdbc(nation, url, "nation", mode="overwrite")
+    lo, hi = partition_bounds(spark, url, "customer", "c_custkey")
+    c = read_jdbc(
+        spark,
+        url,
+        "customer",
+        partition_column="c_custkey",
+        lower_bound=lo,
+        upper_bound=hi,
+        num_partitions=4,
+    )
+    if c.rdd.getNumPartitions() != 4:
+        raise AssertionError(
+            "partitioned JDBC read did not yield 4 partitions"
         )
-        if c.rdd.getNumPartitions() != 4:
-            raise AssertionError(
-                "partitioned JDBC read did not yield 4 partitions"
-            )
-        n = read_jdbc(spark, url, "nation")
-        rows = (
-            c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-            .groupBy("n_name")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_customers"),
-                F.count_distinct("c_mktsegment")
-                .cast("long")
-                .alias("n_segments"),
-                F.min("c_acctbal").alias("min_acctbal"),
-                F.max("c_acctbal").alias("max_acctbal"),
-            )
-            .orderBy("n_name")
-            .collect()  # materialize BEFORE the database dir is removed
+    n = read_jdbc(spark, url, "nation")
+    return (
+        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("n_name")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_customers"),
+            F.count_distinct("c_mktsegment")
+            .cast("long")
+            .alias("n_segments"),
+            F.min("c_acctbal").alias("min_acctbal"),
+            F.max("c_acctbal").alias("max_acctbal"),
         )
-        return spark.createDataFrame(
-            rows,
-            "n_name string, n_customers long, n_segments long, "
-            "min_acctbal double, max_acctbal double",
-        ).orderBy("n_name")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .orderBy("n_name")
+    )
 
 
 def t67_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -66,6 +66,7 @@ from ..functions.exprs import dsum, money_sum, quant, r2
 from ..operators import dedup as dd
 from ..operators import similarity as sim
 from ..operators import text as tx
+from ._gate import Scratch, gate
 
 JACCARD_THRESHOLD = 0.3
 JACCARD_MAX_DOC_FREQ = 125  # 25% of the 500-doc corpus at sf0.01
@@ -1085,7 +1086,10 @@ def t52_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def t53_txtable_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t53_txtable_versions(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Transactional-table lifecycle as a driver-checked gate: a
     manifest-log table (sources/txtable.py) is created from the corpus
     snapshot, the delta batch is appended as a second atomic commit, and
@@ -1095,34 +1099,29 @@ def t53_txtable_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the two snapshots' stats from the raw table, so
     the driver independently proves versioned reads return exactly the
     pre- and post-append corpus."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix=f"t53_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        t.init(docs.filter(F.col("doc_id") % 5 != 0))
-        t.append(docs.filter(F.col("doc_id") % 5 == 0))
-        rows = []
-        for h in t.history():
-            snap = t.snapshot(version=h["version"])
-            stats = snap.agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.count_distinct("source").cast("long").alias("n_sources"),
-            ).collect()[0]
-            rows.append((h["version"], h["op"], stats.n_docs, stats.n_sources))
-        return spark.createDataFrame(
-            rows, "version long, op string, n_docs long, n_sources long"
-        ).orderBy("version")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs.filter(F.col("doc_id") % 5 != 0))
+    t.append(docs.filter(F.col("doc_id") % 5 == 0))
+    rows = []
+    for h in t.history():
+        snap = t.snapshot(version=h["version"])
+        stats = snap.agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.count_distinct("source").cast("long").alias("n_sources"),
+        ).collect()[0]
+        rows.append((h["version"], h["op"], stats.n_docs, stats.n_sources))
+    return spark.createDataFrame(
+        rows, "version long, op string, n_docs long, n_sources long"
+    ).orderBy("version")
 
 
-def t55_txtable_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t55_txtable_delete(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Row-level DELETE on the transactional table (takedown/GDPR,
     VERDICT r4 ask #3): a source-partitioned TxTable is created from the
     corpus, doc_id % 7 == 0 rows are deleted as ONE manifest commit
@@ -1134,34 +1133,26 @@ def t55_txtable_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (n_match > 0), v2 must have zero matches, and a third row
     would appear — failing the hash — if the no-op delete committed.
     The oracle recomputes both snapshots' stats from the raw table."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix=f"t55_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        t.init(docs, partition_by="source")
-        t.delete(F.col("doc_id") % 7 == 0)
-        t.delete(F.col("doc_id") < 0)  # matches nothing -> must be a no-op
-        rows = []
-        for h in t.history():
-            snap = t.snapshot(version=h["version"])
-            stats = snap.agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum(F.when(F.col("doc_id") % 7 == 0, 1).otherwise(0))
-                .cast("long")
-                .alias("n_match"),
-            ).collect()[0]
-            rows.append((h["version"], h["op"], stats.n_docs, stats.n_match))
-        return spark.createDataFrame(
-            rows, "version long, op string, n_docs long, n_match long"
-        ).orderBy("version")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs, partition_by="source")
+    t.delete(F.col("doc_id") % 7 == 0)
+    t.delete(F.col("doc_id") < 0)  # matches nothing -> must be a no-op
+    rows = []
+    for h in t.history():
+        snap = t.snapshot(version=h["version"])
+        stats = snap.agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(F.when(F.col("doc_id") % 7 == 0, 1).otherwise(0))
+            .cast("long")
+            .alias("n_match"),
+        ).collect()[0]
+        rows.append((h["version"], h["op"], stats.n_docs, stats.n_match))
+    return spark.createDataFrame(
+        rows, "version long, op string, n_docs long, n_match long"
+    ).orderBy("version")
 
 
 def t56_dedup_index_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1193,7 +1184,10 @@ def t56_dedup_index_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def t77_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t77_shallow_clone(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """SHALLOW CLONE of the transactional corpus (sources/txtable.
     TxTable.clone_shallow — Delta's CLONE verb): the clone's first
     manifest references the source's data files IN PLACE (zero bytes
@@ -1206,54 +1200,50 @@ def t77_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole table to change 1% of it.  The oracle recomputes both final
     states from raw documents: the source IS the corpus; the clone is
     the corpus minus the deleted band plus the derived batch."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    base = tempfile.mkdtemp(prefix=f"t77_{_uuid.uuid4().hex[:8]}_")
-    try:
-        src = TxTable(spark, base + "/src")
-        src.init(docs)
-        clone = src.clone_shallow(base + "/dst")
-        meta_only = not any(
-            not e.get("base") for e in clone.manifest(1)["files"]
-        )
-        clone.delete(F.col("doc_id") % 7 == 0)
-        extra = docs.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-            F.concat(F.lit("clone "), F.col("text")).alias("text"),
-            "lang",
-            F.lit("clone").alias("source"),
-            (F.col("n_chars") + 6).cast("long").alias("n_chars"),
-        )
-        clone.append(extra)
-        undisturbed = src.latest_version() == 1
-        rows = []
-        for name, t in (("clone", clone), ("src", src)):
-            st = t.snapshot().agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("doc_id").cast("long").alias("sid"),
-            ).collect()[0]
-            rows.append((name, st.n, st.sid))
-        return spark.createDataFrame(
-            rows, "tbl string, n_rows long, sum_doc_id long"
-        ).select(
-            "tbl",
-            "n_rows",
-            "sum_doc_id",
-            F.lit(meta_only).alias("clone_is_metadata_only"),
-            F.lit(undisturbed).alias("src_undisturbed"),
-        ).orderBy("tbl")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    base = scratch.dir
+    src = TxTable(spark, base + "/src")
+    src.init(docs)
+    clone = src.clone_shallow(base + "/dst")
+    meta_only = not any(
+        not e.get("base") for e in clone.manifest(1)["files"]
+    )
+    clone.delete(F.col("doc_id") % 7 == 0)
+    extra = docs.filter(F.col("doc_id") % 3 == 0).select(
+        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
+        F.concat(F.lit("clone "), F.col("text")).alias("text"),
+        "lang",
+        F.lit("clone").alias("source"),
+        (F.col("n_chars") + 6).cast("long").alias("n_chars"),
+    )
+    clone.append(extra)
+    undisturbed = src.latest_version() == 1
+    rows = []
+    for name, t in (("clone", clone), ("src", src)):
+        st = t.snapshot().agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("doc_id").cast("long").alias("sid"),
+        ).collect()[0]
+        rows.append((name, st.n, st.sid))
+    return spark.createDataFrame(
+        rows, "tbl string, n_rows long, sum_doc_id long"
+    ).select(
+        "tbl",
+        "n_rows",
+        "sum_doc_id",
+        F.lit(meta_only).alias("clone_is_metadata_only"),
+        F.lit(undisturbed).alias("src_undisturbed"),
+    ).orderBy("tbl")
 
 
-def t78_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t78_column_mapping(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Column RENAME + DROP via manifest column mapping (sources/
     txtable.TxTable.rename_column / drop_column — VERDICT r7 ask #3:
     the other half of the schema-evolution contract after t72's ADD).
@@ -1272,88 +1262,82 @@ def t78_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tt_len_sum`` reads the ORIGINAL bigint text_len back out of
     version 1.  The oracle replays the final state from raw
     documents."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents")
     did = F.col("doc_id")
-    base = tempfile.mkdtemp(prefix=f"t78_{_uuid.uuid4().hex[:8]}_")
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(
+        docs.filter(did % 2 == 0).select(
+            "doc_id",
+            "lang",
+            (did % 97).cast("double").alias("quality"),
+            F.length("text").cast("long").alias("text_len"),
+        )
+    )
+    t.rename_column("quality", "q_score")           # v2, O(1)
+    t.drop_column("text_len")                       # v3, O(1)
+    e1 = [e["path"] for e in t.manifest(1)["files"]]
+    untouched = (
+        e1 == [e["path"] for e in t.manifest(2)["files"]]
+        and e1 == [e["path"] for e in t.manifest(3)["files"]]
+    )
+    t.add_columns({"text_len": "string"})           # v4: new type
+    t.append(                                       # v5: evolved shape
+        docs.filter(did % 2 == 1).select(
+            "doc_id",
+            "lang",
+            (did % 97).cast("double").alias("q_score"),
+            F.when(F.length("text") >= 200, "long")
+            .otherwise("short")
+            .alias("text_len"),
+        )
+    )
+    t.delete(did % 21 == 0)                         # v6: DML across it
     try:
-        t = TxTable(spark, base + "/docs")
-        t.init(
-            docs.filter(did % 2 == 0).select(
-                "doc_id",
-                "lang",
-                (did % 97).cast("double").alias("quality"),
-                F.length("text").cast("long").alias("text_len"),
-            )
+        t.snapshot().select("quality").collect()
+        old_name_fails = False
+    except AnalysisException:
+        # the EXPECTED failure — the old column name is gone; any
+        # other exception class is an engine bug and must surface
+        # (VERDICT r11 next #8)
+        old_name_fails = True
+    tt_len_sum = (
+        t.snapshot(version=1)
+        .agg(F.sum("text_len").cast("long").alias("s"))
+        .collect()[0]
+        .s
+    )
+    rename_op = t.history()[1]["op"]
+    n_versions = len(t.versions())
+    return (
+        t.snapshot()
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(
+                F.when(F.col("text_len").isNull(), 1).otherwise(0)
+            ).cast("long").alias("n_null_tl"),
+            F.sum(
+                F.when(F.col("text_len") == "long", 1).otherwise(0)
+            ).cast("long").alias("n_long"),
+            F.sum(F.col("q_score").cast("long"))
+            .cast("long")
+            .alias("sum_q"),
         )
-        t.rename_column("quality", "q_score")           # v2, O(1)
-        t.drop_column("text_len")                       # v3, O(1)
-        e1 = [e["path"] for e in t.manifest(1)["files"]]
-        untouched = (
-            e1 == [e["path"] for e in t.manifest(2)["files"]]
-            and e1 == [e["path"] for e in t.manifest(3)["files"]]
-        )
-        t.add_columns({"text_len": "string"})           # v4: new type
-        t.append(                                       # v5: evolved shape
-            docs.filter(did % 2 == 1).select(
-                "doc_id",
-                "lang",
-                (did % 97).cast("double").alias("q_score"),
-                F.when(F.length("text") >= 200, "long")
-                .otherwise("short")
-                .alias("text_len"),
-            )
-        )
-        t.delete(did % 21 == 0)                         # v6: DML across it
-        try:
-            t.snapshot().select("quality").collect()
-            old_name_fails = False
-        except AnalysisException:
-            # the EXPECTED failure — the old column name is gone; any
-            # other exception class is an engine bug and must surface
-            # (VERDICT r11 next #8)
-            old_name_fails = True
-        tt_len_sum = (
-            t.snapshot(version=1)
-            .agg(F.sum("text_len").cast("long").alias("s"))
-            .collect()[0]
-            .s
-        )
-        rename_op = t.history()[1]["op"]
-        n_versions = len(t.versions())
-        out = (
-            t.snapshot()
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum(
-                    F.when(F.col("text_len").isNull(), 1).otherwise(0)
-                ).cast("long").alias("n_null_tl"),
-                F.sum(
-                    F.when(F.col("text_len") == "long", 1).otherwise(0)
-                ).cast("long").alias("n_long"),
-                F.sum(F.col("q_score").cast("long"))
-                .cast("long")
-                .alias("sum_q"),
-            )
-            .withColumn("files_untouched", F.lit(untouched))
-            .withColumn("old_name_fails", F.lit(old_name_fails))
-            .withColumn("rename_op", F.lit(rename_op))
-            .withColumn("n_versions", F.lit(n_versions).cast("long"))
-            .withColumn("tt_len_sum", F.lit(tt_len_sum).cast("long"))
-            .orderBy("lang")
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("files_untouched", F.lit(untouched))
+        .withColumn("old_name_fails", F.lit(old_name_fails))
+        .withColumn("rename_op", F.lit(rename_op))
+        .withColumn("n_versions", F.lit(n_versions).cast("long"))
+        .withColumn("tt_len_sum", F.lit(tt_len_sum).cast("long"))
+        .orderBy("lang")
+    )
 
 
-def t63_takedown_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t63_takedown_lifecycle(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """The FULL GDPR takedown path in one gate (VERDICT r5 ask #6 —
     t55 + t56 + vacuum composed end-to-end): the corpus lives in a
     transactional table with a persisted segment-frequency dedup store;
@@ -1370,52 +1354,46 @@ def t63_takedown_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pins the lifecycle facts: exactly one version remains after
     vacuum, the post-delete table holds exactly the survivors, and
     vacuum actually removed bytes."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
-    base = tempfile.mkdtemp(prefix=f"t63_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        v1 = t.init(corpus)
-        # the persisted dedup index, built from the live table
-        store = dd.segment_counts(
-            t.snapshot(), "doc_id", "text", seg_tokens=16
-        ).localCheckpoint(eager=True)
-        t.delete(F.col("doc_id") % 7 == 0)
-        # cascade: victim text comes from the pre-delete version (time
-        # travel), and the cascaded store MUST be materialized before
-        # vacuum destroys those bytes
-        deleted = t.snapshot(version=v1).filter(F.col("doc_id") % 7 == 0)
-        cascaded = dd.segment_counts_subtract(
-            store, deleted, "doc_id", "text", seg_tokens=16
-        ).localCheckpoint(eager=True)
-        removed = t.vacuum(keep_versions=1, min_age_seconds=0.0)
-        n_versions = len(t.versions())
-        n_post = t.snapshot().count()
-        out = (
-            dd.segment_dedup_incremental(
-                cascaded, delta, "doc_id", "text", seg_tokens=16, max_docs=1
-            )
-            .withColumnRenamed("id", "doc_id")
-            .withColumn(
-                "n_versions_after_vacuum", F.lit(n_versions).cast("long")
-            )
-            .withColumn("n_docs_post_delete", F.lit(n_post).cast("long"))
-            .withColumn("vacuum_removed_some", F.lit(len(removed) > 0))
-            .orderBy("doc_id")
+    t = TxTable(spark, scratch.dir + "/docs")
+    v1 = t.init(corpus)
+    # the persisted dedup index, built from the live table
+    store = dd.segment_counts(
+        t.snapshot(), "doc_id", "text", seg_tokens=16
+    ).localCheckpoint(eager=True)
+    t.delete(F.col("doc_id") % 7 == 0)
+    # cascade: victim text comes from the pre-delete version (time
+    # travel), and the cascaded store MUST be materialized before
+    # vacuum destroys those bytes
+    deleted = t.snapshot(version=v1).filter(F.col("doc_id") % 7 == 0)
+    cascaded = dd.segment_counts_subtract(
+        store, deleted, "doc_id", "text", seg_tokens=16
+    ).localCheckpoint(eager=True)
+    removed = t.vacuum(keep_versions=1, min_age_seconds=0.0)
+    n_versions = len(t.versions())
+    n_post = t.snapshot().count()
+    return (
+        dd.segment_dedup_incremental(
+            cascaded, delta, "doc_id", "text", seg_tokens=16, max_docs=1
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumnRenamed("id", "doc_id")
+        .withColumn(
+            "n_versions_after_vacuum", F.lit(n_versions).cast("long")
+        )
+        .withColumn("n_docs_post_delete", F.lit(n_post).cast("long"))
+        .withColumn("vacuum_removed_some", F.lit(len(removed) > 0))
+        .orderBy("doc_id")
+    )
 
 
-def t62_txtable_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t62_txtable_data_skipping(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Manifest-stats DATA SKIPPING on the transactional table (the
     per-file min/max design Delta/Iceberg use): the table is built with
     stats_col='n_chars' from three commits holding disjoint length
@@ -1428,40 +1406,34 @@ def t62_txtable_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     the counts at 1/3, so a green row proves both completeness (no row
     a skipped file should not have held is missing) and that skipping
     actually skipped."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents")
     n = F.col("n_chars")
-    base = tempfile.mkdtemp(prefix=f"t62_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs", stats_col="n_chars")
-        t.init(docs.filter(n < 128).coalesce(1))
-        t.append(docs.filter((n >= 128) & (n < 256)).coalesce(1))
-        t.append(docs.filter(n >= 256).coalesce(1))
-        scanned, total = t.prune_counts("n_chars", 130, 250)
-        snap = t.snapshot(prune=("n_chars", 130, 250)).filter(
-            n.between(130, 250)
+    t = TxTable(spark, scratch.dir + "/docs", stats_col="n_chars")
+    t.init(docs.filter(n < 128).coalesce(1))
+    t.append(docs.filter((n >= 128) & (n < 256)).coalesce(1))
+    t.append(docs.filter(n >= 256).coalesce(1))
+    scanned, total = t.prune_counts("n_chars", 130, 250)
+    snap = t.snapshot(prune=("n_chars", 130, 250)).filter(
+        n.between(130, 250)
+    )
+    return (
+        snap.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("sum_chars"),
         )
-        out = (
-            snap.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("sum_chars"),
-            )
-            .withColumn("files_scanned", F.lit(scanned).cast("long"))
-            .withColumn("files_total", F.lit(total).cast("long"))
-            .orderBy("source")
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("files_scanned", F.lit(scanned).cast("long"))
+        .withColumn("files_total", F.lit(total).cast("long"))
+        .orderBy("source")
+    )
 
 
-def t62b_txtable_multicol_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t62b_txtable_multicol_skipping(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """TWO-column manifest-stats data skipping (VERDICT r5 ask #7 —
     real tables skip on several columns): the table records per-file
     [min, max] for BOTH doc_id and n_chars in ONE stats pass
@@ -1476,48 +1448,42 @@ def t62b_txtable_multicol_skipping(spark: SparkSession, sf_dir: str) -> DataFram
     write) must not inflate files_total: stats-enabled staging drops
     row-less files from the manifest instead of carrying a permanently
     unprunable entry (ADVICE r5)."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents")
     n = F.col("n_chars")
     did = F.col("doc_id")
     half = docs.count() // 2
-    base = tempfile.mkdtemp(prefix=f"t62b_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs", stats_col=["doc_id", "n_chars"])
-        t.init(docs.filter((did < half) & (n < 192)).coalesce(1))
-        t.append(docs.filter((did < half) & (n >= 192)).coalesce(1))
-        t.append(docs.filter(did >= half).coalesce(1))
-        t.append(docs.filter(n < 0).coalesce(1))  # zero rows: dropped
-        both = [("doc_id", 0, half - 1), ("n_chars", 0, 127)]
-        s_both, total = t.prune_counts(both)
-        s_id, _ = t.prune_counts("doc_id", 0, half - 1)
-        s_chars, _ = t.prune_counts("n_chars", 0, 127)
-        snap = t.snapshot(prune=both).filter(
-            did.between(0, half - 1) & n.between(0, 127)
+    t = TxTable(spark, scratch.dir + "/docs", stats_col=["doc_id", "n_chars"])
+    t.init(docs.filter((did < half) & (n < 192)).coalesce(1))
+    t.append(docs.filter((did < half) & (n >= 192)).coalesce(1))
+    t.append(docs.filter(did >= half).coalesce(1))
+    t.append(docs.filter(n < 0).coalesce(1))  # zero rows: dropped
+    both = [("doc_id", 0, half - 1), ("n_chars", 0, 127)]
+    s_both, total = t.prune_counts(both)
+    s_id, _ = t.prune_counts("doc_id", 0, half - 1)
+    s_chars, _ = t.prune_counts("n_chars", 0, 127)
+    snap = t.snapshot(prune=both).filter(
+        did.between(0, half - 1) & n.between(0, 127)
+    )
+    return (
+        snap.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("sum_chars"),
         )
-        out = (
-            snap.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("sum_chars"),
-            )
-            .withColumn("files_scanned_both", F.lit(s_both).cast("long"))
-            .withColumn("files_scanned_id", F.lit(s_id).cast("long"))
-            .withColumn("files_scanned_chars", F.lit(s_chars).cast("long"))
-            .withColumn("files_total", F.lit(total).cast("long"))
-            .orderBy("source")
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("files_scanned_both", F.lit(s_both).cast("long"))
+        .withColumn("files_scanned_id", F.lit(s_id).cast("long"))
+        .withColumn("files_scanned_chars", F.lit(s_chars).cast("long"))
+        .withColumn("files_total", F.lit(total).cast("long"))
+        .orderBy("source")
+    )
 
 
-def t66_txtable_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t66_txtable_cdc_merge(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Keyed MERGE + latest-wins CDC apply on the transactional table
     (sources/txtable.TxTable.merge / apply_cdc — the DML verb that
     completes append/overwrite/delete; the reference's staging→
@@ -1535,10 +1501,6 @@ def t66_txtable_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts — exactly 2 versions, latest op 'merge', and all 3 untouched
     band files carried BY REFERENCE (the file-granular cost contract:
     O(hit files + batch), not O(table))."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable, apply_cdc
 
     docs = table(spark, sf_dir, "documents")
@@ -1591,40 +1553,38 @@ def t66_txtable_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).cast("long").alias("seq"),
     )
     changes = stale.unionAll(rev2).unionAll(dels).unionAll(inserts)
-    base = tempfile.mkdtemp(prefix=f"t66_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        t.init(corpus.repartition(1), partition_by="band")
-        apply_cdc(t, changes, "doc_id")
-        e1 = {e["path"] for e in t.manifest(1)["files"]}
-        e2 = {e["path"] for e in t.manifest(2)["files"]}
-        out = (
-            t.snapshot()
-            .groupBy("band")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("doc_id").cast("long").alias("sum_ids"),
-                F.sum(F.length("text")).cast("long").alias("sum_chars"),
-                F.sum("n_chars").cast("long").alias("sum_nchars"),
-                F.sum(
-                    F.when(F.col("text").endswith(" [rev2]"), 1).otherwise(0)
-                ).cast("long").alias("n_rev2"),
-            )
-            .withColumn(
-                "n_versions", F.lit(len(t.versions())).cast("long")
-            )
-            .withColumn("latest_op", F.lit(t.history()[-1]["op"]))
-            .withColumn(
-                "n_files_carried", F.lit(len(e1 & e2)).cast("long")
-            )
-            .orderBy("band")
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(corpus.repartition(1), partition_by="band")
+    apply_cdc(t, changes, "doc_id")
+    e1 = {e["path"] for e in t.manifest(1)["files"]}
+    e2 = {e["path"] for e in t.manifest(2)["files"]}
+    return (
+        t.snapshot()
+        .groupBy("band")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("sum_ids"),
+            F.sum(F.length("text")).cast("long").alias("sum_chars"),
+            F.sum("n_chars").cast("long").alias("sum_nchars"),
+            F.sum(
+                F.when(F.col("text").endswith(" [rev2]"), 1).otherwise(0)
+            ).cast("long").alias("n_rev2"),
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn(
+            "n_versions", F.lit(len(t.versions())).cast("long")
+        )
+        .withColumn("latest_op", F.lit(t.history()[-1]["op"]))
+        .withColumn(
+            "n_files_carried", F.lit(len(e1 & e2)).cast("long")
+        )
+        .orderBy("band")
+    )
 
 
-def t68_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t68_incremental_matview(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Incremental materialized-view maintenance over the manifest log
     (sources/matview.py): a revenue-per-priority aggregate is built
     once, then advanced through an append, a row-level DELETE, and a
@@ -1638,10 +1598,6 @@ def t68_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raw orders (append ∪ init, minus deletes, with the merge's
     doubled prices).  mv_versions pins that each of the three
     refreshes committed exactly one MV version."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources import matview as mvx
     from ..sources.txtable import TxTable
 
@@ -1649,48 +1605,43 @@ def t68_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("o_orderkey")
     g = ["o_orderpriority"]
     measures = {"revenue": "o_totalprice", "n_orders": "1"}
-    root = tempfile.mkdtemp(prefix=f"t68_{_uuid.uuid4().hex[:8]}_")
-    try:
-        base = TxTable(spark, root + "/base")
-        mv = TxTable(spark, root + "/mv")
-        v1 = base.init(orders.filter(k % 3 != 0).repartition(4))
-        mvx.mv_init(mv, base.snapshot(), g, measures)
-        v2 = base.append(orders.filter(k % 3 == 0))
-        mvx.mv_refresh(mv, base, g, measures, v1, v2)
-        v3 = base.delete(k % 7 == 0)
-        mvx.mv_refresh(mv, base, g, measures, v2, v3)
-        src = orders.filter((k % 11 == 0) & (k % 7 != 0)).withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
+    base = TxTable(spark, scratch.dir + "/base")
+    mv = TxTable(spark, scratch.dir + "/mv")
+    v1 = base.init(orders.filter(k % 3 != 0).repartition(4))
+    mvx.mv_init(mv, base.snapshot(), g, measures)
+    v2 = base.append(orders.filter(k % 3 == 0))
+    mvx.mv_refresh(mv, base, g, measures, v1, v2)
+    v3 = base.delete(k % 7 == 0)
+    mvx.mv_refresh(mv, base, g, measures, v2, v3)
+    src = orders.filter((k % 11 == 0) & (k % 7 != 0)).withColumn(
+        "o_totalprice", F.col("o_totalprice") * 2
+    )
+    v4 = base.merge(src, "o_orderkey")
+    mvx.mv_refresh(mv, base, g, measures, v3, v4)
+    rc = mvx.mv_aggregate(base.snapshot(), g, measures)
+    for c in ("revenue", "n_orders", "n_rows"):
+        rc = rc.withColumnRenamed(c, f"rc_{c}")
+    return (
+        mv.snapshot()
+        .join(rc, on=g, how="full")
+        .select(
+            "o_orderpriority",
+            # decimal state, double at the boundary (repo-wide
+            # convention: checked outputs are double/int — one
+            # exact decimal->double cast per engine)
+            F.col("revenue").cast("double").alias("revenue"),
+            F.col("n_orders").cast("long").alias("n_orders"),
+            (
+                (F.col("revenue") == F.col("rc_revenue"))
+                & (F.col("n_orders") == F.col("rc_n_orders"))
+                & (F.col("n_rows") == F.col("rc_n_rows"))
+            ).alias("incremental_exact"),
         )
-        v4 = base.merge(src, "o_orderkey")
-        mvx.mv_refresh(mv, base, g, measures, v3, v4)
-        rc = mvx.mv_aggregate(base.snapshot(), g, measures)
-        for c in ("revenue", "n_orders", "n_rows"):
-            rc = rc.withColumnRenamed(c, f"rc_{c}")
-        out = (
-            mv.snapshot()
-            .join(rc, on=g, how="full")
-            .select(
-                "o_orderpriority",
-                # decimal state, double at the boundary (repo-wide
-                # convention: checked outputs are double/int — one
-                # exact decimal->double cast per engine)
-                F.col("revenue").cast("double").alias("revenue"),
-                F.col("n_orders").cast("long").alias("n_orders"),
-                (
-                    (F.col("revenue") == F.col("rc_revenue"))
-                    & (F.col("n_orders") == F.col("rc_n_orders"))
-                    & (F.col("n_rows") == F.col("rc_n_rows"))
-                ).alias("incremental_exact"),
-            )
-            .withColumn(
-                "mv_versions", F.lit(len(mv.versions())).cast("long")
-            )
-            .orderBy("o_orderpriority")
+        .withColumn(
+            "mv_versions", F.lit(len(mv.versions())).cast("long")
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("o_orderpriority")
+    )
 
 
 def t70_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1888,7 +1839,10 @@ def t79_grouped_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def t83_commit_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t83_commit_invariants(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Commit-time table invariants (TxTable.add_check_constraint /
     add_not_null — VERDICT r8 ask #5): the reference's production DDL
     is constraint-heavy (sql/ddl/create_production_schema.sql:35-88 —
@@ -1908,97 +1862,85 @@ def t83_commit_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-verb enforcement breadth (overwrite / apply_cdc / streaming
     sink / clone) is pinned in tests/test_txtable.py."""
     import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
     from ..sources.txtable import TxTable
 
-    base = tempfile.mkdtemp(prefix=f"t83_{_uuid.uuid4().hex[:8]}_")
-    try:
-        docs = spark.read.parquet(
-            os.path.join(sf_dir, "documents.parquet")
-        ).select("doc_id", "source", "n_chars")
-        band = F.col("doc_id") % 4
-        t = TxTable(spark, base + "/docs")
-        t.init(docs.filter(band == 0))
-        t.add_check_constraint("n_chars_nonneg", "n_chars >= 0")
-        t.add_not_null("source")
-        t.append(docs.filter(band == 1))
-        v = t.latest_version()
+    docs = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id", "source", "n_chars")
+    band = F.col("doc_id") % 4
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs.filter(band == 0))
+    t.add_check_constraint("n_chars_nonneg", "n_chars >= 0")
+    t.add_not_null("source")
+    t.append(docs.filter(band == 1))
+    v = t.latest_version()
 
-        def rejected(df) -> bool:
-            try:
-                t.append(df)
-                return False
-            except PySparkException:
-                # the constraint guard raises IN the write plan
-                # (raise_error -> SparkRuntimeException); a Python-side
-                # exception class would be an engine bug and must
-                # surface (VERDICT r11 next #8)
-                return True
-
-        violation_rejected = rejected(
-            docs.filter(band == 2).withColumn(
-                "n_chars", -F.col("n_chars") - 1
-            )
-        )
-        null_rejected = rejected(
-            docs.filter(band == 2).withColumn(
-                "source", F.lit(None).cast("string")
-            )
-        )
-        merge_rejected = True
+    def rejected(df) -> bool:
         try:
-            t.merge(
-                # cast matters: a bare int literal would fail the
-                # SCHEMA check (ValueError) before the CHECK guard
-                # ever ran — the exact wrong-reason pass the pinned
-                # except class exposed (VERDICT r11 next #8)
-                docs.filter(band == 3).withColumn(
-                    "n_chars", F.lit(-5).cast("long")
-                ),
-                on="doc_id",
-            )
-            merge_rejected = False
+            t.append(df)
+            return False
         except PySparkException:
-            # expected: the CHECK guard fires inside the merge's write
-            # plan; anything else re-raises (VERDICT r11 next #8 — a
-            # bare except here would downgrade an engine bug to a
-            # hash mismatch)
-            pass
-        log_intact = t.latest_version() == v
-        t.merge(docs.filter(band == 2), on="doc_id")  # clean upsert
+            # the constraint guard raises IN the write plan
+            # (raise_error -> SparkRuntimeException); a Python-side
+            # exception class would be an engine bug and must
+            # surface (VERDICT r11 next #8)
+            return True
 
-        rows = (
-            t.snapshot()
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("sum_n_chars"),
-            )
-            .orderBy("source")
-            .collect()
+    violation_rejected = rejected(
+        docs.filter(band == 2).withColumn(
+            "n_chars", -F.col("n_chars") - 1
         )
-        return (
-            spark.createDataFrame(
-                [tuple(r) for r in rows],
-                "source string, n_docs long, sum_n_chars long",
-            )
-            .select(
-                "*",
-                F.lit(violation_rejected).alias("violation_rejected"),
-                F.lit(null_rejected).alias("null_rejected"),
-                F.lit(merge_rejected).alias("merge_rejected"),
-                F.lit(log_intact).alias("log_intact"),
-            )
-            .orderBy("source")
+    )
+    null_rejected = rejected(
+        docs.filter(band == 2).withColumn(
+            "source", F.lit(None).cast("string")
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    )
+    merge_rejected = True
+    try:
+        t.merge(
+            # cast matters: a bare int literal would fail the
+            # SCHEMA check (ValueError) before the CHECK guard
+            # ever ran — the exact wrong-reason pass the pinned
+            # except class exposed (VERDICT r11 next #8)
+            docs.filter(band == 3).withColumn(
+                "n_chars", F.lit(-5).cast("long")
+            ),
+            on="doc_id",
+        )
+        merge_rejected = False
+    except PySparkException:
+        # expected: the CHECK guard fires inside the merge's write
+        # plan; anything else re-raises (VERDICT r11 next #8 — a
+        # bare except here would downgrade an engine bug to a
+        # hash mismatch)
+        pass
+    log_intact = t.latest_version() == v
+    t.merge(docs.filter(band == 2), on="doc_id")  # clean upsert
+
+    return (
+        t.snapshot()
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("sum_n_chars"),
+        )
+        .select(
+            "*",
+            F.lit(violation_rejected).alias("violation_rejected"),
+            F.lit(null_rejected).alias("null_rejected"),
+            F.lit(merge_rejected).alias("merge_rejected"),
+            F.lit(log_intact).alias("log_intact"),
+        )
+        .orderBy("source")
+    )
 
 
-def t81_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t81_type_widening(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Metadata-only TYPE WIDENING on the transactional table
     (sources/txtable.TxTable.widen_column — the third schema-evolution
     verb after t72's ADD and t78's RENAME/DROP, completing the
@@ -2016,70 +1958,61 @@ def t81_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the double cast so the decimal-exact sum stays tie-free in
     both engines (the t65 float32 discipline).  The oracle rebuilds
     the final state from raw lineitem."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..functions.exprs import dsum
     from ..sources.txtable import TxTable
 
     li = table(spark, sf_dir, "lineitem")
     ok = F.col("l_orderkey")
-    base = tempfile.mkdtemp(prefix=f"t81_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/li")
-        t.init(
-            li.filter(ok % 2 == 0).select(
-                ok.cast("int").alias("key"),
-                F.col("l_quantity").cast("smallint").alias("qty"),
-                F.col("l_extendedprice").cast("float").alias("price"),
-                F.col("l_returnflag").alias("flag"),
-            )
+    t = TxTable(spark, scratch.dir + "/li")
+    t.init(
+        li.filter(ok % 2 == 0).select(
+            ok.cast("int").alias("key"),
+            F.col("l_quantity").cast("smallint").alias("qty"),
+            F.col("l_extendedprice").cast("float").alias("price"),
+            F.col("l_returnflag").alias("flag"),
         )
-        t.widen_column("key", "bigint")                 # v2, O(1)
-        t.widen_column("qty", "int")                    # v3, O(1)
-        t.widen_column("price", "double")               # v4, O(1)
-        e1 = t.manifest(1)["files"]  # FULL entries: paths + stats + part
-        untouched = all(
-            e1 == t.manifest(v)["files"] for v in (2, 3, 4)
+    )
+    t.widen_column("key", "bigint")                 # v2, O(1)
+    t.widen_column("qty", "int")                    # v3, O(1)
+    t.widen_column("price", "double")               # v4, O(1)
+    e1 = t.manifest(1)["files"]  # FULL entries: paths + stats + part
+    untouched = all(
+        e1 == t.manifest(v)["files"] for v in (2, 3, 4)
+    )
+    tt_qty_type = dict(t.snapshot(version=1).dtypes)["qty"]
+    tt_n = t.snapshot(version=1).count()
+    t.append(                                       # v5: needs width
+        li.filter(ok % 2 == 1).select(
+            (ok + F.lit(10_000_000_000)).alias("key"),
+            (F.col("l_quantity") + 100_000).cast("int").alias("qty"),
+            F.col("l_extendedprice")
+            .cast("float")
+            .cast("double")
+            .alias("price"),
+            F.col("l_returnflag").alias("flag"),
         )
-        tt_qty_type = dict(t.snapshot(version=1).dtypes)["qty"]
-        tt_n = t.snapshot(version=1).count()
-        t.append(                                       # v5: needs width
-            li.filter(ok % 2 == 1).select(
-                (ok + F.lit(10_000_000_000)).alias("key"),
-                (F.col("l_quantity") + 100_000).cast("int").alias("qty"),
-                F.col("l_extendedprice")
-                .cast("float")
-                .cast("double")
-                .alias("price"),
-                F.col("l_returnflag").alias("flag"),
-            )
+    )
+    t.delete(F.col("key") % 7 == 0)                 # v6: mixed footers
+    return (
+        t.snapshot()
+        .groupBy("flag")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum("qty").cast("long").alias("sum_qty"),
+            F.sum("key").cast("long").alias("sum_key"),
+            dsum(F.col("price"), "decimal(28,12)")
+            .cast("double")
+            .alias("sum_price"),
         )
-        t.delete(F.col("key") % 7 == 0)                 # v6: mixed footers
-        out = (
-            t.snapshot()
-            .groupBy("flag")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("qty").cast("long").alias("sum_qty"),
-                F.sum("key").cast("long").alias("sum_key"),
-                dsum(F.col("price"), "decimal(28,12)")
-                .cast("double")
-                .alias("sum_price"),
-            )
-            .withColumn("files_untouched", F.lit(untouched))
-            .withColumn("widen_op", F.lit(t.history()[2]["op"]))
-            .withColumn(
-                "n_versions", F.lit(len(t.versions())).cast("long")
-            )
-            .withColumn("tt_qty_type", F.lit(tt_qty_type))
-            .withColumn("tt_n", F.lit(tt_n).cast("long"))
-            .orderBy("flag")
+        .withColumn("files_untouched", F.lit(untouched))
+        .withColumn("widen_op", F.lit(t.history()[2]["op"]))
+        .withColumn(
+            "n_versions", F.lit(len(t.versions())).cast("long")
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("tt_qty_type", F.lit(tt_qty_type))
+        .withColumn("tt_n", F.lit(tt_n).cast("long"))
+        .orderBy("flag")
+    )
 
 
 # t80 gate geometry — shared with the oracle builder (oracles._t80_oracle)
@@ -2186,7 +2119,10 @@ def t82_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def t73_zordered_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t73_zordered_compaction(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Z-ordered compaction INSIDE the transactional table
     (TxTable.compact(zorder_by=...) → operators/zorder.zorder_frame —
     VERDICT r6 ask #6: the repo had the layout primitive and the
@@ -2201,10 +2137,6 @@ def t73_zordered_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-priority aggregate is recomputed by the oracle from raw orders.
     time-travel intact: the pre-compact version remains readable
     (n_versions = 2)."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     orders = table(spark, sf_dir, "orders")
@@ -2213,45 +2145,43 @@ def t73_zordered_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("o_orderkey", 0, kmax // 4),
         ("o_totalprice", 0.0, 100000.0),
     ]
-    base = tempfile.mkdtemp(prefix=f"t73_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(
-            spark,
-            base + "/orders",
-            stats_col=["o_orderkey", "o_totalprice"],
+    t = TxTable(
+        spark,
+        scratch.dir + "/orders",
+        stats_col=["o_orderkey", "o_totalprice"],
+    )
+    t.init(orders.repartition(8))
+    s_before, total_before = t.prune_counts(conds)
+    t.compact(8, zorder_by=["o_orderkey", "o_totalprice"])
+    s_after, total_after = t.prune_counts(conds)
+    snap = t.snapshot(prune=conds).filter(
+        F.col("o_orderkey").between(0, kmax // 4)
+        & F.col("o_totalprice").between(0.0, 100000.0)
+    )
+    return (
+        snap.groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            money_sum(F.col("o_totalprice")).alias("revenue"),
         )
-        t.init(orders.repartition(8))
-        s_before, total_before = t.prune_counts(conds)
-        t.compact(8, zorder_by=["o_orderkey", "o_totalprice"])
-        s_after, total_after = t.prune_counts(conds)
-        snap = t.snapshot(prune=conds).filter(
-            F.col("o_orderkey").between(0, kmax // 4)
-            & F.col("o_totalprice").between(0.0, 100000.0)
+        .withColumn(
+            "files_scanned_before", F.lit(s_before).cast("long")
         )
-        out = (
-            snap.groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_orders"),
-                money_sum(F.col("o_totalprice")).alias("revenue"),
-            )
-            .withColumn(
-                "files_scanned_before", F.lit(s_before).cast("long")
-            )
-            .withColumn("files_total", F.lit(total_before).cast("long"))
-            .withColumn(
-                "pruning_improved", F.lit(s_after < s_before)
-            )
-            .withColumn(
-                "n_versions", F.lit(len(t.versions())).cast("long")
-            )
-            .orderBy("o_orderpriority")
+        .withColumn("files_total", F.lit(total_before).cast("long"))
+        .withColumn(
+            "pruning_improved", F.lit(s_after < s_before)
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn(
+            "n_versions", F.lit(len(t.versions())).cast("long")
+        )
+        .orderBy("o_orderpriority")
+    )
 
 
-def t72_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t72_schema_evolution(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Metadata-only ADD COLUMN on the transactional table
     (sources/txtable.TxTable.add_columns — the O(1) schema evolution a
     100 TB table demands: the commit rewrites NOTHING, and rows
@@ -2264,46 +2194,37 @@ def t72_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     version carries byte-identical file entries (files_untouched),
     three versions, op 'add_columns'.  The oracle rebuilds the final
     table relationally from raw documents."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents")
     did = F.col("doc_id")
-    base = tempfile.mkdtemp(prefix=f"t72_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        t.init(docs.filter(did % 2 == 0))
-        t.add_columns({"quality": "double"})
-        e1 = [e["path"] for e in t.manifest(1)["files"]]
-        e2 = [e["path"] for e in t.manifest(2)["files"]]
-        t.append(
-            docs.filter(did % 2 == 1).withColumn(
-                "quality", (did % 97).cast("double")
-            )
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs.filter(did % 2 == 0))
+    t.add_columns({"quality": "double"})
+    e1 = [e["path"] for e in t.manifest(1)["files"]]
+    e2 = [e["path"] for e in t.manifest(2)["files"]]
+    t.append(
+        docs.filter(did % 2 == 1).withColumn(
+            "quality", (did % 97).cast("double")
         )
-        out = (
-            t.snapshot()
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum(
-                    F.when(F.col("quality").isNull(), 1).otherwise(0)
-                ).cast("long").alias("n_null_quality"),
-                F.coalesce(F.sum("quality"), F.lit(0.0))
-                .cast("long")
-                .alias("sum_quality"),
-            )
-            .withColumn("files_untouched", F.lit(e1 == e2))
-            .withColumn("n_versions", F.lit(len(t.versions())).cast("long"))
-            .withColumn("evolution_op", F.lit(t.history()[1]["op"]))
-            .orderBy("lang")
+    )
+    return (
+        t.snapshot()
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(
+                F.when(F.col("quality").isNull(), 1).otherwise(0)
+            ).cast("long").alias("n_null_quality"),
+            F.coalesce(F.sum("quality"), F.lit(0.0))
+            .cast("long")
+            .alias("sum_quality"),
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("files_untouched", F.lit(e1 == e2))
+        .withColumn("n_versions", F.lit(len(t.versions())).cast("long"))
+        .withColumn("evolution_op", F.lit(t.history()[1]["op"]))
+        .orderBy("lang")
+    )
 
 
 def t54_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2483,7 +2404,10 @@ def t54b_duplicate_spans_prescreened(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-def t85_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t85_deletion_vectors(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """DELETE via deletion vectors (TxTable.delete_dv — merge-on-read
     DML, the 100-TB shape: a takedown of scattered rows must not
     rewrite the gigabyte files that contain them).  The corpus inits
@@ -2496,73 +2420,68 @@ def t85_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus.  Vector growth/fold, full-file drops, restore direction,
     clone ownership, vacuum liveness, and the streaming feed are
     pinned in tests/test_txtable.py and tests/test_txstream.py."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources import matview as mvx
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    base = tempfile.mkdtemp(prefix=f"t85_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        t.init(docs.coalesce(4))
-        paths0 = {e["path"] for e in t.manifest()["files"]}
-        t.delete_dv((F.col("doc_id") % 7) == 0)
-        t.delete_dv((F.col("doc_id") % 11) == 0)
-        for v in (2, 3):
-            if {e["path"] for e in t.manifest(v)["files"]} != paths0:
-                raise AssertionError(
-                    "delete_dv rewrote or dropped a data file; the "
-                    "merge-on-read contract requires the file set to "
-                    "be unchanged here"
-                )
-        rows = []
-        for h in t.history():
-            v = h["version"]
-            stats = (
-                t.snapshot(v)
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_docs"),
-                    F.sum(
-                        ((F.col("doc_id") % 7) == 0).cast("long")
-                    ).cast("long").alias("n_match7"),
-                    F.sum(
-                        ((F.col("doc_id") % 11) == 0).cast("long")
-                    ).cast("long").alias("n_match11"),
-                )
-                .collect()[0]
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs.coalesce(4))
+    paths0 = {e["path"] for e in t.manifest()["files"]}
+    t.delete_dv((F.col("doc_id") % 7) == 0)
+    t.delete_dv((F.col("doc_id") % 11) == 0)
+    for v in (2, 3):
+        if {e["path"] for e in t.manifest(v)["files"]} != paths0:
+            raise AssertionError(
+                "delete_dv rewrote or dropped a data file; the "
+                "merge-on-read contract requires the file set to "
+                "be unchanged here"
             )
-            cdf_deletes = (
-                0
-                if v == 1
-                else mvx.table_changes(t, v - 1, v)
-                .filter(F.col("_change_type") == "delete")
-                .count()
+    rows = []
+    for h in t.history():
+        v = h["version"]
+        stats = (
+            t.snapshot(v)
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum(
+                    ((F.col("doc_id") % 7) == 0).cast("long")
+                ).cast("long").alias("n_match7"),
+                F.sum(
+                    ((F.col("doc_id") % 11) == 0).cast("long")
+                ).cast("long").alias("n_match11"),
             )
-            rows.append(
-                (
-                    v,
-                    h["op"],
-                    stats.n_docs,
-                    stats.n_match7,
-                    stats.n_match11,
-                    cdf_deletes,
-                )
+            .collect()[0]
+        )
+        cdf_deletes = (
+            0
+            if v == 1
+            else mvx.table_changes(t, v - 1, v)
+            .filter(F.col("_change_type") == "delete")
+            .count()
+        )
+        rows.append(
+            (
+                v,
+                h["op"],
+                stats.n_docs,
+                stats.n_match7,
+                stats.n_match11,
+                cdf_deletes,
             )
-        return spark.createDataFrame(
-            rows,
-            "version long, op string, n_docs long, n_match7 long, "
-            "n_match11 long, cdf_deletes long",
-        ).orderBy("version")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        )
+    return spark.createDataFrame(
+        rows,
+        "version long, op string, n_docs long, n_match7 long, "
+        "n_match11 long, cdf_deletes long",
+    ).orderBy("version")
 
 
-def t87_optimize_small(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t87_optimize_small(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Small-file OPTIMIZE (TxTable.optimize_small): the nightly
     lakehouse maintenance verb compact() is too blunt for — bin-pack
     ONLY the small-file debt, carry adequately-sized files by
@@ -2577,10 +2496,6 @@ def t87_optimize_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     'optimize', and the version count is exactly init+3 appends+
     delete_dv+optimize = 6.  The final per-source stats are recomputed
     by the oracle from the raw corpus minus the vectored band."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     # carry the text payload so file sizes are data-proportional (with
@@ -2590,45 +2505,43 @@ def t87_optimize_small(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text"
     )
     band = F.col("doc_id") % 5
-    base = tempfile.mkdtemp(prefix=f"t87_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        t.init(docs.filter(band.isin(0, 4)).coalesce(1))
-        big_path = t.manifest()["files"][0]["path"]
-        big_size = t.fs.size(t._abs(t.manifest()["files"][0]))
-        for b in (1, 2, 3):
-            t.append(docs.filter(band == b).coalesce(1))
-        t.delete_dv(((F.col("doc_id") % 5) == 2) & ((F.col("doc_id") % 9) == 0))
-        files_before = len(t.manifest()["files"])
-        t.optimize_small(target_bytes=big_size)
-        m = t.manifest()
-        big_carried = big_path in {e["path"] for e in m["files"]}
-        files_reduced = len(m["files"]) < files_before
-        vector_materialized = all(not e.get("dv") for e in m["files"])
-        out = (
-            t.snapshot()
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-            )
-            .withColumn("big_file_carried", F.lit(big_carried))
-            .withColumn("files_reduced", F.lit(files_reduced))
-            .withColumn(
-                "vector_materialized", F.lit(vector_materialized)
-            )
-            .withColumn("last_op", F.lit(m["op"]))
-            .withColumn(
-                "n_versions", F.lit(len(t.versions())).cast("long")
-            )
-            .orderBy("source")
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs.filter(band.isin(0, 4)).coalesce(1))
+    big_path = t.manifest()["files"][0]["path"]
+    big_size = t.fs.size(t._abs(t.manifest()["files"][0]))
+    for b in (1, 2, 3):
+        t.append(docs.filter(band == b).coalesce(1))
+    t.delete_dv(((F.col("doc_id") % 5) == 2) & ((F.col("doc_id") % 9) == 0))
+    files_before = len(t.manifest()["files"])
+    t.optimize_small(target_bytes=big_size)
+    m = t.manifest()
+    big_carried = big_path in {e["path"] for e in m["files"]}
+    files_reduced = len(m["files"]) < files_before
+    vector_materialized = all(not e.get("dv") for e in m["files"])
+    return (
+        t.snapshot()
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("big_file_carried", F.lit(big_carried))
+        .withColumn("files_reduced", F.lit(files_reduced))
+        .withColumn(
+            "vector_materialized", F.lit(vector_materialized)
+        )
+        .withColumn("last_op", F.lit(m["op"]))
+        .withColumn(
+            "n_versions", F.lit(len(t.versions())).cast("long")
+        )
+        .orderBy("source")
+    )
 
 
-def t89_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t89_bloom_point_lookup(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Per-file BLOOM INDEX point lookup (TxTable bloom_col — Delta's
     bloom filter index re-expressed as inline manifest metadata): the
     corpus lands hash-scattered across 8 files, so every file's
@@ -2641,10 +2554,6 @@ def t89_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes below the total too.  The probed row itself is recomputed
     by the oracle; bloom pruning is a file-set reduction, so the
     result is exact regardless of false positives."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents").select(
@@ -2660,37 +2569,35 @@ def t89_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("doc_id"))
         .first()[0]
     )
-    base = tempfile.mkdtemp(prefix=f"t89_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(
-            spark,
-            base + "/docs",
-            stats_col="doc_id",
-            bloom_col="doc_id",
+    t = TxTable(
+        spark,
+        scratch.dir + "/docs",
+        stats_col="doc_id",
+        bloom_col="doc_id",
+    )
+    t.init(docs.repartition(8))
+    s_range, total = t.prune_counts_eq(
+        [("doc_id", probe)], bloom=False
+    )
+    s_bloom, _ = t.prune_counts_eq([("doc_id", probe)])
+    s_absent, _ = t.prune_counts_eq([("doc_id", probe + 987654321)])
+    return (
+        t.snapshot(prune_eq=[("doc_id", probe)])
+        .filter(F.col("doc_id") == probe)
+        .select("doc_id", "source", "n_chars")
+        .withColumn(
+            "files_scanned_range", F.lit(s_range).cast("long")
         )
-        t.init(docs.repartition(8))
-        s_range, total = t.prune_counts_eq(
-            [("doc_id", probe)], bloom=False
-        )
-        s_bloom, _ = t.prune_counts_eq([("doc_id", probe)])
-        s_absent, _ = t.prune_counts_eq([("doc_id", probe + 987654321)])
-        out = (
-            t.snapshot(prune_eq=[("doc_id", probe)])
-            .filter(F.col("doc_id") == probe)
-            .select("doc_id", "source", "n_chars")
-            .withColumn(
-                "files_scanned_range", F.lit(s_range).cast("long")
-            )
-            .withColumn("files_total", F.lit(total).cast("long"))
-            .withColumn("bloom_pruned_fewer", F.lit(s_bloom < s_range))
-            .withColumn("absent_pruned", F.lit(s_absent < total))
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("files_total", F.lit(total).cast("long"))
+        .withColumn("bloom_pruned_fewer", F.lit(s_bloom < s_range))
+        .withColumn("absent_pruned", F.lit(s_absent < total))
+    )
 
 
-def t90_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t90_analyze_stats(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """ANALYZE TABLE statistics (TxTable.analyze): row count, per-column
     null counts, min/max, and HLL-approximate NDV land in the manifest
     as a metadata-only commit and ride every later commit forward with
@@ -2701,44 +2608,39 @@ def t90_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes every number from the raw table — nulls/min/max
     exactly, the NDV by replaying the whole register pipeline in SQL
     (the t67 discipline)."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_shipdate")
-    base = tempfile.mkdtemp(prefix=f"t90_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/li")
-        t.init(li)
-        t.analyze(columns=["l_partkey", "l_shipdate"], p=4, hash="md5")
-        t.append(li.withColumn("l_partkey", F.col("l_partkey") + 10_000_000))
-        st = t.table_stats()
-        rows = [
-            (
-                c,
-                st["n_rows"],
-                cs["nulls"],
-                float(cs["ndv"]),
-                cs["min"],
-                cs["max"],
-                st["computed_at"],
-                t.latest_version(),
-            )
-            for c, cs in sorted(st["columns"].items())
-        ]
-        return spark.createDataFrame(
-            rows,
-            "col_name string, n_rows long, n_nulls long, ndv double, "
-            "min_val string, max_val string, computed_at long, "
-            "head_version long",
-        ).orderBy("col_name")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    t = TxTable(spark, scratch.dir + "/li")
+    t.init(li)
+    t.analyze(columns=["l_partkey", "l_shipdate"], p=4, hash="md5")
+    t.append(li.withColumn("l_partkey", F.col("l_partkey") + 10_000_000))
+    st = t.table_stats()
+    rows = [
+        (
+            c,
+            st["n_rows"],
+            cs["nulls"],
+            float(cs["ndv"]),
+            cs["min"],
+            cs["max"],
+            st["computed_at"],
+            t.latest_version(),
+        )
+        for c, cs in sorted(st["columns"].items())
+    ]
+    return spark.createDataFrame(
+        rows,
+        "col_name string, n_rows long, n_nulls long, ndv double, "
+        "min_val string, max_val string, computed_at long, "
+        "head_version long",
+    ).orderBy("col_name")
 
 
-def t91_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t91_generated_columns(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """GENERATED COLUMNS (TxTable init(generated=...) — Delta's
     ``GENERATED ALWAYS AS``), in their canonical role: time-partitioning
     a fact table by a derived key.  The events table is declared with
@@ -2749,57 +2651,51 @@ def t91_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate also pins that every manifest entry's partition value is a
     real yyyy-MM token.  Per-month stats are recomputed by the oracle
     from raw events with the strftime twin."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    base = tempfile.mkdtemp(prefix=f"t91_{_uuid.uuid4().hex[:8]}_")
+    t = TxTable(spark, scratch.dir + "/events")
+    t.init(
+        ev.filter(F.col("event_id") % 2 == 0),
+        partition_by="event_month",
+        generated={"event_month": "date_format(ts, 'yyyy-MM')"},
+    )
+    t.append(ev.filter(F.col("event_id") % 2 == 1))
+    bad_rejected = False
     try:
-        t = TxTable(spark, base + "/events")
-        t.init(
-            ev.filter(F.col("event_id") % 2 == 0),
-            partition_by="event_month",
-            generated={"event_month": "date_format(ts, 'yyyy-MM')"},
+        t.append(
+            ev.filter(F.col("event_id") <= 10)
+            .withColumn("event_id", F.col("event_id") + 10_000_000)
+            .withColumn("event_month", F.lit("1999-01"))
         )
-        t.append(ev.filter(F.col("event_id") % 2 == 1))
-        bad_rejected = False
-        try:
-            t.append(
-                ev.filter(F.col("event_id") <= 10)
-                .withColumn("event_id", F.col("event_id") + 10_000_000)
-                .withColumn("event_month", F.lit("1999-01"))
-            )
-        except Exception:  # noqa: BLE001 — the loud plan_guard rejection
-            bad_rejected = True
-        import re as _re
+    except Exception:  # noqa: BLE001 — the loud plan_guard rejection
+        bad_rejected = True
+    import re as _re
 
-        month_layout = all(
-            e.get("part") and _re.fullmatch(r"\d{4}-\d{2}", e["part"])
-            for e in t.manifest()["files"]
+    month_layout = all(
+        e.get("part") and _re.fullmatch(r"\d{4}-\d{2}", e["part"])
+        for e in t.manifest()["files"]
+    )
+    return (
+        t.snapshot()
+        .groupBy("event_month")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.countDistinct("user_id").cast("long").alias("n_users"),
+            r2(dsum(F.col("value"))).alias("total_value"),
         )
-        return (
-            t.snapshot()
-            .groupBy("event_month")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-                F.countDistinct("user_id").cast("long").alias("n_users"),
-                r2(dsum(F.col("value"))).alias("total_value"),
-            )
-            .withColumn("bad_month_rejected", F.lit(bad_rejected))
-            .withColumn("partitioned_by_month", F.lit(month_layout))
-            .orderBy("event_month")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("bad_month_rejected", F.lit(bad_rejected))
+        .withColumn("partitioned_by_month", F.lit(month_layout))
+        .orderBy("event_month")
+    )
 
 
-def t92_quarantine_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t92_quarantine_append(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Expectation-GATED ingest (TxTable.append_quarantine — the
     'expect or quarantine' pattern): a constraint-bearing table
     (CHECK n_chars >= 0, NOT NULL source) receives one mixed batch in
@@ -2810,10 +2706,6 @@ def t92_quarantine_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream row must neither poison a 100 TB table nor halt its feed.
     The oracle recomputes both destinations from the band predicates,
     including the per-constraint _violated tag."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents").select(
@@ -2831,43 +2723,41 @@ def t92_quarantine_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("source")
         ),
     )
-    base = tempfile.mkdtemp(prefix=f"t92_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        t.init(docs.limit(0))
-        t.add_check_constraint("n_chars_nonneg", "n_chars >= 0")
-        t.add_not_null("source")
-        q = TxTable(spark, base + "/quarantine")
-        t.append_quarantine(mixed, q)
-        main = (
-            t.snapshot()
-            .groupBy()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-            )
-            .withColumn("dest", F.lit("main"))
-            .withColumn("_violated", F.lit(""))
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs.limit(0))
+    t.add_check_constraint("n_chars_nonneg", "n_chars >= 0")
+    t.add_not_null("source")
+    q = TxTable(spark, scratch.dir + "/quarantine")
+    t.append_quarantine(mixed, q)
+    main = (
+        t.snapshot()
+        .groupBy()
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
         )
-        quar = (
-            q.snapshot()
-            .groupBy("_violated")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-            )
-            .withColumn("dest", F.lit("quarantine"))
+        .withColumn("dest", F.lit("main"))
+        .withColumn("_violated", F.lit(""))
+    )
+    quar = (
+        q.snapshot()
+        .groupBy("_violated")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
         )
-        return (
-            main.unionByName(quar)
-            .select("dest", "_violated", "n_rows", "sum_doc_id")
-            .orderBy("dest", "_violated")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("dest", F.lit("quarantine"))
+    )
+    return (
+        main.unionByName(quar)
+        .select("dest", "_violated", "n_rows", "sum_doc_id")
+        .orderBy("dest", "_violated")
+    )
 
-def t93_log_checkpointing(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t93_log_checkpointing(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Manifest-log CHECKPOINTING (TxTable format v2 — VERDICT r9 next
     #1): commits write O(changed-files) delta JSON plus a columnar
     sidecar of added entries, and every checkpoint_interval-th commit
@@ -2885,9 +2775,6 @@ def t93_log_checkpointing(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back through time travel; the oracle replays all seven states
     from the raw corpus."""
     import json as _json
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
     from ..sources.txtable import TxTable
 
@@ -2896,62 +2783,59 @@ def t93_log_checkpointing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     band5 = F.col("doc_id") % 5
     band7 = F.col("doc_id") % 7
-    base = tempfile.mkdtemp(prefix=f"t93_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs", checkpoint_interval=3)
-        t.init(docs.filter(band5 != 4).coalesce(2))           # v1
-        t.append(docs.filter(band5 == 4).coalesce(1))         # v2
-        t.add_check_constraint("doc_id_pos", "doc_id >= 0")   # v3 = cp
-        t.delete_dv(band7 == 0)                               # v4
-        t.rename_column("n_chars", "len_chars")               # v5
-        t.compact(n_files=2)                                  # v6 = cp
-        t.append(                                             # v7
-            docs.filter((band7 == 0) & (F.col("doc_id") % 2 == 1))
-            .withColumnRenamed("n_chars", "len_chars")
-            .coalesce(1)
-        )
-        checkpoints_at = ",".join(
-            str(v) for v in t.checkpoint_versions()
-        )
-        delta_only = all(
-            "files" not in t._manifest_raw(v) for v in t.versions()
-        )
+    base = scratch.dir
+    t = TxTable(spark, base + "/docs", checkpoint_interval=3)
+    t.init(docs.filter(band5 != 4).coalesce(2))           # v1
+    t.append(docs.filter(band5 == 4).coalesce(1))         # v2
+    t.add_check_constraint("doc_id_pos", "doc_id >= 0")   # v3 = cp
+    t.delete_dv(band7 == 0)                               # v4
+    t.rename_column("n_chars", "len_chars")               # v5
+    t.compact(n_files=2)                                  # v6 = cp
+    t.append(                                             # v7
+        docs.filter((band7 == 0) & (F.col("doc_id") % 2 == 1))
+        .withColumnRenamed("n_chars", "len_chars")
+        .coalesce(1)
+    )
+    checkpoints_at = ",".join(
+        str(v) for v in t.checkpoint_versions()
+    )
+    delta_only = all(
+        "files" not in t._manifest_raw(v) for v in t.versions()
+    )
 
-        def emap(handle: TxTable, v: int, cp: bool) -> dict:
-            return {
-                TxTable._entry_key(e): _json.dumps(e, sort_keys=True)
-                for e in handle._resolve_entries(v, use_checkpoints=cp)
-            }
+    def emap(handle: TxTable, v: int, cp: bool) -> dict:
+        return {
+            TxTable._entry_key(e): _json.dumps(e, sort_keys=True)
+            for e in handle._resolve_entries(v, use_checkpoints=cp)
+        }
 
-        fresh = TxTable(spark, base + "/docs", checkpoint_interval=3)
-        replay_equal = all(
-            emap(fresh, v, True)
-            == emap(TxTable(spark, base + "/docs"), v, False)
-            for v in t.versions()
-        )
-        rows = []
-        for h in t.history():
-            v = h["version"]
-            st = (
-                t.snapshot(v)
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n"),
-                    F.sum("doc_id").cast("long").alias("s"),
-                )
-                .collect()[0]
+    fresh = TxTable(spark, base + "/docs", checkpoint_interval=3)
+    replay_equal = all(
+        emap(fresh, v, True)
+        == emap(TxTable(spark, base + "/docs"), v, False)
+        for v in t.versions()
+    )
+    rows = []
+    for h in t.history():
+        v = h["version"]
+        st = (
+            t.snapshot(v)
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.sum("doc_id").cast("long").alias("s"),
             )
-            rows.append((v, h["op"], st.n, st.s))
-        return (
-            spark.createDataFrame(
-                rows, "version long, op string, n_docs long, sum_doc_id long"
-            )
-            .withColumn("checkpoints_at", F.lit(checkpoints_at))
-            .withColumn("delta_only", F.lit(delta_only))
-            .withColumn("replay_equal", F.lit(replay_equal))
-            .orderBy("version")
+            .collect()[0]
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        rows.append((v, h["op"], st.n, st.s))
+    return (
+        spark.createDataFrame(
+            rows, "version long, op string, n_docs long, sum_doc_id long"
+        )
+        .withColumn("checkpoints_at", F.lit(checkpoints_at))
+        .withColumn("delta_only", F.lit(delta_only))
+        .withColumn("replay_equal", F.lit(replay_equal))
+        .orderBy("version")
+    )
 
 def t95_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance-1 FUZZY JOIN (operators/dedup.fuzzy_join_k1 — the
@@ -2985,8 +2869,9 @@ def t95_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("id_a", "id_b")
     )
 
+@gate
 def t96_merge_schema_evolution(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, scratch: Scratch
 ) -> DataFrame:
     """MERGE with SCHEMA EVOLUTION (TxTable.merge(evolve_schema=True)
     — Delta's withSchemaEvolution): a CDC feed that grew a ``tag``
@@ -2998,10 +2883,6 @@ def t96_merge_schema_evolution(
     merge) and the op names; the oracle rebuilds the final state —
     per-tag stats with the NULL group = rows the feed never touched —
     from the raw corpus."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents").select(
@@ -3016,28 +2897,26 @@ def t96_merge_schema_evolution(
         ).alias("tag"),
         (F.col("doc_id") % 10 == 0).alias("dead"),
     )
-    base = tempfile.mkdtemp(prefix=f"t96_{_uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, base + "/docs")
-        t.init(docs.coalesce(4))
-        t.merge(feed, on="doc_id", delete_col="dead", evolve_schema=True)
-        ops = ",".join(h["op"] for h in t.history())
-        return (
-            t.snapshot()
-            .groupBy("tag")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-                F.sum("n_chars").cast("long").alias("sum_n_chars"),
-            )
-            .withColumn("ops", F.lit(ops))
-            .orderBy("tag")
-            .localCheckpoint(eager=True)  # materialize before rmtree
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs.coalesce(4))
+    t.merge(feed, on="doc_id", delete_col="dead", evolve_schema=True)
+    ops = ",".join(h["op"] for h in t.history())
+    return (
+        t.snapshot()
+        .groupBy("tag")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
+            F.sum("n_chars").cast("long").alias("sum_n_chars"),
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("ops", F.lit(ops))
+        .orderBy("tag")
+    )
 
-def t97_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t97_copy_into(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Idempotent directory ingest (TxTable.copy_into — the COPY INTO
     verb): a landing zone receives three band files, copy_into loads
     them; two more land, the second call loads ONLY those (its return
@@ -3047,9 +2926,6 @@ def t97_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds the final per-source stats from the raw corpus and pins
     the ingest arithmetic."""
     import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
     from ..sources.txtable import TxTable
 
@@ -3057,50 +2933,48 @@ def t97_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars"
     )
     band = F.col("doc_id") % 5
-    base = tempfile.mkdtemp(prefix=f"t97_{_uuid.uuid4().hex[:8]}_")
-    try:
-        land = os.path.join(base, "landing")
-        for b in (0, 1, 2):
-            docs.filter(band == b).coalesce(1).write.parquet(
-                os.path.join(land, f"band{b}.parquet")
-            )
-        t = TxTable(spark, base + "/docs")
-        t.init(docs.limit(0))
-        v1, first = t.copy_into(land, "band*.parquet")
-        for b in (3, 4):
-            docs.filter(band == b).coalesce(1).write.parquet(
-                os.path.join(land, f"band{b}.parquet")
-            )
-        v2, second = t.copy_into(land, "band*.parquet")
-        v3, third = t.copy_into(land, "band*.parquet")
-        return (
-            t.snapshot()
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-            )
-            .withColumn(
-                "first_ingested", F.lit(len(first)).cast("long")
-            )
-            .withColumn(
-                "second_ingested", F.lit(len(second)).cast("long")
-            )
-            .withColumn(
-                "third_noop", F.lit(v3 is None and third == [])
-            )
-            .withColumn(
-                "ops",
-                F.lit(",".join(h["op"] for h in t.history())),
-            )
-            .orderBy("source")
-            .localCheckpoint(eager=True)  # materialize before rmtree
+    land = os.path.join(scratch.dir, "landing")
+    for b in (0, 1, 2):
+        docs.filter(band == b).coalesce(1).write.parquet(
+            os.path.join(land, f"band{b}.parquet")
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(docs.limit(0))
+    v1, first = t.copy_into(land, "band*.parquet")
+    for b in (3, 4):
+        docs.filter(band == b).coalesce(1).write.parquet(
+            os.path.join(land, f"band{b}.parquet")
+        )
+    v2, second = t.copy_into(land, "band*.parquet")
+    v3, third = t.copy_into(land, "band*.parquet")
+    return (
+        t.snapshot()
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
+        )
+        .withColumn(
+            "first_ingested", F.lit(len(first)).cast("long")
+        )
+        .withColumn(
+            "second_ingested", F.lit(len(second)).cast("long")
+        )
+        .withColumn(
+            "third_noop", F.lit(v3 is None and third == [])
+        )
+        .withColumn(
+            "ops",
+            F.lit(",".join(h["op"] for h in t.history())),
+        )
+        .orderBy("source")
+    )
 
 
-def t98_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t98_concurrent_writers(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Op-aware commit CONFLICT RESOLUTION (TxTable._commit_or_rebase —
     VERDICT r10 next #1): disjoint data commits REBASE onto the new
     head instead of blanket re-stage-and-retry, so concurrent writers
@@ -3119,10 +2993,6 @@ def t98_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each race's single-staging is pinned as a boolean column; the
     oracle recomputes the serialized final state from the raw corpus
     with the same set algebra."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.txtable import TxTable
 
     docs = table(spark, sf_dir, "documents").select(
@@ -3130,7 +3000,6 @@ def t98_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     band = F.col("doc_id") % 4
     seven = F.col("doc_id") % 7
-    base = tempfile.mkdtemp(prefix=f"t98_{_uuid.uuid4().hex[:8]}_")
 
     def race(victim: TxTable, action, method: str = "_stage"):
         """Run ``action()`` once right after the victim's first staging
@@ -3151,45 +3020,44 @@ def t98_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
         setattr(victim, method, wrapper)
         return state
 
-    try:
-        path = base + "/docs"
-        a, b = TxTable(spark, path), TxTable(spark, path)
-        a.init(docs.filter(band == 0).coalesce(2))               # v1
-        s1 = race(b, lambda: a.append(docs.filter(band == 2).coalesce(1)))
-        b.append(docs.filter(band == 1).coalesce(1))             # v2+v3
-        b._stage = TxTable._stage.__get__(b)
-        s2 = race(b, lambda: a.append(docs.filter(band == 3).coalesce(1)))
-        b.compact(2)                                             # v4+v5
-        b._stage = TxTable._stage.__get__(b)
-        s3 = race(
-            b,
-            lambda: a.append(
-                docs.filter((band == 0) & (seven == 0)).coalesce(1)
-            ),
-            method="_stage_dv",
+    path = scratch.dir + "/docs"
+    a, b = TxTable(spark, path), TxTable(spark, path)
+    a.init(docs.filter(band == 0).coalesce(2))               # v1
+    s1 = race(b, lambda: a.append(docs.filter(band == 2).coalesce(1)))
+    b.append(docs.filter(band == 1).coalesce(1))             # v2+v3
+    b._stage = TxTable._stage.__get__(b)
+    s2 = race(b, lambda: a.append(docs.filter(band == 3).coalesce(1)))
+    b.compact(2)                                             # v4+v5
+    b._stage = TxTable._stage.__get__(b)
+    s3 = race(
+        b,
+        lambda: a.append(
+            docs.filter((band == 0) & (seven == 0)).coalesce(1)
+        ),
+        method="_stage_dv",
+    )
+    b.delete_dv(seven == 0)                                  # v6+v7
+    ops = ",".join(h["op"] for h in a.history())
+    return (
+        a.snapshot()
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
+            F.sum("n_chars").cast("long").alias("sum_chars"),
         )
-        b.delete_dv(seven == 0)                                  # v6+v7
-        ops = ",".join(h["op"] for h in a.history())
-        return (
-            a.snapshot()
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-                F.sum("n_chars").cast("long").alias("sum_chars"),
-            )
-            .withColumn("ops", F.lit(ops))
-            .withColumn("append_rebased", F.lit(s1["stages"] == 1))
-            .withColumn("compact_rebased", F.lit(s2["stages"] == 1))
-            .withColumn("dv_rebased", F.lit(s3["stages"] == 1))
-            .orderBy("source")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn("ops", F.lit(ops))
+        .withColumn("append_rebased", F.lit(s1["stages"] == 1))
+        .withColumn("compact_rebased", F.lit(s2["stages"] == 1))
+        .withColumn("dv_rebased", F.lit(s3["stages"] == 1))
+        .orderBy("source")
+    )
 
 
-def t100_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def t100_ann_index(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """STANDING ANN retrieval index (VERDICT r11 next #1): AnnIndex —
     the embedding twin of Bm25Index — keeps the SRP band relation
     (t37's persisted index) as ONE incrementally maintained matview of
@@ -3211,52 +3079,43 @@ def t100_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``index_matches_recompute`` additionally pins the maintained band
     relation bit-identical to a from-scratch banding of the final
     snapshot."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.matview import mv_aggregate
     from ..sources.txtable import TxTable
 
     emb = table(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix=f"t100_{_uuid.uuid4().hex[:8]}_")
-    try:
-        corpus = TxTable(spark, base + "/corpus")
-        corpus.init(emb.filter(F.col("vec_id") % 5 != 0).coalesce(2))
-        idx = sim.AnnIndex(corpus, base + "/idx")
-        idx.build()
-        corpus.append(emb.filter(F.col("vec_id") % 5 == 0).coalesce(1))
-        corpus.delete(F.col("vec_id") % 7 == 3)
-        idx.refresh()
+    corpus = TxTable(spark, scratch.dir + "/corpus")
+    corpus.init(emb.filter(F.col("vec_id") % 5 != 0).coalesce(2))
+    idx = sim.AnnIndex(corpus, scratch.dir + "/idx")
+    idx.build()
+    corpus.append(emb.filter(F.col("vec_id") % 5 == 0).coalesce(1))
+    corpus.delete(F.col("vec_id") % 7 == 3)
+    idx.refresh()
 
-        final = corpus.snapshot()
-        queries = final.filter(F.col("vec_id") % 9 == 1).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        top = idx.score(queries, k=5, where="label % 2 = 0").select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            "cosine_sim",
-        )
-        # maintained band MV == from-scratch banding of the final
-        # snapshot (the index-vs-recompute pin, t99 style)
-        maintained = idx.bands_mv.snapshot().select(
-            "id", "band", "key", F.col("n_rows").cast("long").alias("n")
-        )
-        fresh = mv_aggregate(
-            idx._band_rows(final), idx._G, idx._M
-        ).select(
-            "id", "band", "key", F.col("n_rows").cast("long").alias("n")
-        )
-        same = (
-            maintained.exceptAll(fresh).isEmpty()
-            and fresh.exceptAll(maintained).isEmpty()
-        )
-        return (
-            top.withColumn("index_matches_recompute", F.lit(same))
-            .orderBy("query_id", "rank")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    final = corpus.snapshot()
+    queries = final.filter(F.col("vec_id") % 9 == 1).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    top = idx.score(queries, k=5, where="label % 2 = 0").select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("long").alias("rank"),
+        "cosine_sim",
+    )
+    # maintained band MV == from-scratch banding of the final
+    # snapshot (the index-vs-recompute pin, t99 style)
+    maintained = idx.bands_mv.snapshot().select(
+        "id", "band", "key", F.col("n_rows").cast("long").alias("n")
+    )
+    fresh = mv_aggregate(
+        idx._band_rows(final), idx._G, idx._M
+    ).select(
+        "id", "band", "key", F.col("n_rows").cast("long").alias("n")
+    )
+    same = (
+        maintained.exceptAll(fresh).isEmpty()
+        and fresh.exceptAll(maintained).isEmpty()
+    )
+    return (
+        top.withColumn("index_matches_recompute", F.lit(same))
+        .orderBy("query_id", "rank")
+    )

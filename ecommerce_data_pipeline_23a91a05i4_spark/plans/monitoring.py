@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.exprs import dsum, mean2, r2
+from ._gate import Scratch, gate
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes in microseconds
 
@@ -168,7 +169,10 @@ def q15_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def s1_streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s1_streaming_hourly_events(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming == batch parity gate: drains the Structured Streaming
     twin of q15 (file-source readStream → complete-mode aggregation →
     memory sink, availableNow trigger) and returns the final table.
@@ -180,31 +184,20 @@ def s1_streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kafka with a watermark (streaming/ingest.hourly_event_counts);
     availableNow replay is the standard backfill mode."""
     import os
-    import uuid
 
     from ..streaming import ingest as st
 
     ev = st.stream_events(spark, os.path.join(sf_dir, "events.parquet"))
     agg = st.hourly_event_counts_exact(ev)
-    name = "s1_hourly_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return scratch.drain(agg, output_mode="complete").orderBy(
+        "window_start", "event_type"
     )
-    q.awaitTermination()
-    result = (
-        spark.table(name)
-        .orderBy("window_start", "event_type")
-        .localCheckpoint(eager=True)  # materialize before dropping the sink
-    )
-    spark.catalog.dropTempView(name)
-    return result
 
 
-def s2_streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s2_streaming_sessionization(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Stateful-streaming parity gate: drains the applyInPandasWithState
     sessionizer (update mode emits the running per-user counts each
     micro-batch) and rolls up to the final value with max() — sound
@@ -213,36 +206,26 @@ def s2_streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     window arithmetic, independently proving the one Python-stateful
     operator in the engine against SQL semantics."""
     import os
-    import uuid
 
     from ..streaming import ingest as st
 
     ev = st.stream_events(spark, os.path.join(sf_dir, "events.parquet"))
     sess = st.sessionize_stream(ev)
-    name = "s2_sessions_" + uuid.uuid4().hex[:8]
-    q = (
-        sess.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = (
-        spark.table(name)
+    return (
+        scratch.drain(sess, output_mode="update")
         .groupBy("user_id")
         .agg(
             F.max("n_sessions").alias("n_sessions"),
             F.max("n_events").alias("n_events"),
         )
         .orderBy("user_id")
-        .localCheckpoint(eager=True)  # materialize before dropping the sink
     )
-    spark.catalog.dropTempView(name)
-    return result
 
 
-def s2b_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s2b_session_window(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Engine-native streaming sessionization parity gate: the built-in
     ``session_window`` aggregation (streaming/ingest.sessionize_native)
     drained complete-mode with availableNow, rolled up to the same
@@ -256,24 +239,14 @@ def s2b_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     new-then-old batches).  Complete mode is the finite-replay drain;
     production uses watermark + append for bounded state."""
     import os
-    import uuid
 
     from ..streaming import ingest as st
 
     ev = st.stream_events(spark, os.path.join(sf_dir, "events.parquet"))
     sess = st.sessionize_native(ev)
-    name = "s2b_sessions_" + uuid.uuid4().hex[:8]
-    q = (
-        sess.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    result = (
-        out.groupBy("user_id")
+    return (
+        scratch.drain(sess, output_mode="complete")
+        .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
             F.sum("n_events").cast("long").alias("n_events"),
@@ -284,12 +257,12 @@ def s2b_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id")
     )
-    result = result.localCheckpoint(eager=True)  # materialize before drop
-    spark.catalog.dropTempView(name)
-    return result
 
 
-def s2c_session_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s2c_session_window_append(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """PRODUCTION-mode native sessionization (VERDICT r4 ask #7): the
     session_window aggregation with a WATERMARK in APPEND mode — state
     is evicted as the watermark advances and each finalized session is
@@ -308,59 +281,42 @@ def s2c_session_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff — the driver proves watermark bookkeeping against plain
     SQL."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..streaming import ingest as st
 
     events = table(spark, sf_dir, "events")
     lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
     split = lo + (hi - lo) / 2
-    base = tempfile.mkdtemp(prefix=f"s2c_{uuid.uuid4().hex[:8]}_")
-    name = "s2c_sessions_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(base, "ev")
-        for fname, part, mtime in (
-            ("f1.parquet", events.filter(F.col("ts") < F.lit(split)), 1000),
-            ("f2.parquet", events.filter(F.col("ts") >= F.lit(split)), 2000),
-        ):
-            p = os.path.join(src, fname)
-            part.coalesce(1).write.parquet(p)
-            for root, _, fs in os.walk(p):
-                for f in fs:
-                    os.utime(os.path.join(root, f), (mtime, mtime))
-        raw = (
-            spark.readStream.schema(st.EVENTS_RAW_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-        )
-        ev = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        sess = st.sessionize_native(
-            ev, gap="30 minutes", watermark="30 minutes"
-        )
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        result = (
-            spark.table(name)
-            .select("user_id", "session_start", "session_end", "n_events")
-            .orderBy("user_id", "session_start")
-            .localCheckpoint(eager=True)  # materialize before dropping
-        )
-        spark.catalog.dropTempView(name)
-        return result
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    src = os.path.join(scratch.dir, "ev")
+    for fname, part, mtime in (
+        ("f1.parquet", events.filter(F.col("ts") < F.lit(split)), 1000),
+        ("f2.parquet", events.filter(F.col("ts") >= F.lit(split)), 2000),
+    ):
+        p = os.path.join(src, fname)
+        part.coalesce(1).write.parquet(p)
+        for root, _, fs in os.walk(p):
+            for f in fs:
+                os.utime(os.path.join(root, f), (mtime, mtime))
+    raw = (
+        spark.readStream.schema(st.EVENTS_RAW_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+    )
+    ev = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    sess = st.sessionize_native(
+        ev, gap="30 minutes", watermark="30 minutes"
+    )
+    return (
+        scratch.drain(sess, output_mode="append")
+        .select("user_id", "session_start", "session_end", "n_events")
+        .orderBy("user_id", "session_start")
+    )
 
 
-def s3_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s3_streaming_neardup(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming near-dedup parity gate: new documents (doc_id % 5 == 0)
     arrive as a file stream and are screened IN-FLIGHT against the static
     corpus LSH index — zero streaming state (per-row banding via
@@ -376,7 +332,6 @@ def s3_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the persisted bucketed tables t31 maintains; the stream appends its
     own bands to the index after each batch."""
     import os
-    import uuid
 
     from ..functions.exprs import quant
     from ..operators import dedup as dd
@@ -394,27 +349,18 @@ def s3_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(sf_dir, "documents.parquet")
     ).filter(F.col("doc_id") % 5 == 0)
     pairs = st.neardup_stream(delta, corpus_bands, corpus_shingles)
-    name = "s3_neardup_" + uuid.uuid4().hex[:8]
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = (
-        spark.table(name)
+    return (
+        scratch.drain(pairs, output_mode="append")
         .select("id_a", "id_b", quant(F.col("jaccard"), 6).alias("jaccard"))
         .distinct()
         .orderBy("id_a", "id_b")
-        .localCheckpoint(eager=True)  # materialize before dropping the sink
     )
-    spark.catalog.dropTempView(name)
-    return result
 
 
-def s7_streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s7_streaming_semdedup(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming SEMANTIC dedup parity gate (s3's embedding twin): new
     vectors (vec_id % 5 == 0) arrive as a file stream and are screened
     IN-FLIGHT against the persisted semantic state — frozen trained
@@ -426,7 +372,6 @@ def s7_streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rowwise assignment equals the batch path's window argmax, sub keys
     included."""
     import os
-    import uuid
 
     from ..operators import similarity as sim
     from ..plans.llmdata import NEARDUP_COSINE, SEMDEDUP_INC_GATE_K
@@ -450,23 +395,11 @@ def s7_streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = st.semdedup_stream(
         delta, store, centroid_rows, threshold=NEARDUP_COSINE
     )
-    name = "s7_semdedup_" + uuid.uuid4().hex[:8]
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = (
-        spark.table(name)
+    return (
+        scratch.drain(pairs, output_mode="append")
         .distinct()
         .orderBy("vec_id", "corpus_id")
-        .localCheckpoint(eager=True)  # materialize before dropping the sink
     )
-    spark.catalog.dropTempView(name)
-    return result
 
 
 def q16_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,7 +440,10 @@ def q16_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def s4_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s4_streaming_exact_dedup(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming exact dedup: documents arrive as a file stream and
     ``dropDuplicates`` on the content fingerprint keeps first-arrival
     only — the in-flight twin of t4's batch exact dedup.  The drained
@@ -522,7 +458,6 @@ def s4_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``withWatermark + dropDuplicatesWithinWatermark``, trading eternal
     exactness for bounded state — the documented production variant."""
     import os
-    import uuid
 
     from ..operators.text import content_fingerprint
     from ..streaming import ingest as st
@@ -531,27 +466,18 @@ def s4_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = docs.select(
         content_fingerprint(F.col("text")).alias("fp")
     ).dropDuplicates(["fp"])
-    name = "s4_dedup_" + uuid.uuid4().hex[:8]
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = (
-        spark.table(name)
+    return (
+        scratch.drain(deduped, output_mode="append")
         .select("fp")
         .distinct()
         .orderBy("fp")
-        .localCheckpoint(eager=True)  # materialize before dropping the sink
     )
-    spark.catalog.dropTempView(name)
-    return result
 
 
-def s5_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s5_streaming_curation(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """In-flight curation: the new batch (doc_id % 5 == 0) flows through
     PII redaction (t32's planted input, operators/curation.redact_pii)
     and the hashed-feature quality scorer (t42's
@@ -562,7 +488,6 @@ def s5_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     same column exprs as the batch gates', the DuckDB oracle replays the
     whole thing and the driver proves stream == batch on values."""
     import os
-    import uuid
 
     from ..operators import curation as cu
     from ..plans.llmdata import plant_pii
@@ -588,25 +513,13 @@ def s5_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         score.alias("score"),
         (score > 0).alias("keep"),
     )
-    name = "s5_curation_" + uuid.uuid4().hex[:8]
-    q = (
-        curated.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = (
-        spark.table(name)
-        .orderBy("doc_id")
-        .localCheckpoint(eager=True)  # materialize before dropping the sink
-    )
-    spark.catalog.dropTempView(name)
-    return result
+    return scratch.drain(curated, output_mode="append").orderBy("doc_id")
 
 
-def s6_streaming_txtable_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s6_streaming_txtable_sink(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Exactly-once streaming ingestion into the transactional table:
     the document stream lands in a manifest-log table via the
     foreachBatch sink (sources/txtable.TxTableStreamSink), whose
@@ -617,50 +530,33 @@ def s6_streaming_txtable_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats; the oracle recomputes them from the raw documents, so the
     driver proves no batch was lost or double-committed."""
     import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
     from ..sources.txtable import TxTable, TxTableStreamSink
     from ..streaming import ingest as st
 
-    base = tempfile.mkdtemp(prefix=f"s6_{_uuid.uuid4().hex[:8]}_")
-    try:
-        docs_schema = spark.read.parquet(
-            os.path.join(sf_dir, "documents.parquet")
-        ).schema
-        t = TxTable(spark, base + "/docs")
-        t.init(spark.createDataFrame([], docs_schema))
-        stream = st.stream_documents(
-            spark, os.path.join(sf_dir, "documents.parquet")
+    docs_schema = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).schema
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(spark.createDataFrame([], docs_schema))
+    stream = st.stream_documents(
+        spark, os.path.join(sf_dir, "documents.parquet")
+    )
+    scratch.drain(stream, TxTableStreamSink(t))
+    return (
+        t.snapshot()
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("n_chars"),
         )
-        q = (
-            stream.writeStream.foreachBatch(TxTableStreamSink(t))
-            .option("checkpointLocation", base + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = (
-            t.snapshot()
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("n_chars"),
-            )
-            .orderBy("source")
-            .collect()
-        )
-        return spark.createDataFrame(
-            [tuple(r) for r in rows],
-            "source string, n_docs long, n_chars long",
-        ).orderBy("source")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .orderBy("source")
+    )
 
 
+@gate
 def s15_streaming_sink_autocompact(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, scratch: Scratch
 ) -> DataFrame:
     """Streaming ingestion WITH auto-compaction (sources/txtable.
     TxTableStreamSink(small_file_limit=...) — VERDICT r7 ask #4: s6
@@ -682,78 +578,59 @@ def s15_streaming_sink_autocompact(
     from raw documents, so the driver proves compaction neither lost
     nor duplicated a single row."""
     import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
     from ..sources.txtable import TxTable, TxTableStreamSink
 
-    base = tempfile.mkdtemp(prefix=f"s15_{_uuid.uuid4().hex[:8]}_")
-    try:
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        src_dir = base + "/src"
-        docs.repartition(6).write.parquet(src_dir)
+    base = scratch.dir
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    src_dir = base + "/src"
+    docs.repartition(6).write.parquet(src_dir)
 
-        def drain(table_dir: str, ckpt: str, **sink_kw) -> TxTable:
-            t = TxTable(spark, table_dir)
-            t.init(spark.createDataFrame([], docs.schema))
-            sink = TxTableStreamSink(t, app_id="ingest", **sink_kw)
-            q = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir)
-                .writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return t
+    def ingest(table_dir: str, **sink_kw) -> TxTable:
+        t = TxTable(spark, table_dir)
+        t.init(spark.createDataFrame([], docs.schema))
+        scratch.drain(
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir),
+            TxTableStreamSink(t, app_id="ingest", **sink_kw),
+        )
+        return t
 
-        t = drain(
-            base + "/docs",
-            base + "/ckpt",
-            small_file_limit=3,
-            compact_target_files=1,
+    t = ingest(base + "/docs", small_file_limit=3, compact_target_files=1)
+    twin = ingest(base + "/docs_nc")
+    ops = [h["op"] for h in t.history()]
+    compaction_ran = any(o == "compact" for o in ops)
+    fewer_files = len(t.manifest()["files"]) < len(
+        twin.manifest()["files"]
+    )
+    # replay batch 0 through a FRESH sink instance: only the
+    # stream floor (carried through every compact commit) can
+    # suppress it now
+    v_before = t.latest_version()
+    TxTableStreamSink(t, app_id="ingest")(docs.limit(5), 0)
+    replay_noop = t.latest_version() == v_before
+    return (
+        t.snapshot()
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("n_chars"),
         )
-        twin = drain(base + "/docs_nc", base + "/ckpt_nc")
-        ops = [h["op"] for h in t.history()]
-        compaction_ran = any(o == "compact" for o in ops)
-        fewer_files = len(t.manifest()["files"]) < len(
-            twin.manifest()["files"]
-        )
-        # replay batch 0 through a FRESH sink instance: only the
-        # stream floor (carried through every compact commit) can
-        # suppress it now
-        v_before = t.latest_version()
-        TxTableStreamSink(t, app_id="ingest")(docs.limit(5), 0)
-        replay_noop = t.latest_version() == v_before
-        rows = (
-            t.snapshot()
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("n_chars"),
-            )
-            .orderBy("source")
-            .collect()
-        )
-        return spark.createDataFrame(
-            [tuple(r) for r in rows],
-            "source string, n_docs long, n_chars long",
-        ).select(
-            "source",
-            "n_docs",
-            "n_chars",
+        .select(
+            "*",
             F.lit(compaction_ran).alias("compaction_ran"),
             F.lit(fewer_files).alias("files_below_no_compaction"),
             F.lit(replay_noop).alias("replay_noop"),
-        ).orderBy("source")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        )
+        .orderBy("source")
+    )
 
 
-def s16_streaming_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s16_streaming_change_feed(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Multi-hop lakehouse pipeline over the engine's own format:
     TxTable A --change-feed stream--> TxTable B (VERDICT r8 ask #2).
     The source is sources/txstream.stream_table_changes — the read
@@ -782,91 +659,78 @@ def s16_streaming_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing) and ``restart_noop`` (a restarted stream on the same
     checkpoint finds nothing new)."""
     import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
     from ..sources.txstream import stream_table_changes
     from ..sources.txtable import TxTable, TxTableStreamSink
 
-    base = tempfile.mkdtemp(prefix=f"s16_{_uuid.uuid4().hex[:8]}_")
-    try:
-        docs = spark.read.parquet(
-            os.path.join(sf_dir, "documents.parquet")
-        ).select("doc_id", "source", "n_chars")
-        a = TxTable(spark, base + "/a")
-        a.init(
-            docs.filter(F.col("doc_id") % 3 == 0).repartition("source"),
-            partition_by="source",
+    base = scratch.dir
+    docs = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id", "source", "n_chars")
+    a = TxTable(spark, base + "/a")
+    a.init(
+        docs.filter(F.col("doc_id") % 3 == 0).repartition("source"),
+        partition_by="source",
+    )
+    a.append(
+        docs.filter(F.col("doc_id") % 3 == 1).repartition("source")
+    )
+    a.delete(F.col("doc_id") % 2 == 0)
+    a.append(
+        docs.filter(F.col("doc_id") % 3 == 2).repartition("source")
+    )
+
+    b = TxTable(spark, base + "/b")
+    b.init(
+        spark.createDataFrame(
+            [],
+            "doc_id long, source string, n_chars long, "
+            "_change_type string, _commit_version long",
         )
-        a.append(
-            docs.filter(F.col("doc_id") % 3 == 1).repartition("source")
-        )
-        a.delete(F.col("doc_id") % 2 == 0)
-        a.append(
-            docs.filter(F.col("doc_id") % 3 == 2).repartition("source")
+    )
+
+    def hop() -> None:
+        scratch.drain(
+            stream_table_changes(spark, base + "/a"),
+            TxTableStreamSink(b, app_id="hop"),
+            checkpoint="ckpt",
         )
 
-        b = TxTable(spark, base + "/b")
-        b.init(
-            spark.createDataFrame(
-                [],
-                "doc_id long, source string, n_chars long, "
-                "_change_type string, _commit_version long",
-            )
+    hop()
+    v = b.latest_version()
+    # replayed micro-batch through a FRESH sink instance: only the
+    # durable stream floor can suppress it
+    TxTableStreamSink(b, app_id="hop")(b.snapshot().limit(0), 0)
+    replay_noop = b.latest_version() == v
+    # restarted stream on the same checkpoint: offsets resume at
+    # A's head, nothing re-emitted, B unchanged
+    hop()
+    restart_noop = b.latest_version() == v
+    return (
+        b.snapshot()
+        .groupBy(
+            F.col("_commit_version").alias("commit_version"),
+            F.col("_change_type").alias("change_type"),
+            "source",
         )
-
-        def hop() -> None:
-            q = (
-                stream_table_changes(spark, base + "/a")
-                .writeStream.foreachBatch(
-                    TxTableStreamSink(b, app_id="hop")
-                )
-                .option("checkpointLocation", base + "/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        hop()
-        v = b.latest_version()
-        # replayed micro-batch through a FRESH sink instance: only the
-        # durable stream floor can suppress it
-        TxTableStreamSink(b, app_id="hop")(b.snapshot().limit(0), 0)
-        replay_noop = b.latest_version() == v
-        # restarted stream on the same checkpoint: offsets resume at
-        # A's head, nothing re-emitted, B unchanged
-        hop()
-        restart_noop = b.latest_version() == v
-        rows = (
-            b.snapshot()
-            .groupBy("_commit_version", "_change_type", "source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-                F.sum("n_chars").cast("long").alias("sum_n_chars"),
-            )
-            .orderBy("_commit_version", "_change_type", "source")
-            .collect()
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
+            F.sum("n_chars").cast("long").alias("sum_n_chars"),
         )
-        return (
-            spark.createDataFrame(
-                [tuple(r) for r in rows],
-                "commit_version long, change_type string, source string, "
-                "n_rows long, sum_doc_id long, sum_n_chars long",
-            )
-            .select(
-                "*",
-                F.lit(replay_noop).alias("replay_noop"),
-                F.lit(restart_noop).alias("restart_noop"),
-            )
-            .orderBy("commit_version", "change_type", "source")
+        .select(
+            "*",
+            F.lit(replay_noop).alias("replay_noop"),
+            F.lit(restart_noop).alias("restart_noop"),
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .orderBy("commit_version", "change_type", "source")
+    )
 
 
-def s8_streaming_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s8_streaming_distinct_sketch(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming COUNT(DISTINCT) with bounded state: hll_registers
     (operators/sketch.py) applied to a file stream IS the stateful
     operator — a (group, register) MAX aggregation whose state can
@@ -880,7 +744,6 @@ def s8_streaming_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimated with the shared portable estimator; the oracle replays
     sketch+estimate from raw events exactly as t67 does."""
     import os
-    import uuid
 
     from ..operators import sketch as sk
     from ..streaming import ingest as st
@@ -888,10 +751,7 @@ def s8_streaming_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     ev = st.stream_events(spark, path)
     regs = sk.hll_registers(ev, ["event_id"], ["event_type"], p=4, hash="md5")
-    name = "s8_sketch_" + uuid.uuid4().hex[:8]
-    stream_regs = st.run_available_now(
-        regs, name, output_mode="complete", materialize=True
-    )
+    stream_regs = scratch.drain(regs, output_mode="complete")
     batch = spark.read.parquet(path)
     batch_regs = sk.hll_registers(
         batch, ["event_id"], ["event_type"], p=4, hash="md5"
@@ -969,7 +829,10 @@ def _cdc_docs_and_changes(spark: SparkSession, sf_dir: str):
     return corpus, changes
 
 
-def s11_streaming_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s11_streaming_cms_sketch(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming FREQUENCY sketch with bounded state — the Count-Min
     member of the streaming-sketch family (s8 proved the distinct-count
     member): cms_build (operators/sketch.py) applied to the event
@@ -986,7 +849,6 @@ def s11_streaming_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays salted-md5 addressing → counters → min-lookup
     from raw events exactly as t70 does."""
     import os
-    import uuid
 
     from ..operators import sketch as sk
     from ..streaming import ingest as st
@@ -994,10 +856,7 @@ def s11_streaming_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     ev = st.stream_events(spark, path)
     counters = sk.cms_build(ev, ["user_id"], depth=4, width=256)
-    name = "s11_cms_" + uuid.uuid4().hex[:8]
-    stream_cnt = st.run_available_now(
-        counters, name, output_mode="complete", materialize=True
-    )
+    stream_cnt = scratch.drain(counters, output_mode="complete")
     batch = spark.read.parquet(path)
     batch_cnt = sk.cms_build(batch, ["user_id"], depth=4, width=256)
     same = st.stream_equals_batch(stream_cnt, batch_cnt)
@@ -1023,7 +882,10 @@ def s11_streaming_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def s14_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s14_streaming_exact_dedup(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming EXACT deduplication with watermark-bounded state —
     dropDuplicatesWithinWatermark, the operator that makes exact
     streaming dedup survivable at scale: plain dropDuplicates holds one
@@ -1039,7 +901,6 @@ def s14_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count, exact BIGINT id-sum) aggregate is replayed by the oracle
     from raw events — planted duplicates must be invisible end-to-end."""
     import os
-    import uuid
 
     from ..streaming import ingest as st
 
@@ -1058,10 +919,7 @@ def s14_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = dup.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    name = "s14_dedup_" + uuid.uuid4().hex[:8]
-    got = st.run_available_now(
-        dedup, name, output_mode="append", materialize=True
-    )
+    got = scratch.drain(dedup, output_mode="append")
     batch = spark.read.parquet(path).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -1082,7 +940,10 @@ def s14_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def s13_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s13_streaming_heavy_hitters(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming heavy-hitter ENUMERATION — the t70b composition fed by
     the STREAM's drained state: cms_build on a planted-skew event
     stream is the stateful operator (≤ depth×width counter rows
@@ -1100,7 +961,6 @@ def s13_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays skew, sample, sketch, estimate, and the derived threshold
     relationally."""
     import os
-    import uuid
 
     from ..operators import sketch as sk
     from ..streaming import ingest as st
@@ -1118,10 +978,7 @@ def s13_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = skewed(st.stream_events(spark, path))
     counters = sk.cms_build(ev, ["user_id"], depth=depth, width=width)
-    name = "s13_cms_" + uuid.uuid4().hex[:8]
-    stream_cnt = st.run_available_now(
-        counters, name, output_mode="complete", materialize=True
-    )
+    stream_cnt = scratch.drain(counters, output_mode="complete")
     batch = skewed(spark.read.parquet(path)).localCheckpoint(eager=True)
     batch_cnt = sk.cms_build(batch, ["user_id"], depth=depth, width=width)
     same = st.stream_equals_batch(stream_cnt, batch_cnt)
@@ -1175,7 +1032,10 @@ def s13_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def s12_streaming_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s12_streaming_hist_quantiles(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming QUANTILES with bounded state — the third member of
     the streaming-sketch family (s8 distinct counts, s11 frequencies):
     hist_build (operators/sketch.py) applied to the event stream IS the
@@ -1198,7 +1058,6 @@ def s12_streaming_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     events exactly as t71 does for orders."""
     import math
     import os
-    import uuid
 
     from ..operators import sketch as sk
     from ..streaming import ingest as st
@@ -1218,10 +1077,7 @@ def s12_streaming_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (hi - lo) / bins
     ev = st.stream_events(spark, path)
     h = sk.hist_build(ev, "value", lo, hi, bins)
-    name = "s12_hist_" + uuid.uuid4().hex[:8]
-    stream_hist = st.run_available_now(
-        h, name, output_mode="complete", materialize=True
-    )
+    stream_hist = scratch.drain(h, output_mode="complete")
     batch_hist = sk.hist_build(batch, "value", lo, hi, bins)
     same = st.stream_equals_batch(stream_hist, batch_hist)
     qs = [0.5, 0.9, 0.99]
@@ -1298,7 +1154,10 @@ def s12_streaming_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def s9_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s9_streaming_cdc_apply(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming CDC apply: a change FEED arrives as files and each
     micro-batch lands on the transactional table as ONE merge commit
     (foreachBatch → sources/txtable.apply_cdc) — minute-cadence CDC
@@ -1312,59 +1171,48 @@ def s9_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     under availableNow forces a real multi-batch drain; n_versions
     pins that every batch committed exactly one merge (1 init + 3)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..sources.txtable import TxTable, apply_cdc
 
     corpus, changes = _cdc_docs_and_changes(spark, sf_dir)
     did = F.col("doc_id")
-    root = tempfile.mkdtemp(prefix=f"s9_{uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, root + "/docs")
-        t.init(corpus)
-        feed_dir = os.path.join(root, "feed")
-        os.makedirs(feed_dir)
-        # three files over disjoint doc_id % 9 bands = three micro-batches
-        for i, band in enumerate(((0, 1, 2), (3, 4, 5), (6, 7, 8))):
-            changes.filter((did % 9).isin(*band)).coalesce(1).write.parquet(
-                os.path.join(feed_dir, f"batch_{i}.parquet")
-            )
-        feed = (
-            spark.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir + "/*")
+    t = TxTable(spark, scratch.dir + "/docs")
+    t.init(corpus)
+    feed_dir = os.path.join(scratch.dir, "feed")
+    os.makedirs(feed_dir)
+    # three files over disjoint doc_id % 9 bands = three micro-batches
+    for i, band in enumerate(((0, 1, 2), (3, 4, 5), (6, 7, 8))):
+        changes.filter((did % 9).isin(*band)).coalesce(1).write.parquet(
+            os.path.join(feed_dir, f"batch_{i}.parquet")
         )
-        q = (
-            feed.writeStream.foreachBatch(
-                lambda batch, _bid: apply_cdc(t, batch, "doc_id") and None
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
+    feed = (
+        spark.readStream.schema(changes.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed_dir + "/*")
+    )
+    scratch.drain(
+        feed, lambda batch, _bid: apply_cdc(t, batch, "doc_id") and None
+    )
+    return (
+        t.snapshot()
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("doc_id").cast("long").alias("sum_ids"),
+            F.sum(F.length("text")).cast("long").alias("sum_chars"),
+            F.sum(
+                F.when(F.col("text").endswith(" [cdc]"), 1).otherwise(0)
+            ).cast("long").alias("n_updated"),
         )
-        q.awaitTermination()
-        out = (
-            t.snapshot()
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("doc_id").cast("long").alias("sum_ids"),
-                F.sum(F.length("text")).cast("long").alias("sum_chars"),
-                F.sum(
-                    F.when(F.col("text").endswith(" [cdc]"), 1).otherwise(0)
-                ).cast("long").alias("n_updated"),
-            )
-            .withColumn("n_versions", F.lit(len(t.versions())).cast("long"))
-            .orderBy("lang")
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .withColumn("n_versions", F.lit(len(t.versions())).cast("long"))
+        .orderBy("lang")
+    )
 
 
-def s10_streaming_cdc_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s10_streaming_cdc_matview(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Streaming CDC feeding an incrementally-maintained dashboard
     aggregate — the composition of s9 (each micro-batch lands as ONE
     merge commit via apply_cdc) and t68 (mv_refresh advances the MV
@@ -1380,9 +1228,6 @@ def s10_streaming_cdc_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves, which the oracle recomputes from raw documents via the
     s9 collapse."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..sources import matview as mvx
     from ..sources.txtable import TxTable, apply_cdc
@@ -1395,73 +1240,66 @@ def s10_streaming_cdc_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_ids": "doc_id",
         "sum_chars": "length(text)",
     }
-    root = tempfile.mkdtemp(prefix=f"s10_{uuid.uuid4().hex[:8]}_")
-    try:
-        t = TxTable(spark, root + "/docs")
-        t.init(corpus)
-        mv = TxTable(spark, root + "/mv")
-        mvx.mv_init(mv, t.snapshot(), g, measures)
-        state = {"v": t.latest_version()}
-        feed_dir = os.path.join(root, "feed")
-        os.makedirs(feed_dir)
-        for i, band in enumerate(((0, 1, 2), (3, 4, 5), (6, 7, 8))):
-            changes.filter((did % 9).isin(*band)).coalesce(1).write.parquet(
-                os.path.join(feed_dir, f"batch_{i}.parquet")
-            )
-        feed = (
-            spark.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir + "/*")
+    root = scratch.dir
+    t = TxTable(spark, root + "/docs")
+    t.init(corpus)
+    mv = TxTable(spark, root + "/mv")
+    mvx.mv_init(mv, t.snapshot(), g, measures)
+    state = {"v": t.latest_version()}
+    feed_dir = os.path.join(root, "feed")
+    os.makedirs(feed_dir)
+    for i, band in enumerate(((0, 1, 2), (3, 4, 5), (6, 7, 8))):
+        changes.filter((did % 9).isin(*band)).coalesce(1).write.parquet(
+            os.path.join(feed_dir, f"batch_{i}.parquet")
         )
+    feed = (
+        spark.readStream.schema(changes.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed_dir + "/*")
+    )
 
-        def apply_and_refresh(batch: DataFrame, _bid: int) -> None:
-            apply_cdc(t, batch, "doc_id")
-            v_new = t.latest_version()
-            if v_new != state["v"]:  # no-op batches refresh nothing
-                mvx.mv_refresh(mv, t, g, measures, state["v"], v_new)
-                state["v"] = v_new
+    def apply_and_refresh(batch: DataFrame, _bid: int) -> None:
+        apply_cdc(t, batch, "doc_id")
+        v_new = t.latest_version()
+        if v_new != state["v"]:  # no-op batches refresh nothing
+            mvx.mv_refresh(mv, t, g, measures, state["v"], v_new)
+            state["v"] = v_new
 
-        q = (
-            feed.writeStream.foreachBatch(apply_and_refresh)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
+    scratch.drain(feed, apply_and_refresh)
+    rc = mvx.mv_aggregate(t.snapshot(), g, measures)
+    for c in (*measures, "n_rows"):
+        rc = rc.withColumnRenamed(c, f"rc_{c}")
+    exact = (
+        (F.col("n_docs") == F.col("rc_n_docs"))
+        & (F.col("sum_ids") == F.col("rc_sum_ids"))
+        & (F.col("sum_chars") == F.col("rc_sum_chars"))
+        & (F.col("n_rows") == F.col("rc_n_rows"))
+    )
+    return (
+        mv.snapshot()
+        .join(rc, on=g, how="full")
+        .select(
+            "lang",
+            # decimal state, long at the boundary (the t68 rule)
+            F.col("n_docs").cast("long").alias("n_docs"),
+            F.col("sum_ids").cast("long").alias("sum_ids"),
+            F.col("sum_chars").cast("long").alias("sum_chars"),
+            exact.alias("incremental_exact"),
         )
-        q.awaitTermination()
-        rc = mvx.mv_aggregate(t.snapshot(), g, measures)
-        for c in (*measures, "n_rows"):
-            rc = rc.withColumnRenamed(c, f"rc_{c}")
-        exact = (
-            (F.col("n_docs") == F.col("rc_n_docs"))
-            & (F.col("sum_ids") == F.col("rc_sum_ids"))
-            & (F.col("sum_chars") == F.col("rc_sum_chars"))
-            & (F.col("n_rows") == F.col("rc_n_rows"))
+        .withColumn(
+            "base_versions", F.lit(len(t.versions())).cast("long")
         )
-        out = (
-            mv.snapshot()
-            .join(rc, on=g, how="full")
-            .select(
-                "lang",
-                # decimal state, long at the boundary (the t68 rule)
-                F.col("n_docs").cast("long").alias("n_docs"),
-                F.col("sum_ids").cast("long").alias("sum_ids"),
-                F.col("sum_chars").cast("long").alias("sum_chars"),
-                exact.alias("incremental_exact"),
-            )
-            .withColumn(
-                "base_versions", F.lit(len(t.versions())).cast("long")
-            )
-            .withColumn(
-                "mv_versions", F.lit(len(mv.versions())).cast("long")
-            )
-            .orderBy("lang")
+        .withColumn(
+            "mv_versions", F.lit(len(mv.versions())).cast("long")
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("lang")
+    )
 
 
-def s17_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s17_streaming_interval_join(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Stream-STREAM interval join gate — the one Structured Streaming
     join family the s-suite lacked.  Drains
     streaming/ingest.attribute_stream: click→purchase attribution per
@@ -1477,35 +1315,25 @@ def s17_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently (test_streaming.test_attribute_stream_matches_batch_
     interval_join)."""
     import os
-    import uuid
 
     from ..streaming import ingest as st
 
     ev = st.stream_events(spark, os.path.join(sf_dir, "events.parquet"))
     pairs = st.attribute_stream(ev)  # cause=click, effect=purchase, 30 min
-    name = "s17_attrib_" + uuid.uuid4().hex[:8]
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = (
-        spark.table(name)
+    return (
+        scratch.drain(pairs, output_mode="append")
         .select(
             "user_id", "cause_id", "effect_id",
             "cause_ts", "effect_ts", "value",
         )
         .orderBy("user_id", "cause_id", "effect_id")
-        .localCheckpoint(eager=True)  # materialize before dropping the sink
     )
-    spark.catalog.dropTempView(name)
-    return result
 
 
-def s18_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
+@gate
+def s18_streaming_enrichment(
+    spark: SparkSession, sf_dir: str, scratch: Scratch
+) -> DataFrame:
     """Stream-static broadcast enrichment gate
     (streaming/ingest.enrich_stream — the streaming twin of the
     warehouse star join J1/J2): the events stream left-joins the
@@ -1518,7 +1346,6 @@ def s18_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     left join — and the oracle replays the whole thing as a DuckDB
     batch join."""
     import os
-    import uuid
 
     from ..streaming import ingest as st
 
@@ -1527,17 +1354,8 @@ def s18_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     enriched = st.enrich_stream(ev, dim, "user_id")
-    name = "s18_enrich_" + uuid.uuid4().hex[:8]
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = (
-        spark.table(name)
+    return (
+        scratch.drain(enriched, output_mode="append")
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -1545,13 +1363,11 @@ def s18_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             r2(dsum(F.col("value"))).alias("total_value"),
         )
         .orderBy("c_mktsegment")
-        .localCheckpoint(eager=True)  # materialize before dropping the sink
     )
-    spark.catalog.dropTempView(name)
-    return result
 
+@gate
 def s19_streaming_outer_interval_join(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, scratch: Scratch
 ) -> DataFrame:
     """LEFT OUTER stream-stream interval join gate
     (streaming/ingest.attribute_stream_outer — VERDICT r9 next #5):
@@ -1572,73 +1388,54 @@ def s19_streaming_outer_interval_join(
     tests/test_streaming.py."""
     import datetime as _dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..streaming import ingest as st
 
     events = table(spark, sf_dir, "events")
     hi = events.agg(F.max("ts")).collect()[0][0]
     far = hi + _dt.timedelta(days=10)
-    base = tempfile.mkdtemp(prefix=f"s19_{uuid.uuid4().hex[:8]}_")
-    name = "s19_outer_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(base, "ev")
-        sent = spark.createDataFrame(
-            [
-                (-1, far, -1, "click", None, None),
-                (-2, far, -2, "purchase", None, None),
-            ],
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string",
+    src = os.path.join(scratch.dir, "ev")
+    sent = spark.createDataFrame(
+        [
+            (-1, far, -1, "click", None, None),
+            (-2, far, -2, "purchase", None, None),
+        ],
+        "event_id long, ts timestamp, user_id long, "
+        "event_type string, value double, props string",
+    )
+    for fname, part, mtime in (
+        ("f1.parquet", events, 1000),
+        ("f2.parquet", sent, 2000),
+    ):
+        p = os.path.join(src, fname)
+        part.coalesce(1).write.parquet(p)
+        for root, _, fs in os.walk(p):
+            for f in fs:
+                os.utime(os.path.join(root, f), (mtime, mtime))
+    raw = (
+        spark.readStream.schema(st.EVENTS_RAW_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+    )
+    ev = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    pairs = st.attribute_stream_outer(ev)
+    return (
+        scratch.drain(pairs, output_mode="append")
+        .filter(F.col("user_id") >= 0)
+        .select(
+            "user_id", "cause_id", "cause_ts",
+            "effect_id", "effect_ts", "value",
         )
-        for fname, part, mtime in (
-            ("f1.parquet", events, 1000),
-            ("f2.parquet", sent, 2000),
-        ):
-            p = os.path.join(src, fname)
-            part.coalesce(1).write.parquet(p)
-            for root, _, fs in os.walk(p):
-                for f in fs:
-                    os.utime(os.path.join(root, f), (mtime, mtime))
-        raw = (
-            spark.readStream.schema(st.EVENTS_RAW_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
+        .orderBy(
+            "user_id", "cause_id",
+            F.coalesce(F.col("effect_id"), F.lit(-1)),
         )
-        ev = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        pairs = st.attribute_stream_outer(ev)
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        result = (
-            spark.table(name)
-            .filter(F.col("user_id") >= 0)
-            .select(
-                "user_id", "cause_id", "cause_ts",
-                "effect_id", "effect_ts", "value",
-            )
-            .orderBy(
-                "user_id", "cause_id",
-                F.coalesce(F.col("effect_id"), F.lit(-1)),
-            )
-            .localCheckpoint(eager=True)  # materialize before dropping
-        )
-        spark.catalog.dropTempView(name)
-        return result
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    )
 
 
+@gate
 def s20_streaming_multihop_pipeline(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, scratch: Scratch
 ) -> DataFrame:
     """CONTINUOUS MULTI-HOP LAKEHOUSE PIPELINE (VERDICT r10 next #7):
     bronze -> silver -> gold chained end-to-end through the TxTable
@@ -1669,10 +1466,6 @@ def s20_streaming_multihop_pipeline(
     downstream (``silver_autocompacted`` + the equality pins), and the
     per-source measures themselves, which the oracle recomputes from
     raw documents."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..sources.matview import mv_apply_changes, mv_aggregate, mv_init
     from ..sources.txstream import stream_table_changes
     from ..sources.txtable import TxTable, apply_cdc
@@ -1680,130 +1473,121 @@ def s20_streaming_multihop_pipeline(
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    base = tempfile.mkdtemp(prefix=f"s20_{_uuid.uuid4().hex[:8]}_")
+    base = scratch.dir
     g = ["source"]
     measures = {
         "n_docs": "1",
         "sum_chars": "n_chars",
         "sum_twice": "twice_chars",
     }
-    try:
-        bronze = TxTable(spark, base + "/bronze")
-        silver = TxTable(spark, base + "/silver")
-        gold = TxTable(spark, base + "/gold")
-        silver.init(
-            spark.createDataFrame(
-                [],
-                "doc_id long, source string, n_chars long, "
-                "twice_chars long",
-            )
+    bronze = TxTable(spark, base + "/bronze")
+    silver = TxTable(spark, base + "/silver")
+    gold = TxTable(spark, base + "/gold")
+    silver.init(
+        spark.createDataFrame(
+            [],
+            "doc_id long, source string, n_chars long, "
+            "twice_chars long",
         )
-        mv_init(gold, silver.snapshot(), g, measures)
+    )
+    mv_init(gold, silver.snapshot(), g, measures)
 
-        def hop1(batch: DataFrame, _bid: int) -> None:
-            ch = batch.select(
-                "doc_id",
-                "source",
-                "n_chars",
-                (F.col("n_chars") * 2).alias("twice_chars"),
-                F.when(F.col("_change_type") == "delete", "D")
-                .otherwise("U")
-                .alias("op"),
-                (
-                    F.col("_commit_version") * 2
-                    + (F.col("_change_type") == "insert").cast("long")
-                ).alias("seq"),
-            ).filter(
-                # curation predicate: an insert failing it was never
-                # silver's row (bronze rows are immutable), so drop it;
-                # deletes pass through (an unmatched delete is a no-op)
-                (F.col("op") == "D") | (F.col("n_chars") % 2 == 0)
-            )
-            if ch.isEmpty():
-                return
-            apply_cdc(silver, ch, "doc_id")
-            # hop-local auto-compaction: 'optimize' commits are
-            # data-preserving, so hop 2's feed skips them
-            silver.optimize_small(1 << 20)
+    def hop1(batch: DataFrame, _bid: int) -> None:
+        ch = batch.select(
+            "doc_id",
+            "source",
+            "n_chars",
+            (F.col("n_chars") * 2).alias("twice_chars"),
+            F.when(F.col("_change_type") == "delete", "D")
+            .otherwise("U")
+            .alias("op"),
+            (
+                F.col("_commit_version") * 2
+                + (F.col("_change_type") == "insert").cast("long")
+            ).alias("seq"),
+        ).filter(
+            # curation predicate: an insert failing it was never
+            # silver's row (bronze rows are immutable), so drop it;
+            # deletes pass through (an unmatched delete is a no-op)
+            (F.col("op") == "D") | (F.col("n_chars") % 2 == 0)
+        )
+        if ch.isEmpty():
+            return
+        apply_cdc(silver, ch, "doc_id")
+        # hop-local auto-compaction: 'optimize' commits are
+        # data-preserving, so hop 2's feed skips them
+        silver.optimize_small(1 << 20)
 
-        def hop2(batch: DataFrame, _bid: int) -> None:
-            if batch.isEmpty():
-                return
-            mv_apply_changes(gold, batch, g, measures)
+    def hop2(batch: DataFrame, _bid: int) -> None:
+        if batch.isEmpty():
+            return
+        mv_apply_changes(gold, batch, g, measures)
 
-        def drain() -> None:
-            for path, fn, ck in (
-                (base + "/bronze", hop1, base + "/ckpt1"),
-                (base + "/silver", hop2, base + "/ckpt2"),
-            ):
-                q = (
-                    stream_table_changes(spark, path)
-                    .writeStream.foreachBatch(fn)
-                    .option("checkpointLocation", ck)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+    def drain() -> None:
+        for path, fn, ck in (
+            (base + "/bronze", hop1, "ckpt1"),
+            (base + "/silver", hop2, "ckpt2"),
+        ):
+            scratch.drain(
+                stream_table_changes(spark, path), fn, checkpoint=ck
+            )
 
-        did = F.col("doc_id")
-        bronze.init(docs.filter(did % 3 == 0).coalesce(2))
-        bronze.append(docs.filter(did % 3 == 1).coalesce(1))
-        drain()
-        bronze.delete(did % 7 == 0)
-        drain()
-        bronze.append(docs.filter(did % 3 == 2).coalesce(1))
-        drain()
-        v_s, v_g = silver.latest_version(), gold.latest_version()
-        drain()  # restart on the same checkpoints: nothing new
-        restart_noop = (
-            silver.latest_version() == v_s and gold.latest_version() == v_g
+    did = F.col("doc_id")
+    bronze.init(docs.filter(did % 3 == 0).coalesce(2))
+    bronze.append(docs.filter(did % 3 == 1).coalesce(1))
+    drain()
+    bronze.delete(did % 7 == 0)
+    drain()
+    bronze.append(docs.filter(did % 3 == 2).coalesce(1))
+    drain()
+    v_s, v_g = silver.latest_version(), gold.latest_version()
+    drain()  # restart on the same checkpoints: nothing new
+    restart_noop = (
+        silver.latest_version() == v_s and gold.latest_version() == v_g
+    )
+    silver_autocompacted = any(
+        h["op"] == "optimize" for h in silver.history()
+    )
+    # silver == the batch transform of FINAL bronze
+    want_silver = (
+        bronze.snapshot()
+        .filter(F.col("n_chars") % 2 == 0)
+        .select(
+            "doc_id",
+            "source",
+            "n_chars",
+            (F.col("n_chars") * 2).alias("twice_chars"),
         )
-        silver_autocompacted = any(
-            h["op"] == "optimize" for h in silver.history()
+    )
+    got_silver = silver.snapshot().select(
+        "doc_id", "source", "n_chars", "twice_chars"
+    )
+    silver_matches_batch = (
+        got_silver.exceptAll(want_silver).isEmpty()
+        and want_silver.exceptAll(got_silver).isEmpty()
+    )
+    # gold == from-scratch aggregate of silver (decimal state,
+    # n_rows included)
+    rc = mv_aggregate(got_silver, g, measures)
+    gold_state = gold.snapshot().select(rc.columns)
+    chain_exact = (
+        gold_state.exceptAll(rc).isEmpty()
+        and rc.exceptAll(gold_state).isEmpty()
+    )
+    return (
+        gold.snapshot()
+        .select(
+            "source",
+            F.col("n_docs").cast("long").alias("n_docs"),
+            F.col("sum_chars").cast("long").alias("sum_chars"),
+            F.col("sum_twice").cast("long").alias("sum_twice"),
         )
-        # silver == the batch transform of FINAL bronze
-        want_silver = (
-            bronze.snapshot()
-            .filter(F.col("n_chars") % 2 == 0)
-            .select(
-                "doc_id",
-                "source",
-                "n_chars",
-                (F.col("n_chars") * 2).alias("twice_chars"),
-            )
+        .withColumn("bronze_versions", F.lit(4).cast("long"))
+        .withColumn("silver_matches_batch", F.lit(silver_matches_batch))
+        .withColumn("chain_exact", F.lit(chain_exact))
+        .withColumn("restart_noop", F.lit(restart_noop))
+        .withColumn(
+            "silver_autocompacted", F.lit(silver_autocompacted)
         )
-        got_silver = silver.snapshot().select(
-            "doc_id", "source", "n_chars", "twice_chars"
-        )
-        silver_matches_batch = (
-            got_silver.exceptAll(want_silver).isEmpty()
-            and want_silver.exceptAll(got_silver).isEmpty()
-        )
-        # gold == from-scratch aggregate of silver (decimal state,
-        # n_rows included)
-        rc = mv_aggregate(got_silver, g, measures)
-        gold_state = gold.snapshot().select(rc.columns)
-        chain_exact = (
-            gold_state.exceptAll(rc).isEmpty()
-            and rc.exceptAll(gold_state).isEmpty()
-        )
-        return (
-            gold.snapshot()
-            .select(
-                "source",
-                F.col("n_docs").cast("long").alias("n_docs"),
-                F.col("sum_chars").cast("long").alias("sum_chars"),
-                F.col("sum_twice").cast("long").alias("sum_twice"),
-            )
-            .withColumn("bronze_versions", F.lit(4).cast("long"))
-            .withColumn("silver_matches_batch", F.lit(silver_matches_batch))
-            .withColumn("chain_exact", F.lit(chain_exact))
-            .withColumn("restart_noop", F.lit(restart_noop))
-            .withColumn(
-                "silver_autocompacted", F.lit(silver_autocompacted)
-            )
-            .orderBy("source")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .orderBy("source")
+    )

@@ -20,7 +20,7 @@ horizon.  Sessionization shuffles on user_id; state per key is O(1).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -535,37 +535,34 @@ def neardup_stream(
 
 def run_available_now(
     stream_df: DataFrame,
-    view_name: str,
+    sink: str | Callable[[DataFrame, int], None],
     output_mode: str | None = None,
-    materialize: bool = False,
-) -> DataFrame:
-    """Drain the stream with trigger(availableNow) into a memory sink and
-    return the materialized result — the test/bench harness for streaming
-    plans (production would writeStream to parquet/Kafka instead).
+    checkpoint_dir: str | None = None,
+) -> DataFrame | None:
+    """Drain the stream with trigger(availableNow) — the one place the
+    package builds such a query (gates reach it through the gate
+    scaffold's ``Scratch.drain``).  ``sink`` is either a view name, for
+    a memory sink whose table is returned (the caller drops the view),
+    or a ``foreachBatch`` function, and then None is returned.
 
-    Default mode is update (aggregations emit refined results per batch);
-    stream-stream joins are append-only by Spark's rules — pass
-    output_mode="append" for those.  ``materialize=True`` additionally
-    localCheckpoints the drained rows and drops the temp view, so the
-    caller gets a self-contained relation that survives further queries
-    against the same view name (the s8/s11/s12 sketch-gate protocol)."""
-    spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(view_name)
-        .outputMode(
-            output_mode
-            or ("update" if stream_df.isStreaming else "append")
+    The memory sink's default mode is update (aggregations emit refined
+    results per batch); stream-stream joins are append-only by Spark's
+    rules — pass output_mode="append" for those."""
+    w = stream_df.writeStream.trigger(availableNow=True)
+    if checkpoint_dir is not None:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    else:
+        w = w.format("memory").queryName(sink).outputMode(
+            output_mode or "update"
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(view_name)
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(view_name)
-    return out
+    q = w.start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    return None if callable(sink) else stream_df.sparkSession.table(sink)
 
 
 def stream_equals_batch(stream_result: DataFrame, batch_result: DataFrame) -> bool:
@@ -600,10 +597,4 @@ def stream_to_bronze(
             .parquet(dst_dir)
         )
 
-    q = (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(events, write_batch, checkpoint_dir=checkpoint_dir)
