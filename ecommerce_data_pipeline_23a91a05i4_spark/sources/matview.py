@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..functions.exprs import DEC
-from .txtable import TxTable
+from .txtable import TxTable, _bounded_broadcast
 
 #: change-type tags in the table_changes feed (Delta CDF vocabulary)
 CHANGE_INSERT = "insert"
@@ -215,27 +215,6 @@ def mv_stamp_write(mv: TxTable, key: str, version: int) -> None:
     )
 
 
-def _estimated_row_bytes(schema: StructType) -> int:
-    """Pessimistic per-row byte estimate for broadcast sizing: fixed
-    widths from the type, 48 bytes assumed per string/binary/array
-    field (group keys are typically short identifiers/terms; the
-    constant errs high so the 256 MiB byte bound trips BEFORE the
-    driver builds an oversized broadcast)."""
-    fixed = {
-        "boolean": 1, "byte": 1, "short": 2, "int": 4, "integer": 4,
-        "long": 8, "float": 4, "double": 8, "date": 4,
-        "timestamp": 8, "timestamp_ntz": 8,
-    }
-    total = 0
-    for f in schema.fields:
-        name = f.dataType.typeName()
-        if name.startswith("decimal"):
-            total += 16
-        else:
-            total += fixed.get(name, 48)
-    return max(total, 1)
-
-
 def _null_group_error(verb: str, group_cols: list[str]) -> ValueError:
     """THE null-group rejection — one message, one semantics, for every
     path that materializes or refreshes an MV (ADVICE r12: the refresh
@@ -276,7 +255,10 @@ def _reject_null_groups(
         return (agg, None) if with_count else agg
     nullish = functools.reduce(or_, (F.col(c).isNull() for c in group_cols))
     if with_count:
-        chk = agg.agg(
+        # one task over the materialized (delta-sized) aggregate: the
+        # global aggregate then needs no exchange, so the probe is ONE
+        # job
+        chk = agg.coalesce(1).agg(
             F.count(F.lit(1)).alias("_n"),
             F.max(
                 F.when(nullish, F.lit(1)).otherwise(F.lit(0))
@@ -401,6 +383,14 @@ def mv_apply_changes(
     Returns the committed MV version (the current one on a net-no-op
     change set).
 
+    The signed delta and the joined new group state are each
+    materialized once, and one aggregate over the latter picks the
+    branch (no-op, pure-insert append, or merge).  The delta's group
+    keys are broadcast into the MV-side semi join when they fit the
+    bound of txtable._bounded_broadcast — the key-set policy merge()
+    shares, whose own key broadcast and single survivors-plus-upserts
+    write then carry the commit.
+
     ``extra`` rides on the refresh's own append/merge commit manifest
     (the crash-atomic stamp channel, see mv_init).  A net-no-op change
     set commits NOTHING — extra is then not recorded, and the caller's
@@ -454,20 +444,14 @@ def mv_apply_changes(
     # the count reads the materialized blocks, not a recompute) the
     # semi join is FORCED to broadcast it, making the refresh's join
     # cost one columnar MV scan + O(delta); a genuinely huge delta (a
-    # backfill) falls back to the planner's shuffled join.  The bound
-    # is BYTES, not rows (ADVICE r11: wide string group keys at a
-    # fixed row cap could build a multi-GB driver broadcast):
-    # schema-estimated key width × rows ≤ 256 MiB, with a row
-    # backstop for degenerate width estimates.
-    keys = delta.select(*group_cols)
+    # backfill) falls back to the planner's shuffled join
+    # (txtable._bounded_broadcast, the policy merge() shares).
     n_delta = (
         n_delta_precomputed
         if n_delta_precomputed is not None
         else delta.count()
     )
-    if n_delta * _estimated_row_bytes(keys.schema) <= 256 * 1024 * 1024 \
-            and n_delta <= 8_000_000:
-        keys = F.broadcast(keys)
+    keys = _bounded_broadcast(delta.select(*group_cols), n_delta)
     joined = delta.join(
         old.join(keys, on=group_cols, how="leftsemi"),
         on=group_cols,
@@ -501,9 +485,19 @@ def mv_apply_changes(
         # count by the shuffle parallelism
         source = source.repartition(F.col(pcol))
     source = source.localCheckpoint(eager=True)
-    if source.isEmpty():
+    # ONE single-task aggregate over the delta-sized checkpoint (one
+    # job, no exchange) answers the three branch questions: any row,
+    # any matched group, any unmatched dead group
+    flags = source.coalesce(1).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.col("_mv_matched").cast("int")).alias("matched"),
+        F.max(
+            (F.col("_mv_dead") & ~F.col("_mv_matched")).cast("int")
+        ).alias("dead"),
+    ).collect()[0]
+    if not flags["n"]:
         return mv.latest_version()
-    if source.filter(F.col("_mv_matched")).isEmpty():
+    if not flags["matched"]:
         # PURE-INSERT delta — every affected group is NEW (the
         # streaming shape: an append-only base never revisits a
         # group like a postings index fed fresh doc_ids).  merge()'s
@@ -515,8 +509,7 @@ def mv_apply_changes(
         # row-for-row, which the nonzero filter already dropped
         # (transform is row-local and deterministic, so cancellation
         # is exact) — guarded loudly all the same.
-        dead = source.filter(F.col("_mv_dead"))
-        if not dead.isEmpty():
+        if flags["dead"]:
             raise RuntimeError(
                 "mv_apply_changes: unmatched group with net-zero rows "
                 "but nonzero measures — the transform is not row-local"

@@ -265,6 +265,60 @@ def _parse_ddl_type(ddl: str):
     return StructType.fromDDL(f"x {ddl}")[0].dataType
 
 
+def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` as a local relation: collecting it
+    launches no Spark job and no Python worker, where
+    ``createDataFrame([], schema)`` parallelizes an empty list through
+    one Python task per core on every evaluation."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        to_arrow_schema(schema).empty_table(), schema=schema
+    )
+
+
+def _estimated_row_bytes(schema: StructType) -> int:
+    """Pessimistic per-row byte estimate for broadcast and file sizing:
+    fixed widths from the type, 48 bytes assumed per string/binary/
+    array field (keys are typically short identifiers/terms; the
+    constant errs high so the broadcast byte bound trips BEFORE the
+    driver builds an oversized broadcast)."""
+    fixed = {
+        "boolean": 1, "byte": 1, "short": 2, "int": 4, "integer": 4,
+        "long": 8, "float": 4, "double": 8, "date": 4,
+        "timestamp": 8, "timestamp_ntz": 8,
+    }
+    total = 0
+    for f in schema.fields:
+        name = f.dataType.typeName()
+        if name.startswith("decimal"):
+            total += 16
+        else:
+            total += fixed.get(name, 48)
+    return max(total, 1)
+
+
+def _bounded_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` hinted for broadcast when its KNOWN row count fits the
+    bound, else unchanged (the planner's shuffled join).  The bound is
+    BYTES, not rows (ADVICE r11: wide string keys at a fixed row cap
+    could build a multi-GB driver broadcast): schema-estimated row
+    width × rows ≤ 256 MiB, with an 8M-row backstop for degenerate
+    width estimates.  The one broadcast policy for the delta-sized key
+    sets of merge() and matview.mv_apply_changes."""
+    if (
+        n_rows <= 8_000_000
+        and n_rows * _estimated_row_bytes(df.schema) <= 256 * 1024 * 1024
+    ):
+        return F.broadcast(df)
+    return df
+
+
+class _NotUniqueError(ValueError):
+    """merge()'s duplicate-key rejection, typed so apply_cdc can report
+    a duplicate ``(key, seq)`` event in its own terms."""
+
+
 class TxTable:
     """Handle on one manifest-log table rooted at ``path``.
 
@@ -911,7 +965,7 @@ class TxTable:
             if _with_pos:
                 out_schema = out_schema.add("_tx_key", "string")
                 out_schema = out_schema.add("_tx_pos", "long")
-            return self.spark.createDataFrame([], out_schema)
+            return _empty_frame(self.spark, out_schema)
         if pcol is None:
             phys_schema = StructType(
                 [
@@ -965,6 +1019,18 @@ class TxTable:
         return out.select(sel)
 
     # ---------------------------------------------------------- writes
+    def _split_count(self, n_rows: int, schema: StructType) -> int:
+        """Files for ``n_rows`` rows about to be staged: their
+        schema-estimated bytes over the session's read split size
+        (``spark.sql.files.maxPartitionBytes``), at least one — about
+        one reader task's split per staged file."""
+        split = (
+            self.spark._jsparkSession.sessionState()
+            .conf()
+            .filesMaxPartitionBytes()
+        )
+        return max(1, -(-n_rows * _estimated_row_bytes(schema) // split))
+
     def _stage(
         self,
         df: DataFrame,
@@ -3057,10 +3123,24 @@ class TxTable:
         matched key are read twice and rewritten (matched rows swapped
         for their source version, the rest carried within the rewrite);
         every untouched file carries into the child manifest by
-        reference, and inserts stage as fresh files.  Cost is therefore
-        O(hit files + |source|), not O(table) — the property that makes
-        minute-cadence CDC apply viable on a 100 TB table where almost
-        every batch touches a tiny key range.
+        reference.  The rewritten survivors and the upserted rows stage
+        in ONE write (one job, one commit dir); the upserts take a file
+        count derived from their row count (schema-estimated bytes over
+        ``spark.sql.files.maxPartitionBytes``), not the source's
+        partitioning.  Cost is therefore O(hit files + |source|), not
+        O(table) — the property that makes minute-cadence CDC apply
+        viable on a 100 TB table where almost every batch touches a
+        tiny key range.
+
+        The source is evaluated once (an eager local checkpoint), and
+        one validation aggregate over it checks the key preconditions
+        and counts its keys and upsert rows.  With the key count known,
+        the source key set is BROADCAST to both the hit-file detection
+        semi-join and the survivors anti-join whenever it fits the
+        byte/row bound of :func:`_bounded_broadcast` (the policy
+        matview.mv_apply_changes shares), so neither join shuffles the
+        table side; a key set past the bound falls back to the
+        planner's shuffled joins.
 
         On a table that records STATS for the merge keys (``stats_col``
         — opt in, because every staged file then pays the one-pass
@@ -3123,17 +3203,26 @@ class TxTable:
         # over the group keys == min/max over the source rows): they
         # feed the stats-based manifest pruning of the hit-file
         # detection below (optimization r13) at zero extra jobs
+        # The same pass also counts the upsert rows (sizing the insert
+        # files, and the nothing-to-insert fast path) and the key
+        # groups (which, once uniqueness holds, is the key-set size
+        # that bounds the key broadcast below).
         chk_aggs = [
             F.sum(F.when(nullish, F.col("_c")).otherwise(F.lit(0)))
             .alias("_null_rows"),
             F.max("_c").alias("_max_c"),
+            F.sum("_u").alias("_upserts"),
+            F.count(F.lit(1)).alias("_keys"),
         ]
         for i, k in enumerate(keys):
             chk_aggs.append(F.min(F.col(k)).alias(f"_lo_{i}"))
             chk_aggs.append(F.max(F.col(k)).alias(f"_hi_{i}"))
         chk = (
             src.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_c"))
+            .agg(
+                F.count(F.lit(1)).alias("_c"),
+                F.sum((~is_del).cast("long")).alias("_u"),
+            )
             .agg(*chk_aggs)
             .collect()[0]
         )
@@ -3144,11 +3233,12 @@ class TxTable:
                 "would silently turn updates into inserts"
             )
         if (chk["_max_c"] or 0) > 1:
-            raise ValueError(
+            raise _NotUniqueError(
                 f"merge: source is not unique on {keys} — ambiguous which "
                 "row should win; pre-aggregate (see apply_cdc's latest-wins "
                 "by sequence column)"
             )
+        n_upserts = chk["_upserts"] or 0
         # stats-prunable key bounds: a target row matching some source
         # key has, in EVERY key column, a value inside the source's
         # [min, max] for that column — so a file whose recorded stats
@@ -3197,8 +3287,10 @@ class TxTable:
         src, gen_guards = self._complete_generated(src, _generated(m0))
         self._check_schema(src.drop(*([delete_col] if delete_col else [])), schema)
         upserts = src.filter(~is_del).select(data_cols)
-        ups_empty = upserts.isEmpty()
-        src_keys = src.select(keys).distinct()
+        # already proven unique on the keys, and delta-sized: broadcast
+        # whenever the counted key set fits, so neither the detection
+        # semi-join nor the survivors anti-join shuffles the table side
+        src_keys = _bounded_broadcast(src.select(keys), chk["_keys"])
         for _ in range(max_retries):
             m = self.manifest()
             # the source was validated and projected against m0's layout;
@@ -3253,7 +3345,7 @@ class TxTable:
                 .distinct()
                 .collect()
             ]
-            if not hit_uris and (ups_empty or not insert_unmatched):
+            if not hit_uris and (not n_upserts or not insert_unmatched):
                 return m["version"]  # nothing matched, nothing to insert
             hit_keys = {
                 _commit_rel(unquote(u.split("://", 1)[-1])) for u in hit_uris
@@ -3296,15 +3388,25 @@ class TxTable:
                 survivors = survivors.coalesce(max(1, len(hit_uris)))
             if new_fields and evolved_cmap is not _INHERIT:
                 mapping = dict(evolved_cmap)
-            cons = _constraints(m) + gen_guards
-            staged = (
-                self._stage(survivors, pcol, mapping, cons) if hit_uris else []
-            )
-            if not ups_empty:
+            # survivors and upserts stage as ONE write (one job, one
+            # commit dir, one stats/bloom pass)
+            parts = [survivors] if hit_uris else []
+            if n_upserts:
                 ins = upserts
                 if not insert_unmatched:
                     ins = ins.join(snap.select(keys), on=keys, how="leftsemi")
-                staged += self._stage(ins, pcol, mapping, cons)
+                # the upserts never inherit the source's partitioning (a
+                # 20-row upsert spread over 4 tasks staged 4 files): one
+                # file per read split of their estimated bytes
+                parts.append(
+                    ins.coalesce(self._split_count(n_upserts, ins.schema))
+                )
+            staged = self._stage(
+                functools.reduce(DataFrame.unionByName, parts),
+                pcol,
+                mapping,
+                _constraints(m) + gen_guards,
+            )
             try:
                 self._commit(
                     carry + staged,
@@ -3500,31 +3602,40 @@ def apply_cdc(
     The collapse is one window over the BATCH (delta-sized, not
     table-sized); the apply inherits merge()'s file-granular cost —
     O(hit files + batch), the property that makes minute-cadence CDC
-    viable at 100 TB."""
+    viable at 100 TB.  The same window pass flags the ``(key, seq)``
+    duplicates (a non-first event whose predecessor carries the same
+    seq, NULL-safe), so the feed is evaluated once — by merge()'s own
+    checkpoint — and the ambiguity check costs no job of its own.  A
+    feed that also has NULL keys fails on merge()'s NULL-key check
+    first."""
     keys = [on] if isinstance(on, str) else list(on)
-    amb = (
-        changes.groupBy(*keys, seq_col)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
+    w = Window.partitionBy(*keys).orderBy(F.desc(seq_col))
+    # one window pass ranks the events AND flags each (key, seq)
+    # duplicate: equal sequence numbers sort next to each other, so a
+    # duplicate is a non-first row whose predecessor carries the same
+    # seq (null-safe: two NULL-seq events on a key collide too).  The
+    # flagged rows ride along with each key's winner, so an ambiguous
+    # key reaches merge() twice and fails its uniqueness validation —
+    # the feed is evaluated once, by merge()'s own materialization.
+    latest = (
+        changes.withColumn("_cdc_rn", F.row_number().over(w))
+        .withColumn(
+            "_cdc_dup", F.lag(seq_col).over(w).eqNullSafe(F.col(seq_col))
+        )
+        .filter((F.col("_cdc_rn") == 1) | F.col("_cdc_dup"))
+        .withColumn("_cdc_delete", F.col(op_col) == F.lit(delete_op))
+        .drop("_cdc_rn", "_cdc_dup", op_col, seq_col)
     )
-    if amb:
+    try:
+        return table.merge(
+            latest, on, delete_col="_cdc_delete", max_retries=max_retries
+        )
+    except _NotUniqueError:
         raise ValueError(
             f"apply_cdc: ({keys} + {seq_col!r}) is not unique in the change "
             "feed — concurrent events at one sequence number have no "
             "defined winner"
-        )
-    w = Window.partitionBy(*keys).orderBy(F.desc(seq_col))
-    latest = (
-        changes.withColumn("_cdc_rn", F.row_number().over(w))
-        .filter(F.col("_cdc_rn") == 1)
-        .withColumn("_cdc_delete", F.col(op_col) == F.lit(delete_op))
-        .drop("_cdc_rn", op_col, seq_col)
-    )
-    return table.merge(
-        latest, on, delete_col="_cdc_delete", max_retries=max_retries
-    )
+        ) from None
 
 
 # ------------------------------------------------- transactional SCD2 merge
@@ -3583,7 +3694,7 @@ def scd2_merge_tx(
             # mapping-aware physical read with logical output names
             current = table._read_entries(data_schema, None, hit, mapping=mapping)
         else:  # all-new buckets: merge against an empty current slice
-            current = table.spark.createDataFrame([], data_schema)
+            current = _empty_frame(table.spark, data_schema)
         merged = scd2_merge(
             current, updates, business_key, tracked, run_date
         ).withColumn(

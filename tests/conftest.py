@@ -1,7 +1,9 @@
 from __future__ import annotations
 
 import sys
+import uuid
 import warnings
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -18,6 +20,28 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("pytest")
     yield s
+
+
+@pytest.fixture
+def jobs(spark):
+    """``with jobs(group) as ids:`` collects the ids of the Spark jobs
+    launched inside the block (``group`` names the block; a unique
+    suffix keeps repeated names apart)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def collect(group: str):
+        tag = f"{group}-{uuid.uuid4().hex}"
+        ids: list[int] = []
+        sc.setJobGroup(tag, group)
+        try:
+            yield ids
+        finally:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(tag))
+            sc.setJobGroup("", "")
+
+    return collect
 
 
 @pytest.fixture(scope="session")

@@ -10,7 +10,6 @@ import os
 import subprocess
 import sys
 import textwrap
-from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -32,20 +31,6 @@ ANALYTICS = [
 ]
 
 
-@contextmanager
-def _jobs(spark, group: str):
-    """Collect the ids of the Spark jobs launched inside the block."""
-    sc = spark.sparkContext
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-        sc.setJobGroup("", "")
-
-
 def _write(path: str, table: pa.Table) -> None:
     os.makedirs(path, exist_ok=True)
     for name in os.listdir(path):
@@ -55,16 +40,16 @@ def _write(path: str, table: pa.Table) -> None:
 
 @pytest.mark.parametrize("scheme", ["", "file://"])
 def test_unchanged_table_is_read_without_inference_job(
-    spark, tmp_path, scheme
+    spark, jobs, tmp_path, scheme
 ):
     """Local paths are signed through PosixFS, URIs through HadoopFS."""
     _write(str(tmp_path / "region.parquet"),
            pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}))
     sf_dir = scheme + str(tmp_path)
     first = catalog.table(spark, sf_dir, "region")
-    with _jobs(spark, f"schema_cache_hit_{scheme}") as jobs:
+    with jobs("schema_cache_hit") as ids:
         again = catalog.table(spark, sf_dir, "region")
-    assert jobs == []
+    assert ids == []
     assert again.schema == first.schema
     assert sorted(again.collect()) == sorted(first.collect())
 

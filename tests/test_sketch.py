@@ -264,21 +264,16 @@ def test_geometry_mismatch_fails_loudly(spark):
         est2.collect()
 
 
-def test_geometry_guard_adds_no_extra_job(spark):
+def test_geometry_guard_adds_no_extra_job(spark, jobs):
     """The guard must not launch a separate Spark job before the
     estimate itself runs: building the estimate DataFrame is free."""
-    sc = spark.sparkContext
     df = spark.createDataFrame([("a",), ("b",)], "k string")
     cms = sk.cms_build(df, ["k"])
     regs = sk.hll_registers(df, ["k"], p=4)
-    sc.setJobGroup("geom_guard_probe", "estimate construction")
-    try:
+    with jobs("geom_guard_probe") as ids:
         sk.cms_estimate(cms, df.distinct(), ["k"])
         sk.hll_estimate(regs, p=4)
-        jobs = sc.statusTracker().getJobIdsForGroup("geom_guard_probe")
-    finally:
-        sc.setJobGroup("", "")
-    assert not jobs, "estimate construction launched a Spark job"
+    assert not ids, "estimate construction launched a Spark job"
 
 
 def test_cms_estimate_plan_is_broadcast_lookup(spark):

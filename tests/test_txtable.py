@@ -714,6 +714,38 @@ def test_merge_validations_are_loud(spark, tmp_path):
         )
 
 
+def test_merge_stages_small_inserts_as_one_file(spark, tmp_path):
+    """A 20-row upsert of new keys spread over 4 partitions stages one
+    file: the upsert's file count follows its row count, not the
+    source's partitioning."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.init(_df(spark, [(1, "a")]))
+    rows = spark.sparkContext.parallelize(
+        [(k, f"v{k}") for k in range(100, 120)], 4
+    )
+    src = spark.createDataFrame(rows, "k long, v string")
+    assert src.rdd.getNumPartitions() == 4
+    t.merge(src, "k")
+    assert t.history()[-1]["metrics"] == {
+        "files_added": 1, "files_removed": 0,
+    }
+    assert t.snapshot().count() == 21
+
+
+def test_empty_entry_read_launches_no_job(spark, jobs, tmp_path):
+    """An empty entry set (a diff with no removed files, a fully pruned
+    merge scan) reads as a local relation: no Spark job, no Python
+    worker."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.init(_df(spark, [(1, "a")]))
+    schema = t.snapshot().schema
+    with jobs("empty_read") as ids:
+        rows = t._read_entries(schema, None, []).collect()
+    assert rows == [] and ids == []
+    got = t._read_entries(schema, None, [], _with_file=True, _with_pos=True)
+    assert got.columns == ["k", "v", "_tx_file", "_tx_key", "_tx_pos"]
+
+
 def test_merge_noop_and_insert_unmatched_false(spark, tmp_path):
     t = TxTable(spark, str(tmp_path / "t"))
     t.init(_df(spark, [(1, "a")]))
@@ -749,12 +781,38 @@ def test_apply_cdc_latest_wins_and_ambiguity(spark, tmp_path):
     assert {(r.k, r.v) for r in t.snapshot().collect()} == {
         (2, "B2"), (5, "e2"),
     }
-    dup = spark.createDataFrame(
+    events = "k long, v string, op string, seq long"
+    for dup in (
         [(7, "x", "U", 1), (7, "y", "U", 1)],
-        "k long, v string, op string, seq long",
-    )
+        # the duplicate sits below the winning seq
+        [(7, "x", "U", 1), (7, "y", "U", 1), (7, "z", "U", 2)],
+        [(7, "x", "U", None), (7, "y", "U", None)],
+    ):
+        with pytest.raises(ValueError, match="not unique"):
+            apply_cdc(t, spark.createDataFrame(dup, events), "k")
+    two_col = "k long, j long, v string, op string, seq long"
+    t2 = TxTable(spark, str(tmp_path / "t2"))
+    t2.init(spark.createDataFrame([(1, 1, "a")], "k long, j long, v string"))
     with pytest.raises(ValueError, match="not unique"):
-        apply_cdc(t, dup, "k")
+        apply_cdc(
+            t2,
+            spark.createDataFrame(
+                [(1, 1, "x", "U", 5), (1, 2, "y", "U", 5), (1, 1, "z", "U", 5)],
+                two_col,
+            ),
+            ["k", "j"],
+        )
+    assert t.latest_version() == 2 and t2.latest_version() == 1
+    # a NULL seq and a non-NULL seq on one key are distinct events: the
+    # non-NULL one wins (NULLs sort last)
+    apply_cdc(
+        t,
+        spark.createDataFrame([(7, "x", "U", None), (7, "y", "U", 1)], events),
+        "k",
+    )
+    assert {(r.k, r.v) for r in t.snapshot().collect()} == {
+        (2, "B2"), (5, "e2"), (7, "y"),
+    }
 
 
 # ------------------------------------------------- ADD COLUMN evolution
@@ -1644,7 +1702,7 @@ def test_bloom_index_point_lookup(spark, tmp_path):
 
 @pytest.mark.parametrize("partition_by", [None, "p"])
 def test_append_reads_its_staged_files_with_known_schema(
-    spark, tmp_path, partition_by
+    spark, jobs, tmp_path, partition_by
 ):
     """The stats and bloom passes read the just-staged files back with
     the schema that wrote them, so an append launches the write job and
@@ -1661,16 +1719,9 @@ def test_append_reads_its_staged_files_with_known_schema(
     t = TxTable(spark, str(tmp_path / "t"), stats_col="k", bloom_col="k")
     t.init(rows(0, 100), partition_by=partition_by)
     before = {e["path"] for e in t.manifest()["files"]}
-    sc = spark.sparkContext
-    group = f"append_known_schema_{partition_by}"
-    sc.setJobGroup(group, "append")
-    try:
+    with jobs("append") as ids:
         t.append(rows(100, 150))
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setJobGroup("", "")
-    assert len(jobs) == 5
+    assert len(ids) == 5
     new = [e for e in t.manifest()["files"] if e["path"] not in before]
     assert new and all(e["bloom"] for e in new)
     lo = min(e["stats"]["k"][0] for e in new)
