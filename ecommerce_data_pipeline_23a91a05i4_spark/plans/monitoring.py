@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import read_parquet, table
 from ..functions.exprs import dsum, mean2, r2
 from ._gate import Scratch, gate
 
@@ -534,8 +534,8 @@ def s6_streaming_txtable_sink(
     from ..sources.txtable import TxTable, TxTableStreamSink
     from ..streaming import ingest as st
 
-    docs_schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
+    docs_schema = read_parquet(
+        spark, os.path.join(sf_dir, "documents.parquet")
     ).schema
     t = TxTable(spark, scratch.dir + "/docs")
     t.init(spark.createDataFrame([], docs_schema))
@@ -582,7 +582,7 @@ def s15_streaming_sink_autocompact(
     from ..sources.txtable import TxTable, TxTableStreamSink
 
     base = scratch.dir
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
     src_dir = base + "/src"
     docs.repartition(6).write.parquet(src_dir)
 
@@ -664,8 +664,8 @@ def s16_streaming_change_feed(
     from ..sources.txtable import TxTable, TxTableStreamSink
 
     base = scratch.dir
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
+    docs = read_parquet(
+        spark, os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id", "source", "n_chars")
     a = TxTable(spark, base + "/a")
     a.init(
@@ -752,7 +752,7 @@ def s8_streaming_distinct_sketch(
     ev = st.stream_events(spark, path)
     regs = sk.hll_registers(ev, ["event_id"], ["event_type"], p=4, hash="md5")
     stream_regs = scratch.drain(regs, output_mode="complete")
-    batch = spark.read.parquet(path)
+    batch = read_parquet(spark, path)
     batch_regs = sk.hll_registers(
         batch, ["event_id"], ["event_type"], p=4, hash="md5"
     )
@@ -857,7 +857,7 @@ def s11_streaming_cms_sketch(
     ev = st.stream_events(spark, path)
     counters = sk.cms_build(ev, ["user_id"], depth=4, width=256)
     stream_cnt = scratch.drain(counters, output_mode="complete")
-    batch = spark.read.parquet(path)
+    batch = read_parquet(spark, path)
     batch_cnt = sk.cms_build(batch, ["user_id"], depth=4, width=256)
     same = st.stream_equals_batch(stream_cnt, batch_cnt)
     exact = (
@@ -920,7 +920,7 @@ def s14_streaming_exact_dedup(
         ["event_id"]
     )
     got = scratch.drain(dedup, output_mode="append")
-    batch = spark.read.parquet(path).withColumn(
+    batch = read_parquet(spark, path).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     same = st.stream_equals_batch(got, batch)
@@ -979,7 +979,7 @@ def s13_streaming_heavy_hitters(
     ev = skewed(st.stream_events(spark, path))
     counters = sk.cms_build(ev, ["user_id"], depth=depth, width=width)
     stream_cnt = scratch.drain(counters, output_mode="complete")
-    batch = skewed(spark.read.parquet(path)).localCheckpoint(eager=True)
+    batch = skewed(read_parquet(spark, path)).localCheckpoint(eager=True)
     batch_cnt = sk.cms_build(batch, ["user_id"], depth=depth, width=width)
     same = st.stream_equals_batch(stream_cnt, batch_cnt)
     # one aggregate for both scalars; count_distinct excludes NULL
@@ -1064,7 +1064,7 @@ def s12_streaming_hist_quantiles(
 
     bins = 200
     path = os.path.join(sf_dir, "events.parquet")
-    batch = spark.read.parquet(path)
+    batch = read_parquet(spark, path)
     vx = F.col("value").cast("double")
     vals = batch.filter(vx.isNotNull())
     mn, mx, n = vals.agg(F.min(vx), F.max(vx), F.count(F.lit(1))).first()

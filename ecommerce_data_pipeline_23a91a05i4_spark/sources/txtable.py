@@ -75,6 +75,7 @@ import posixpath
 import re
 import uuid
 import warnings
+from collections.abc import Callable
 from operator import or_
 from urllib.parse import unquote
 
@@ -107,7 +108,7 @@ _RESERVED_COLS = frozenset({"_tx_file", "_tx_key", "_tx_pos"})
 
 #: table-metadata manifest fields that must be byte-identical between a
 #: transaction's base manifest and the winning head for a REBASE to be
-#: legal (see _commit_or_rebase) — Delta's metadata-conflict class: a
+#: legal (see _commit_loop) — Delta's metadata-conflict class: a
 #: concurrent schema / partition-layout / mapping / constraint /
 #: generated-column change invalidates files staged (and validated)
 #: against the old metadata, so the transaction must re-derive.
@@ -1532,24 +1533,97 @@ class TxTable:
             out[self._entry_key(e)] = e
         return self._canon_order(out.values())
 
-    def _commit_or_rebase(
+    def _commit_loop(
         self,
-        entries: list[dict],
-        op: str,
-        base_m: dict,
+        verb: str,
+        attempt: Callable[[dict], int | dict],
         max_retries: int = 5,
-        extra: dict | None = None,
-        copy_registry: dict | None | object = _INHERIT,
-        features: dict | None | object = _INHERIT,
+        rebase: bool = False,
+        rederive: bool = True,
     ) -> int:
-        """Commit ``entries`` against ``base_m``; on a lost commit race,
-        classify the interleaved commits (_rebase_entries) instead of
-        blanket re-stage-and-retry — disjoint data commits rebase and
-        land without re-running the plan, so concurrent writers whose
-        file sets don't overlap no longer serialize behind each other
-        (the multi-writer property a 100 TB deployment needs).  Raises
-        CommitConflict when the interleave logically conflicts; the
-        caller decides whether to re-derive or surface it."""
+        """THE optimistic-concurrency loop every write verb commits
+        through, at most ``max_retries`` commit attempts in all: read
+        the head manifest, let ``attempt(head)`` derive the
+        transaction, commit it against that head, and on a lost race
+        rebase or re-derive.
+
+        ``attempt`` returns an int — a no-op version, returned as is
+        (nothing matched, no debt, a replayed batch) — or a dict of
+        what to commit: ``entries`` plus any _commit overrides (``op``,
+        default ``verb``; ``schema`` and ``partition_by``, default the
+        derivation base's; ``column_mapping``, ``constraints``,
+        ``extra``, … default to _commit's carry-forward).  ``discard``
+        lists files the attempt wrote for its own commit alone (a
+        registry sidecar); they are deleted when the loop drops the
+        attempt.  A CommitConflict ``attempt`` raises itself (a verb's
+        own layout or overlap check) propagates.
+
+        On a lost race with ``rebase=True`` the interleaved commits are
+        classified by _rebase_entries: disjoint data commits REBASE —
+        the staged delta replays onto the new head without calling
+        ``attempt`` again, so concurrent writers whose file sets don't
+        overlap no longer serialize behind each other (the multi-writer
+        property a 100 TB deployment needs).  When the rebase refuses
+        (an input file was rewritten, or table metadata changed),
+        ``rederive=True`` re-runs ``attempt`` against the new head and
+        ``rederive=False`` surfaces the specific CommitConflict — the
+        verbs whose staged files were validated against the old layout
+        and have no plan to re-derive.  Without ``rebase`` every lost
+        race re-derives."""
+
+        def drop() -> None:
+            for p in discard:
+                self.fs.delete(p)
+
+        m = head = self.manifest()
+        plan, discard = None, ()
+        for i in range(max_retries):
+            if i:  # the previous attempt lost its commit race
+                head = self.manifest()
+                rebased = None
+                if rebase:
+                    delta = delta or self._rebase_delta(m, entries)
+                    try:
+                        rebased = self._rebase_entries(op, m, head, *delta)
+                    except CommitConflict:
+                        if not rederive:
+                            drop()
+                            raise
+                if rebased is None:  # re-derive against the new head
+                    drop()
+                    m, plan = head, None
+                else:
+                    entries = rebased
+            if plan is None:
+                plan = attempt(m)
+                if not isinstance(plan, dict):
+                    return plan
+                plan = dict(plan)
+                entries = plan.pop("entries")
+                op = plan.pop("op", verb)
+                discard = plan.pop("discard", ())
+                schema = plan.pop("schema", None)
+                if schema is None:
+                    schema = StructType.fromJson(json.loads(m["schema"]))
+                pcol = plan.pop("partition_by", m.get("partition_by"))
+                delta = None
+            try:
+                return self._commit(
+                    entries, op, head["version"], schema, pcol, **plan
+                )
+            except CommitConflict:
+                pass
+        drop()
+        raise CommitConflict(
+            f"{verb} on {self.path} lost {max_retries} commit races"
+        )
+
+    def _rebase_delta(
+        self, base_m: dict, entries: list[dict]
+    ) -> tuple[dict, set, list[dict]]:
+        """(base state, removed keys, added entries) of a transaction
+        that read ``base_m`` and proposes ``entries`` — the delta
+        _rebase_entries replays onto a newer head."""
         base_state = {self._entry_key(e): e for e in base_m["files"]}
         desired = {self._entry_key(e): e for e in entries}
         removed_keys = {
@@ -1562,30 +1636,7 @@ class TxTable:
             for k, e in desired.items()
             if k not in base_state or not _same_json(base_state[k], e)
         ]
-        schema = StructType.fromJson(json.loads(base_m["schema"]))
-        pcol = base_m.get("partition_by")
-        cur_version, cur_entries = base_m["version"], entries
-        for _ in range(max_retries):
-            try:
-                return self._commit(
-                    cur_entries,
-                    op,
-                    cur_version,
-                    schema,
-                    pcol,
-                    extra=extra,
-                    copy_registry=copy_registry,
-                    features=features,
-                )
-            except CommitConflict:
-                head = self.manifest()
-                cur_entries = self._rebase_entries(
-                    op, base_m, head, base_state, removed_keys, adds
-                )
-                cur_version = head["version"]
-        raise CommitConflict(
-            f"{op} on {self.path} lost {max_retries} commit races"
-        )
+        return base_state, removed_keys, adds
 
     @staticmethod
     def _check_schema(df: DataFrame, table_schema: StructType) -> None:
@@ -1664,7 +1715,7 @@ class TxTable:
         extra: dict | None = None,
     ) -> int:
         """Blind append: stage once, then race to commit; on conflict the
-        staged files REBASE onto the new head (_commit_or_rebase) —
+        staged files REBASE onto the new head (_commit_loop) —
         CONCURRENT APPENDS never invalidate each other, and an append
         racing a compact / delete / copy_into lands without restaging
         too (its read set is empty, so any pure data interleave
@@ -1680,19 +1731,22 @@ class TxTable:
         mismatched append would not fail loudly — its missing columns
         would read back as NULLs and its extra columns would vanish,
         silent corruption.  Schema changes go through overwrite()."""
-        base = self.manifest()
-        df, gen_guards = self._complete_generated(df, _generated(base))
-        self._check_schema(
-            df, StructType.fromJson(json.loads(base["schema"]))
-        )
-        staged = self._stage(
-            df,
-            base.get("partition_by"),
-            _col_mapping(base),
-            _constraints(base) + gen_guards,
-        )
-        return self._commit_or_rebase(
-            base["files"] + staged, "append", base, max_retries, extra=extra
+
+        def attempt(base: dict) -> dict:
+            dfx, gen_guards = self._complete_generated(df, _generated(base))
+            self._check_schema(
+                dfx, StructType.fromJson(json.loads(base["schema"]))
+            )
+            staged = self._stage(
+                dfx,
+                base.get("partition_by"),
+                _col_mapping(base),
+                _constraints(base) + gen_guards,
+            )
+            return dict(entries=base["files"] + staged, extra=extra)
+
+        return self._commit_loop(
+            "append", attempt, max_retries, rebase=True, rederive=False
         )
 
     def _ingested_files_legacy(self) -> set[str]:
@@ -1777,12 +1831,12 @@ class TxTable:
         staged = self._stage(
             df, pcol, _col_mapping(base), _constraints(base) + gen_guards
         )
-        for _ in range(max_retries):
-            base = self.manifest()
+
+        def attempt(head: dict) -> dict:
             if (
-                base.get("partition_by") != pcol
-                or base["schema"] != schema_json
-                or base.get("column_mapping") != cmap
+                head.get("partition_by") != pcol
+                or head["schema"] != schema_json
+                or head.get("column_mapping") != cmap
             ):
                 raise CommitConflict(
                     f"copy_into {self.path}: table layout changed "
@@ -1791,7 +1845,7 @@ class TxTable:
             # O(1) with a registry: one manifest key + one sidecar read
             # per retry, never a log walk (ADVICE r10 was O(versions^2)
             # across a many-batch backfill)
-            ingested = self._ingested_files(base)
+            ingested = self._ingested_files(head)
             overlap = set(new) & ingested
             if overlap:
                 raise CommitConflict(
@@ -1807,35 +1861,21 @@ class TxTable:
                 self._sidecar_abs(sidecar), [{"src": p} for p in registry]
             )
             feats = {
-                k: list(v) for k, v in (base.get("features") or {}).items()
+                k: list(v) for k, v in (head.get("features") or {}).items()
             }
             feats["writer"] = sorted(
                 set(feats.get("writer") or []) | {"copy-registry"}
             )
-            try:
-                return (
-                    self._commit(
-                        base["files"] + staged,
-                        "copy_into",
-                        base["version"],
-                        StructType.fromJson(json.loads(base["schema"])),
-                        base.get("partition_by"),
-                        extra={"copy_into": new},
-                        copy_registry={
-                            "sidecar": sidecar,
-                            "n": len(registry),
-                        },
-                        features=feats,
-                    ),
-                    new,
-                )
-            except CommitConflict:
-                # the loser's registry sidecar is unreferenced garbage
-                self.fs.delete(self._sidecar_abs(sidecar))
-                continue
-        raise CommitConflict(
-            f"copy_into {self.path} lost {max_retries} commit races"
-        )
+            return dict(
+                entries=head["files"] + staged,
+                extra={"copy_into": new},
+                copy_registry={"sidecar": sidecar, "n": len(registry)},
+                features=feats,
+                # a lost race leaves the registry sidecar unreferenced
+                discard=[self._sidecar_abs(sidecar)],
+            )
+
+        return self._commit_loop("copy_into", attempt, max_retries), new
 
     def append_quarantine(
         self, df: DataFrame, quarantine: "TxTable", max_retries: int = 5
@@ -1966,8 +2006,8 @@ class TxTable:
         overwrite(), which genuinely requires restating the data."""
         if not new_cols:
             raise ValueError("add_columns: no columns given")
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> dict:
             schema = StructType.fromJson(json.loads(m["schema"]))
             names = {f.name for f in schema.fields}
             dup = sorted(set(new_cols) & names)
@@ -1991,20 +2031,11 @@ class TxTable:
                 cmap = dict(m["column_mapping"])
                 for c in new_cols:
                     cmap[c] = _fresh_physical(c)
-            try:
-                return self._commit(
-                    m["files"],
-                    "add_columns",
-                    m["version"],
-                    evolved,
-                    m.get("partition_by"),
-                    column_mapping=cmap,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"add_columns on {self.path} lost {max_retries} commit races"
-        )
+            return dict(
+                entries=m["files"], schema=evolved, column_mapping=cmap
+            )
+
+        return self._commit_loop("add_columns", attempt, max_retries)
 
     #: read-time-safe type widenings (probed on this Spark's parquet
     #: reader, the SPARK-40876 family): a footer written at the key
@@ -2038,8 +2069,8 @@ class TxTable:
         overwrite() restatement.  The partition column widens too:
         its value is re-injected from the manifest's string form, and
         data files do not carry it."""
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> dict:
             schema = StructType.fromJson(json.loads(m["schema"]))
             names = [f.name for f in schema.fields]
             if name not in names:
@@ -2070,19 +2101,13 @@ class TxTable:
                     for f in schema.fields
                 ]
             )
-            try:
-                return self._commit(
-                    m["files"],
-                    f"widen_column:{name}:{cur}->{want}",
-                    m["version"],
-                    evolved,
-                    m.get("partition_by"),
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"widen_column on {self.path} lost {max_retries} commit races"
-        )
+            return dict(
+                entries=m["files"],
+                op=f"widen_column:{name}:{cur}->{want}",
+                schema=evolved,
+            )
+
+        return self._commit_loop("widen_column", attempt, max_retries)
 
     def rename_column(self, old: str, new: str, max_retries: int = 5) -> int:
         """Metadata-only column RENAME (Delta's ``RENAME COLUMN`` under
@@ -2100,8 +2125,8 @@ class TxTable:
         physical one."""
         if old == new:
             raise ValueError("rename_column: old and new name are equal")
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> dict:
             schema = StructType.fromJson(json.loads(m["schema"]))
             names = [f.name for f in schema.fields]
             if old not in names:
@@ -2134,20 +2159,15 @@ class TxTable:
                 (new if lg == old else lg): ph for lg, ph in mapping.items()
             }
             pcol = m.get("partition_by")
-            try:
-                return self._commit(
-                    m["files"],
-                    f"rename_column:{old}->{new}",
-                    m["version"],
-                    evolved,
-                    new if pcol == old else pcol,
-                    column_mapping=cmap,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"rename_column on {self.path} lost {max_retries} commit races"
-        )
+            return dict(
+                entries=m["files"],
+                op=f"rename_column:{old}->{new}",
+                schema=evolved,
+                partition_by=new if pcol == old else pcol,
+                column_mapping=cmap,
+            )
+
+        return self._commit_loop("rename_column", attempt, max_retries)
 
     def drop_column(self, name: str, max_retries: int = 5) -> int:
         """Metadata-only column DROP: the logical schema loses the
@@ -2161,8 +2181,8 @@ class TxTable:
         fail loudly; a later add_columns of the same name gets a fresh
         physical column and reads NULL from old files, never the
         dropped data (even under a different type)."""
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> dict:
             schema = StructType.fromJson(json.loads(m["schema"]))
             names = [f.name for f in schema.fields]
             if name not in names:
@@ -2191,20 +2211,14 @@ class TxTable:
             evolved = StructType(
                 [f for f in schema.fields if f.name != name]
             )
-            try:
-                return self._commit(
-                    m["files"],
-                    f"drop_column:{name}",
-                    m["version"],
-                    evolved,
-                    m.get("partition_by"),
-                    column_mapping=mapping,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"drop_column on {self.path} lost {max_retries} commit races"
-        )
+            return dict(
+                entries=m["files"],
+                op=f"drop_column:{name}",
+                schema=evolved,
+                column_mapping=mapping,
+            )
+
+        return self._commit_loop("drop_column", attempt, max_retries)
 
     def purge_dropped_columns(
         self, n_files: int | None = None, max_retries: int = 5
@@ -2226,27 +2240,17 @@ class TxTable:
                 f"purge_dropped_columns: n_files must be >= 1, got "
                 f"{n_files}"
             )
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> dict:
             files = max(1, len(m["files"])) if n_files is None else n_files
             pcol = m.get("partition_by")
             df = self.snapshot(m["version"])
             if pcol is None:
                 df = df.repartition(files)
-            try:
-                return self._commit(
-                    self._stage(df, pcol, _col_mapping(m), _constraints(m)),
-                    "purge_columns",
-                    m["version"],
-                    StructType.fromJson(json.loads(m["schema"])),
-                    pcol,
-                )
-            except CommitConflict:
-                continue  # re-derive against the new snapshot
-        raise CommitConflict(
-            f"purge_dropped_columns on {self.path} lost {max_retries} "
-            "commit races"
-        )
+            staged = self._stage(df, pcol, _col_mapping(m), _constraints(m))
+            return dict(entries=staged, op="purge_columns")
+
+        return self._commit_loop("purge_dropped_columns", attempt, max_retries)
 
     # ------------------------------------------------------ constraints
     def constraints(self) -> dict[str, str]:
@@ -2283,8 +2287,8 @@ class TxTable:
                 f"constraint name {name!r} must be non-empty and "
                 "':'-free (it is embedded in the manifest op field)"
             )
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> dict:
             cons = _constraints(m)
             if any(c["name"] == name for c in cons):
                 raise ValueError(
@@ -2301,21 +2305,14 @@ class TxTable:
                     f"{n_bad} existing row(s) violate CHECK ({expr}); "
                     "a constraint must hold over the data it governs"
                 )
-            try:
-                return self._commit(
-                    m["files"],
-                    f"add_constraint:{name}",
-                    m["version"],
-                    StructType.fromJson(json.loads(m["schema"])),
-                    m.get("partition_by"),
-                    constraints=cons + [{"name": name, "expr": expr}],
-                )
-            except CommitConflict:
-                continue  # re-validate against the new head
-        raise CommitConflict(
-            f"add_check_constraint on {self.path} lost {max_retries} "
-            "commit races"
-        )
+            return dict(
+                entries=m["files"],
+                op=f"add_constraint:{name}",
+                constraints=cons + [{"name": name, "expr": expr}],
+            )
+
+        # a lost race re-validates against the new head
+        return self._commit_loop("add_check_constraint", attempt, max_retries)
 
     def add_not_null(self, col: str, max_retries: int = 5) -> int:
         """NOT NULL at commit time: sugar for a CHECK the shared
@@ -2334,8 +2331,8 @@ class TxTable:
 
     def drop_constraint(self, name: str, max_retries: int = 5) -> int:
         """Remove a CHECK invariant (metadata-only, O(1))."""
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> dict:
             cons = _constraints(m)
             kept = [c for c in cons if c["name"] != name]
             if len(kept) == len(cons):
@@ -2344,21 +2341,13 @@ class TxTable:
                     f"{self.path} (have "
                     f"{sorted(c['name'] for c in cons)})"
                 )
-            try:
-                return self._commit(
-                    m["files"],
-                    f"drop_constraint:{name}",
-                    m["version"],
-                    StructType.fromJson(json.loads(m["schema"])),
-                    m.get("partition_by"),
-                    constraints=kept,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"drop_constraint on {self.path} lost {max_retries} "
-            "commit races"
-        )
+            return dict(
+                entries=m["files"],
+                op=f"drop_constraint:{name}",
+                constraints=kept,
+            )
+
+        return self._commit_loop("drop_constraint", attempt, max_retries)
 
     #: atomic types analyze() can min/max and JSON-round-trip (as strings)
     _ANALYZABLE = frozenset(
@@ -2448,8 +2437,8 @@ class TxTable:
             "hll_hash": hash,
             "columns": col_stats,
         }
-        for _ in range(max_retries):
-            head = self.manifest()
+
+        def attempt(head: dict) -> dict:
             if head["version"] != m["version"]:
                 # a retry must not re-propose stats the intervening
                 # commits invalidated (ADVICE r9): an overwrite/restore
@@ -2487,20 +2476,10 @@ class TxTable:
                         + f" since analyzed version {m['version']}; "
                         "re-run analyze() against the new head"
                     )
-            try:
-                return self._commit(
-                    head["files"],
-                    "analyze",
-                    head["version"],
-                    StructType.fromJson(json.loads(head["schema"])),
-                    head.get("partition_by"),
-                    table_stats=stats,
-                )
-            except CommitConflict:
-                continue  # stats still describe m['version']'s rows
-        raise CommitConflict(
-            f"analyze on {self.path} lost {max_retries} commit races"
-        )
+            # stats still describe m['version']'s rows on a retry
+            return dict(entries=head["files"], table_stats=stats)
+
+        return self._commit_loop("analyze", attempt, max_retries)
 
     def restore(self, version: int, max_retries: int = 5) -> int:
         """Roll the table BACK to ``version`` as a NEW commit (Delta's
@@ -2535,24 +2514,15 @@ class TxTable:
                 f"files already vacuumed (first: {missing[0]}); that "
                 "version is no longer restorable"
             )
-        for _ in range(max_retries):
-            m = self.manifest()
-            try:
-                return self._commit(
-                    src["files"],
-                    "restore",
-                    m["version"],
-                    StructType.fromJson(json.loads(src["schema"])),
-                    src.get("partition_by"),
-                    # the restored version's OWN mapping, not the head's:
-                    # its files' physical names belong to that mapping
-                    column_mapping=src.get("column_mapping"),
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"restore on {self.path} lost {max_retries} commit races"
+        restored = dict(
+            entries=src["files"],
+            schema=StructType.fromJson(json.loads(src["schema"])),
+            partition_by=src.get("partition_by"),
+            # the restored version's OWN mapping, not the head's: its
+            # files' physical names belong to that mapping
+            column_mapping=src.get("column_mapping"),
         )
+        return self._commit_loop("restore", lambda m: restored, max_retries)
 
     def clone_shallow(
         self, dst_path: str, version: int | None = None
@@ -2667,42 +2637,45 @@ class TxTable:
         every out-of-scope entry carries into the child manifest BY
         REFERENCE — the shape that lets a 100 TB table re-cluster one
         hot partition or key range without touching cold data."""
-        m = self.manifest()
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        pcol = m.get("partition_by")
-        mapping = _col_mapping(m)
-        carry: list[dict] = []
-        if where is None:
-            src = self.snapshot()
-        else:
-            scoped, carry = self._scope_entries(m, where)
-            if not scoped:
-                return m["version"]  # nothing in scope: no-op, no commit
-            src = self._read_entries(schema, pcol, scoped, mapping=mapping)
-        if zorder_by is None:
-            df = src.repartition(n_files)
-        else:
-            if pcol is not None:
-                raise ValueError(
-                    f"compact(zorder_by=...) on {self.path}: table is "
-                    f"partitioned by {m['partition_by']!r}; Z-order "
-                    "applies to unpartitioned layouts (the partition "
-                    "column already dictates file grouping)"
-                )
-            from ..operators.zorder import zorder_frame
 
-            df = zorder_frame(src, list(zorder_by), n_files)
-        # _commit_or_rebase: a compact racing disjoint data commits
-        # (appends, a scoped compact of another partition) rebases and
-        # lands without re-reading or re-staging a byte — only an
-        # interleave that rewrote one of the IN-SCOPE files, or a
-        # metadata change, surfaces as CommitConflict (the caller
-        # re-runs the maintenance job then)
-        return self._commit_or_rebase(
-            carry + self._stage(df, pcol, mapping, _constraints(m)),
-            "compact",
-            m,
-            max_retries=5,
+        def attempt(m: dict) -> int | dict:
+            schema = StructType.fromJson(json.loads(m["schema"]))
+            pcol = m.get("partition_by")
+            mapping = _col_mapping(m)
+            carry: list[dict] = []
+            if where is None:
+                src = self.snapshot(m["version"])
+            else:
+                scoped, carry = self._scope_entries(m, where)
+                if not scoped:
+                    return m["version"]  # nothing in scope: no commit
+                src = self._read_entries(
+                    schema, pcol, scoped, mapping=mapping
+                )
+            if zorder_by is None:
+                df = src.repartition(n_files)
+            else:
+                if pcol is not None:
+                    raise ValueError(
+                        f"compact(zorder_by=...) on {self.path}: table is "
+                        f"partitioned by {pcol!r}; Z-order applies to "
+                        "unpartitioned layouts (the partition column "
+                        "already dictates file grouping)"
+                    )
+                from ..operators.zorder import zorder_frame
+
+                df = zorder_frame(src, list(zorder_by), n_files)
+            staged = self._stage(df, pcol, mapping, _constraints(m))
+            return dict(entries=carry + staged)
+
+        # a compact racing disjoint data commits (appends, a scoped
+        # compact of another partition) rebases and lands without
+        # re-reading or re-staging a byte — only an interleave that
+        # rewrote one of the IN-SCOPE files, or a metadata change,
+        # surfaces as CommitConflict (the caller re-runs the
+        # maintenance job then)
+        return self._commit_loop(
+            "compact", attempt, rebase=True, rederive=False
         )
 
     def optimize_small(
@@ -2742,8 +2715,8 @@ class TxTable:
                 f"optimize_small: target_bytes must be >= 1, got "
                 f"{target_bytes}"
             )
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> int | dict:
             pcol = m.get("partition_by")
             schema = StructType.fromJson(json.loads(m["schema"]))
             mapping = _col_mapping(m)
@@ -2790,19 +2763,14 @@ class TxTable:
                     schema, pcol, ents, mapping=mapping
                 ).repartition(n)
                 staged += self._stage(df, pcol, mapping, cons)
-            try:
-                # rebase first: a nightly OPTIMIZE racing a steady
-                # append stream lands without re-probing sizes or
-                # re-staging a byte (VERDICT r10 next #1's starvation
-                # case); only an interleave that touched an in-scope
-                # small file falls through to re-deriving the debt
-                return self._commit_or_rebase(
-                    carry + staged, "optimize", m, max_retries
-                )
-            except CommitConflict:
-                continue  # re-derive the debt against the new base
-        raise CommitConflict(
-            f"optimize_small on {self.path} lost {max_retries} commit races"
+            return dict(entries=carry + staged, op="optimize")
+
+        # rebase first: a nightly OPTIMIZE racing a steady append stream
+        # lands without re-probing sizes or re-staging a byte (VERDICT
+        # r10 next #1's starvation case); only an interleave that
+        # touched an in-scope small file re-derives the debt
+        return self._commit_loop(
+            "optimize_small", attempt, max_retries, rebase=True
         )
 
     def delete(
@@ -2866,8 +2834,8 @@ class TxTable:
                 "'write_serializable' or 'serializable')"
             )
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> int | dict:
             pcol = m.get("partition_by")
             schema = StructType.fromJson(json.loads(m["schema"]))
             snap = self.snapshot(m["version"], _with_file=True)
@@ -2922,22 +2890,13 @@ class TxTable:
                 # that also read as unprunable under data skipping
                 survivors = survivors.coalesce(max(1, len(hit_uris)))
             staged = self._stage(survivors, pcol, _col_mapping(m), _constraints(m))
-            if isolation == "write_serializable":
-                try:
-                    return self._commit_or_rebase(
-                        carry + staged, "delete", m, max_retries
-                    )
-                except CommitConflict:
-                    continue  # logical conflict: re-derive
-            try:
-                self._commit(
-                    carry + staged, "delete", m["version"], schema, pcol
-                )
-                return m["version"] + 1
-            except CommitConflict:
-                continue  # re-derive against the new snapshot
-        raise CommitConflict(
-            f"delete on {self.path} lost {max_retries} commit races"
+            return dict(entries=carry + staged)
+
+        return self._commit_loop(
+            "delete",
+            attempt,
+            max_retries,
+            rebase=isolation == "write_serializable",
         )
 
     def _stage_dv(self, df: DataFrame) -> str:
@@ -3012,10 +2971,8 @@ class TxTable:
                 "'write_serializable' or 'serializable')"
             )
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        for _ in range(max_retries):
-            m = self.manifest()
-            pcol = m.get("partition_by")
-            schema = StructType.fromJson(json.loads(m["schema"]))
+
+        def attempt(m: dict) -> int | dict:
             snap = self.snapshot(m["version"], _with_pos=True)
             hit = F.coalesce(pred.cast("boolean"), F.lit(False))
             # one pass: per-file matched and visible counts (bounded
@@ -3072,22 +3029,13 @@ class TxTable:
                 ne = {k: v for k, v in e.items() if k != "dv"}
                 ne["dv"] = {"path": dv_rel, "count": old_n + int(hits_n)}
                 new_entries.append(ne)
-            if isolation == "write_serializable":
-                try:
-                    return self._commit_or_rebase(
-                        new_entries, "delete_dv", m, max_retries
-                    )
-                except CommitConflict:
-                    continue  # logical conflict: re-derive
-            try:
-                self._commit(
-                    new_entries, "delete_dv", m["version"], schema, pcol
-                )
-                return m["version"] + 1
-            except CommitConflict:
-                continue  # re-derive against the new snapshot
-        raise CommitConflict(
-            f"delete_dv on {self.path} lost {max_retries} commit races"
+            return dict(entries=new_entries)
+
+        return self._commit_loop(
+            "delete_dv",
+            attempt,
+            max_retries,
+            rebase=isolation == "write_serializable",
         )
 
     def merge(
@@ -3156,8 +3104,8 @@ class TxTable:
         time-travel to the pre-merge data until vacuum().
 
         Concurrent commits are absorbed by recompute-and-retry — merge
-        deliberately does NOT take the _commit_or_rebase fast path the
-        disjoint verbs use: its read set is the WHOLE table (the
+        deliberately does NOT take the rebase fast path the disjoint
+        verbs use (_commit_loop): its read set is the WHOLE table (the
         matched/unmatched split joins against every visible row, and
         insert_unmatched's semantics depend on which keys exist), so a
         rebase over any interleaved data commit could silently
@@ -3291,8 +3239,8 @@ class TxTable:
         # whenever the counted key set fits, so neither the detection
         # semi-join nor the survivors anti-join shuffles the table side
         src_keys = _bounded_broadcast(src.select(keys), chk["_keys"])
-        for _ in range(max_retries):
-            m = self.manifest()
+
+        def attempt(m: dict) -> int | dict:
             # the source was validated and projected against m0's layout;
             # a concurrent add_columns/overwrite would make a retried
             # commit silently drop the new columns' values from the
@@ -3407,22 +3355,15 @@ class TxTable:
                 mapping,
                 _constraints(m) + gen_guards,
             )
-            try:
-                self._commit(
-                    carry + staged,
-                    "merge",
-                    m["version"],
-                    schema,
-                    pcol,
-                    extra=extra,
-                    column_mapping=evolved_cmap,
-                )
-                return m["version"] + 1
-            except CommitConflict:
-                continue  # re-derive against the new snapshot
-        raise CommitConflict(
-            f"merge on {self.path} lost {max_retries} commit races"
-        )
+            return dict(
+                entries=carry + staged,
+                schema=schema,
+                extra=extra,
+                column_mapping=evolved_cmap,
+            )
+
+        # merge re-derives on every lost race (see the docstring)
+        return self._commit_loop("merge", attempt, max_retries)
 
     # ------------------------------------------------------ maintenance
     def vacuum(
@@ -3665,7 +3606,9 @@ def scd2_merge_tx(
 
     The table must have been created with
     ``TxTable.init(df.withColumn(SCD2_BUCKET_COL, scd2_bucket(...)),
-    partition_by=SCD2_BUCKET_COL)``.  Returns the affected bucket ids.
+    partition_by=SCD2_BUCKET_COL)``.  The table's CHECK constraints are
+    enforced on the staged buckets, as in every verb that stages rows.
+    Returns the affected bucket ids.
     """
     from ..operators.scd2 import SCD2_BUCKET_COL, scd2_bucket, scd2_merge
 
@@ -3677,8 +3620,7 @@ def scd2_merge_tx(
         return []
     affected_parts = {str(b) for b in affected}
 
-    for _ in range(max_retries):
-        m = table.manifest()
+    def attempt(m: dict) -> dict:
         if m.get("partition_by") != SCD2_BUCKET_COL:
             raise ValueError(
                 f"scd2_merge_tx needs a table partitioned by {SCD2_BUCKET_COL!r}"
@@ -3700,7 +3642,9 @@ def scd2_merge_tx(
         ).withColumn(
             SCD2_BUCKET_COL, scd2_bucket(F.col(business_key), n_buckets)
         )
-        staged = table._stage(merged, SCD2_BUCKET_COL, mapping)
+        staged = table._stage(
+            merged, SCD2_BUCKET_COL, mapping, _constraints(m)
+        )
         staged_parts = {e["part"] for e in staged}
         # an affected bucket holds >=1 update key and scd2_merge never
         # drops rows — enforce the invariant the swap path also checks
@@ -3709,20 +3653,11 @@ def scd2_merge_tx(
             raise RuntimeError(
                 f"scd2_merge_tx: staged output missing buckets {sorted(missing)}"
             )
-        try:
-            table._commit(
-                carry + staged,
-                f"scd2_merge:{run_date}",
-                m["version"],
-                schema,
-                SCD2_BUCKET_COL,
-            )
-            return affected
-        except CommitConflict:
-            continue  # re-read the new snapshot and re-merge
-    raise CommitConflict(
-        f"scd2_merge_tx on {table.path} lost {max_retries} commit races"
-    )
+        return dict(entries=carry + staged, op=f"scd2_merge:{run_date}")
+
+    # a lost race re-reads the new snapshot and re-merges
+    table._commit_loop("scd2_merge_tx", attempt, max_retries)
+    return affected
 
 
 # ------------------------------------------- exactly-once streaming sink
@@ -3890,7 +3825,6 @@ class TxTableStreamSink:
         return _stream_floors(manifest).get(self.app_id, -1)
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
-        base = self.table.manifest()
         # Durable exactly-once floor: every manifest carries each app's
         # highest committed stream batch id (monotone, carried forward
         # by EVERY commit), so even after vacuum() pruned all
@@ -3899,18 +3833,8 @@ class TxTableStreamSink:
         # still sees batch_id <= floor and no-ops.  The per-op id set
         # handles the (impossible under monotone batch ids, cheap to
         # keep) gap case.
-        floor = self._floor(base)
-        if batch_id <= floor or batch_id in self.committed_batch_ids():
-            return  # replayed micro-batch: already committed, skip
-        pcol = base.get("partition_by")
-        self.table._check_schema(
-            df, StructType.fromJson(json.loads(base["schema"]))
-        )
-        staged = self.table._stage(
-            df, pcol, _col_mapping(base), _constraints(base)
-        )
-        # Lost-race handling is op-aware (the _commit_or_rebase
-        # discipline, specialized for the sink's exactly-once guard): a
+        #
+        # Lost-race handling re-proposes the batch ONCE staged: a
         # DISJOINT interleaved commit — a maintenance optimize, another
         # app's stream batch, a batch append — must not fail this
         # micro-batch; the staged files re-propose onto the new head
@@ -3920,17 +3844,27 @@ class TxTableStreamSink:
         # out instead of double-appending.  A metadata/layout change
         # stays loud — the staged files were validated against the old
         # metadata, and a schema-changed table needs a restarted stream.
-        orig = base
-        committed = False
-        for _ in range(5):
-            if batch_id <= self._floor(base) or (
+        orig = staged = n_files = None  # n_files: what our commit leaves
+
+        def attempt(m: dict) -> int | dict:
+            nonlocal orig, staged, n_files
+            n_files = None
+            if batch_id <= self._floor(m) or (
                 batch_id in self.committed_batch_ids()
             ):
-                return  # another instance landed it while we raced
+                return m["version"]  # replayed, or another instance won
+            if orig is None:  # stage once, against the first head read
+                orig = m
+                self.table._check_schema(
+                    df, StructType.fromJson(json.loads(m["schema"]))
+                )
+                staged = self.table._stage(
+                    df, m.get("partition_by"), _col_mapping(m), _constraints(m)
+                )
             changed = [
                 f
                 for f in _REBASE_META
-                if not _same_json(orig.get(f), base.get(f))
+                if not _same_json(orig.get(f), m.get(f))
             ]
             if changed:
                 raise CommitConflict(
@@ -3939,31 +3873,20 @@ class TxTableStreamSink:
                     f"({', '.join(changed)}); restart the stream "
                     "against the new layout"
                 )
-            floors = _stream_floors(base)
-            floors[self.app_id] = max(
-                floors.get(self.app_id, -1), batch_id
+            floors = _stream_floors(m)
+            floors[self.app_id] = max(floors.get(self.app_id, -1), batch_id)
+            n_files = len(m["files"]) + len(staged)
+            return dict(
+                entries=m["files"] + staged,
+                op=_batch_op(self.app_id, batch_id),
+                stream_floors=floors,
             )
-            try:
-                self.table._commit(
-                    base["files"] + staged,
-                    _batch_op(self.app_id, batch_id),
-                    base["version"],
-                    StructType.fromJson(json.loads(base["schema"])),
-                    pcol,
-                    stream_floors=floors,
-                )
-                committed = True
-                break
-            except CommitConflict:
-                base = self.table.manifest()
-        if not committed:
-            raise CommitConflict(
-                f"stream sink on {self.table.path} lost 5 commit races "
-                f"for batch {batch_id}"
-            )
-        # the count the commit just produced — no second manifest read
-        # on the per-batch hot path
-        self._maybe_compact(len(base["files"]) + len(staged))
+
+        self.table._commit_loop(
+            f"stream sink batch {batch_id}", attempt, max_retries=5
+        )
+        if n_files is not None:
+            self._maybe_compact(n_files)
 
     def _maybe_compact(self, n_files: int) -> None:
         """Auto-compaction step: one compact commit when the manifest
