@@ -1053,23 +1053,18 @@ def run_bm25_index_probe(spark, sf_dir: str) -> dict:
         mv_init(fresh, corpus.snapshot(), g, m, transform=tok_rows)
         recompute_sec = time.perf_counter() - t0
 
-        # Max-score pruned top-k + bucket-pruned reads (VERDICT r11
-        # next #4 done point), measured at the SERVICE level: a real
-        # Bm25Index over the corpus TxTable — its postings MV
+        # Top-k + bucket-pruned reads, measured at the SERVICE level:
+        # a real Bm25Index over the corpus TxTable — its postings MV
         # partitioned by the 32-way md5 term bucket — scoring a
         # 16-query batch that pairs the corpus's most common term with
-        # distinct rare terms.  Three facts published: (a) the pruned
-        # top-k equals full scoring exactly; (b) scored rows track the
-        # rare lists + k, not the common term's df; (c) the bucketed
-        # layout reads only the vocabulary's partitions (files_ratio)
-        # — the posting-list seek that makes BOTH paths scan
-        # O(|vocab buckets|/32) of a 100 TB index.
-        from pyspark.sql import Window
-
+        # distinct rare terms.  Published: (a) the service top-k
+        # (bucket-pruned read) equals full scoring over an unpruned
+        # read exactly; (b) both walls; (c) the bucketed layout reads
+        # only the vocabulary's partitions (files_read_ratio).
         from ecommerce_data_pipeline_23a91a05i4_spark.operators.text import (
             Bm25Index,
-            _bm25_pruned_plan,
             bm25_scores_from_index,
+            bm25_topk,
         )
 
         idx = Bm25Index(corpus, base + "/svc_idx")
@@ -1092,43 +1087,29 @@ def run_bm25_index_probe(spark, sf_dir: str) -> dict:
         )
         dl = idx.doclen.snapshot().select("doc_id", "dl")
         stats = idx.cstats.snapshot().select("n_docs", "total_tokens")
-        termdf = idx.termdf.snapshot().select(
-            "term", F.col("n_rows").alias("df")
-        )
         full_post = idx.postings.snapshot().select(
             "term", "doc_id", "tf"
         )
 
         def run_full_unpruned_read():
             scored = bm25_scores_from_index(full_post, dl, stats, qt)
-            w = Window.partitionBy("query_id").orderBy(
-                F.desc("score"), "doc_id"
-            )
-            return (
-                scored.withColumn(
-                    "rank", F.row_number().over(w).cast("long")
-                )
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id",
-                        "n_terms_matched", "score")
-                .collect()
-            )
+            return bm25_topk(scored, k).collect()
 
-        def run_pruned_service():
+        def run_service():
             return idx.score(qt, k=k).collect()
 
         full_rows = run_full_unpruned_read()  # warm both paths once
-        pruned_rows = run_pruned_service()
+        service_rows = run_service()
         topk_equal = sorted(map(tuple, full_rows)) == sorted(
             (r.query_id, r.rank, r.doc_id, r.n_terms_matched, r.score)
-            for r in pruned_rows
+            for r in service_rows
         )
         t0 = time.perf_counter()
         run_full_unpruned_read()
         full_sec = time.perf_counter() - t0
         t0 = time.perf_counter()
-        run_pruned_service()
-        pruned_sec = time.perf_counter() - t0
+        run_service()
+        service_sec = time.perf_counter() - t0
         files_total = len(idx.postings.manifest()["files"])
         import hashlib as _hl
 
@@ -1141,43 +1122,22 @@ def run_bm25_index_probe(spark, sf_dir: str) -> dict:
             e for e in idx.postings.manifest()["files"]
             if e.get("part") in {str(b) for b in buckets}
         ])
-        parts = _bm25_pruned_plan(
-            idx._post_snapshot(qt, "term"), dl, stats, termdf, qt, k,
-            "doc_id", "query_id", "term", 1.2, 0.75, 20,
-        )
         full_matched = full_post.join(
             qt.select("term").distinct(), "term"
         ).count()
-        scored_rows = parts["tf2"].count()
         pruning = {
             "k": k,
             "n_queries": len(rare),
             "index_build_sec": round(build_sec, 4),
             "full_matched_postings": int(full_matched),
-            "pruned_scored_rows": int(scored_rows),
-            "scored_rows_ratio": round(scored_rows / full_matched, 4),
             "postings_files_total": files_total,
             "postings_files_read": files_pruned,
             "files_read_ratio": round(
                 files_pruned / max(files_total, 1), 4
             ),
             "full_unpruned_read_topk_sec": round(full_sec, 4),
-            "service_pruned_topk_sec": round(pruned_sec, 4),
+            "service_topk_sec": round(service_sec, 4),
             "topk_equal": bool(topk_equal),
-            # honest wall-clock reading: after the r13 restructure
-            # (control-plane literals, no-aggregate phase 1, dl
-            # streamed through broadcast joins, distincts dropped) the
-            # pruned wall sits at ~parity with full scoring at fixture
-            # size (r12: 1.74x slower) — the residual is the pruned
-            # plan's inherent extra passes (θ phase + candidate
-            # restriction = 3 bucket-pruned reads) whose fixed stage
-            # costs the skipped rows don't yet repay at ~580k matched
-            # postings.  The crossover sits at production posting-list
-            # sizes.  The published SCALING facts are the row/file
-            # ratios above: scored rows track k + rare lists (0.24x),
-            # reads track vocabulary buckets (0.44x of files), both
-            # independent of the common term's df.
-            "note": "wall ~parity at fixture df; crossover at production df; see ratios",
         }
         return {
             "pruning": pruning,

@@ -434,374 +434,31 @@ def bm25_scores_from_index(
     )
 
 
-#: max query-vocabulary size fetched driver-side by the pruned top-k
-#: (same scale class as Bm25Index.PRUNE_VOCAB_CAP's bucket collect);
-#: above it, dfreq/stats stay plan-shaped
-_PRUNE_LITERAL_CAP = 4096
-
-
-def _bm25_pruned_plan(
-    postings: DataFrame,
-    doc_lengths: DataFrame,
-    corpus_stats: DataFrame,
-    term_df: DataFrame,
-    queries: DataFrame,
+def bm25_topk(
+    scored: DataFrame,
     k: int,
-    id_col: str,
-    query_id_col: str,
-    term_col: str,
-    k1: float,
-    b: float,
-    fp_bits: int,
-    vocab_terms: list[str] | None = None,
-    query_pairs: list[tuple] | None = None,
-) -> dict:
-    """Internal: the max-score pruned top-k pipeline, returned as its
-    named intermediate relations so the bench probe can count SCORED
-    ROWS (tf entering the scoring tail) without re-deriving the plan.
-    See :func:`bm25_topk_from_index` for the algorithm and its
-    exactness argument.
+    id_col: str = "doc_id",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """The per-query top-k cut of a BM25 score relation (the output of
+    :func:`bm25_scores_relational` or :func:`bm25_scores_from_index`):
+    ``row_number() over (partition by query order by score DESC, id
+    ASC) <= k``.  ``score`` is the tail's integer fixed-point sum over
+    2^fp_bits, an exact rescale, so ordering by it IS the integer
+    order, and the id tie-break makes the cut deterministic.
 
-    ``vocab_terms``: the query batch's distinct terms when the caller
-    already holds them (Bm25Index._post_snapshot collects them for
-    bucket pruning) — saves re-deriving the vocabulary with a shuffle;
-    must be exactly ``queries``' distinct term set.  ``query_pairs``:
-    likewise the distinct (query_id, term) pairs, when the caller's
-    one bounded collect already produced them."""
-    import math
-
+    Returns ``(query_id, rank, id, n_terms_matched, score)``, rank
+    1..k per query."""
     from pyspark.sql import Window
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
-    post = postings.select(
-        F.col("term"), F.col(id_col), F.col("tf").cast("long").alias("tf")
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.desc("score"), F.asc(id_col)
     )
-    dl = doc_lengths.select(
-        F.col(id_col), F.col("dl").cast("long").alias("dl")
-    )
-    stats = corpus_stats.select(
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("total_tokens").cast("long").alias("total_tokens"),
-    )
-    # ---- control-plane literals (optimization r13, guide §1.2 pay
-    # fixed costs once / §2.4 remove shuffles outright).  The query
-    # batch, its vocabulary's (term, df) rows, and the 1-row corpus
-    # stats are all BOUNDED, control-plane-sized relations — the same
-    # scale class as the bucket list Bm25Index._post_snapshot already
-    # collects — yet as PLANS they were re-derived (scan + shuffle +
-    # broadcast build) by every execution boundary that embedded them:
-    # the bound computation, phase-1 scoring and the re-rank each paid
-    # a term-stats scan, and the query relation paid a distinct
-    # shuffle + a per-query window per consumer.  Fetch them ONCE
-    # (tiny capped jobs), compute the per-query bound table (ub,
-    # suffix-sum, position) DRIVER-side with bit-identical IEEE-754
-    # arithmetic (same operation order as the plan expressions —
-    # doubles round identically in Python and the JVM), and rebuild
-    # everything as literal local relations: the distributed plan then
-    # starts at the postings scan.  Any cap overflow (or a malformed
-    # stats relation) falls back to the fully plan-shaped derivation —
-    # correctness never depends on the fast path.
-    _spark = postings.sparkSession
-    qid_type = queries.schema[query_id_col].dataType
-    term_type = queries.schema[term_col].dataType
-    qp = query_pairs  # distinct (query_id, term) pairs, driver-side
-    if qp is None:
-        qrows = (
-            queries.select(F.col(query_id_col), F.col(term_col))
-            .limit(_PRUNE_LITERAL_CAP + 1)
-            .collect()
-        )
-        if len(qrows) <= _PRUNE_LITERAL_CAP:
-            # repr-keyed sort: deterministic plan-literal order even
-            # with NULL ids/terms (None is not orderable against
-            # ints/strings); row order never affects the results
-            qp = sorted({(r[0], r[1]) for r in qrows},
-                        key=lambda x: (repr(x[0]), repr(x[1])))
-    if qp is not None and vocab_terms is None:
-        vocab_terms = sorted({t for _, t in qp}, key=repr)
-    if vocab_terms is None:
-        vocab_terms = [
-            r[0]
-            for r in queries.select(F.col(term_col).alias("term"))
-            .distinct()
-            .limit(_PRUNE_LITERAL_CAP + 1)
-            .collect()
-        ]
-    qt_schema = StructType([
-        StructField(query_id_col, qid_type),
-        StructField("term", term_type),
-    ])
-    if qp is not None:
-        qt = _spark.createDataFrame(qp, qt_schema)
-    else:
-        qt = queries.select(
-            F.col(query_id_col), F.col(term_col).alias("term")
-        ).distinct()
-    dfreq = None
-    dfmap = None
-    stats_row = None
-    vocab = None
-    if len(vocab_terms) <= _PRUNE_LITERAL_CAP:
-        vocab = _spark.createDataFrame(
-            [(t,) for t in vocab_terms],
-            StructType([StructField("term", term_type)]),
-        )
-        # isin filter, not a join: term_df is unique per term (the
-        # maintained (term, df) relation), so filtering to the literal
-        # vocabulary is row-identical to the inner join and needs no
-        # shuffle at all.  Plain collect, no .limit(): the isin bound
-        # already caps the rows on a unique-term relation, and a LIMIT
-        # would collect through CollectLimit's partition-escalation
-        # protocol (1, 4, 16, ... partitions = several sequential
-        # jobs when few rows match — measured 3 extra jobs here).
-        vrows = (
-            term_df.select("term", F.col("df").cast("long").alias("df"))
-            .filter(F.col("term").isin(vocab_terms) if vocab_terms
-                    else F.lit(False))
-            .collect()
-        )
-        if len(vrows) <= _PRUNE_LITERAL_CAP:
-            dfreq = _spark.createDataFrame(
-                [(r.term, r.df) for r in vrows],
-                StructType([
-                    StructField("term", term_type),
-                    StructField("df", LongType()),
-                ]),
-            )
-            dfmap = {r.term: r.df for r in vrows}
-            srows = stats.limit(2).collect()
-            if len(srows) == 1:
-                stats_row = (srows[0].n_docs, srows[0].total_tokens)
-                stats = _spark.createDataFrame(
-                    [stats_row], "n_docs long, total_tokens long"
-                )
-    if vocab is None:
-        vocab = qt.select("term").distinct()
-    if dfreq is None:
-        dfreq = term_df.select(
-            "term", F.col("df").cast("long").alias("df")
-        ).join(F.broadcast(vocab), "term")
-    # per-(query, term) integer score upper bound:
-    # s = idf * tf(k1+1)/(tf + norm) < idf * (k1+1)  (tf-saturation;
-    # norm > 0), and floor is monotone, so s_fp <= ub_fp row-wise.
-    # idf is the logless rational RSJ ratio — ALWAYS > 0, which is
-    # what makes per-term bounds sum-able.
-    qub_schema = StructType([
-        StructField(query_id_col, qid_type),
-        StructField("term", term_type),
-        StructField("ub_fp", LongType()),
-        StructField("suffix_fp", LongType()),
-        StructField("pos", IntegerType()),
-    ])
-    if qp is not None and dfmap is not None and stats_row is not None:
-        # driver-side bound table: same inner-join-with-dfreq
-        # semantics (terms absent from term_df drop), same double
-        # arithmetic in the same order as the plan expressions below,
-        # floor into the same int64 domain — bit-identical ub_fp;
-        # suffix sums and positions are exact integer/ordering ops.
-        ndf = float(stats_row[0])
-        scale = float(1 << fp_bits)
-        per_q: dict = {}
-        for qid, t in qp:
-            if t in dfmap:
-                dff = float(dfmap[t])
-                ub = int(math.floor(
-                    ((2.0 * ndf - 2.0 * dff + 1.0) / (2.0 * dff + 1.0))
-                    * (k1 + 1.0) * scale
-                ))
-                per_q.setdefault(qid, []).append((t, ub))
-            else:
-                per_q.setdefault(qid, [])
-        qub_rows = []
-        for qid, terms_ in per_q.items():
-            terms_.sort(key=lambda x: (-x[1], x[0]))
-            suffix = 0
-            tail_rows = []
-            for t, ub in reversed(terms_):
-                suffix += ub
-                tail_rows.append((t, ub, suffix))
-            tail_rows.reverse()
-            for pos, (t, ub, suffix) in enumerate(tail_rows, start=1):
-                qub_rows.append((qid, t, ub, suffix, pos))
-        qub = _spark.createDataFrame(qub_rows, qub_schema)
-        q1_rows = [(qid, t) for qid, t, _ub, _sf, pos in qub_rows
-                   if pos == 1]
-        q1 = _spark.createDataFrame(q1_rows, qt_schema)
-        q1_terms = sorted({t for _, t in q1_rows})
-    else:
-        dfd = F.col("df").cast("double")
-        nd = F.col("n_docs").cast("double")
-        idf = (F.lit(2.0) * nd - F.lit(2.0) * dfd + F.lit(1.0)) / (
-            F.lit(2.0) * dfd + F.lit(1.0)
-        )
-        qub = (
-            qt.join(F.broadcast(dfreq), "term")
-            .crossJoin(F.broadcast(stats))
-            .select(
-                query_id_col,
-                "term",
-                F.floor(
-                    idf * F.lit(k1 + 1.0) * F.lit(float(1 << fp_bits))
-                )
-                .cast("long")
-                .alias("ub_fp"),
-            )
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.desc("ub_fp"), F.asc("term")
-        )
-        wsuf = w.rowsBetween(
-            Window.currentRow, Window.unboundedFollowing
-        )
-        qub = qub.select(
-            query_id_col,
-            "term",
-            "ub_fp",
-            F.sum("ub_fp").over(wsuf).alias("suffix_fp"),
-            F.row_number().over(w).alias("pos"),
-        ).localCheckpoint(eager=False)  # tiny; consumed by 3 branches
-        # — compute-once dedupe.  Measured r13: persist() instead
-        # loses AQE inside the cached subtree and recomputes under
-        # concurrent broadcast builds; the lazy checkpoint's one
-        # barrier is the cheaper contract
-        q1 = qub.filter(F.col("pos") == 1).select(query_id_col, "term")
-        q1_terms = None
-    # phase 1: score each query's TOP-ub term's postings ALONE (one
-    # narrow term-filtered pass — the top-ub term is the RAREST, so
-    # this touches the short lists, never the common ones).  A
-    # single-term partial UNDERESTIMATES every doc's true score
-    # (partials are strictly positive), so the k-th best of these is
-    # still a valid lower bound θ on the k-th best overall — weaker
-    # than full phase-1 scoring would give, but it avoids a second
-    # whole-vocabulary pass over the postings relation.
-    #
-    # With the literal q1 the rare-term restriction is ALSO an isin
-    # predicate pushed into the postings scan (PushedFilters In(term))
-    # — row groups whose term range misses every rare term are skipped
-    # at the reader, on top of the manifest-level bucket pruning.
-    p1 = post
-    if q1_terms is not None:
-        p1 = post.filter(
-            F.col("term").isin(q1_terms) if q1_terms else F.lit(False)
-        )
-    # tf1 is the rarest terms' posting lists — SHORT by max-score's
-    # own premise, so it is candidate-scale and safe to broadcast
-    # (tf_broadcast): dl then STREAMS through one broadcast hash join
-    # instead of paying a corpus-dl sort-merge shuffle (optimization
-    # r13, VERDICT r12 next #2)
-    tf1 = p1.join(
-        F.broadcast(q1.select("term").distinct()), "term"
-    )
-    # phase-1 scoring WITHOUT the aggregate (optimization r13, guide
-    # §2.3 shuffle less): q1 holds exactly ONE term per query
-    # (row_number == 1) and postings are unique per (term, doc) by the
-    # index contract, so every (query, doc) scoring group is a
-    # SINGLETON — the shared tail's groupBy would shuffle the rows to
-    # sum one element each.  Inline the identical partial-score
-    # arithmetic (one shared expression, _bm25_partial_sfp) as a pure
-    # map over the dl-streamed broadcast join: same score_fp values,
-    # one whole shuffle pipeline gone.
-    s1 = (
-        dl.join(F.broadcast(p1.join(F.broadcast(q1), "term")), id_col)
-        .join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            query_id_col,
-            id_col,
-            _bm25_partial_sfp(k1, b, fp_bits).alias("score_fp"),
-        )
-    )
-    wk = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score_fp"), F.asc(id_col)
-    )
-    theta = (
-        s1.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") == k)
-        .select(query_id_col, F.col("score_fp").alias("theta_fp"))
-    )
-    # essential terms: keep term at position i iff the ub-sum of
-    # positions >= i can still reach theta.  A doc matching ONLY
-    # pruned terms scores STRICTLY below theta (suffix < theta), and
-    # theta is an ACHIEVED k-th score, so >= k docs beat it — pruned
-    # docs can never enter the top-k, even on ties.  No theta (fewer
-    # than k docs matched the top term) => nothing is pruned.
-    # theta is ≤ one row per query — always broadcast-safe (r13).
-    essential = (
-        qub.join(F.broadcast(theta), query_id_col, "left")
-        .filter(
-            F.col("theta_fp").isNull()
-            | (F.col("suffix_fp") >= F.col("theta_fp"))
-        )
-        .select(query_id_col, "term")
-    )
-    # (query, doc) candidate PAIRS, not just a doc set: scoring is
-    # restricted per query, so a candidate doc of one query is never
-    # re-scored against every other query sharing a common term (that
-    # cross-product would re-inflate exactly the common-term rows the
-    # bound pruned)
-    # EAGER localCheckpoint (optimization r13, guide §3.3/§5): cd_pairs
-    # embeds the ENTIRE phase-1 chain (θ scoring, essential-term
-    # restriction, a postings pass) and feeds TWO consumers — the
-    # tf2 candidate restriction and the per-query pairs semi join.
-    # Un-materialized, each consumer re-ran that chain (measured: the
-    # θ/essential subtree alone was ~4 s of the 13 s probe wall,
-    # executed per consumer).  The checkpointed set is O(candidate
-    # pairs) — the pruned path's own working set.  Measured r13:
-    # persist() here loses AQE inside the cached subtree (+5.4 s), and
-    # a LAZY checkpoint is computed TWICE because both consumers are
-    # broadcast-build futures that race before either fills it (two
-    # equal 1.5 s jobs observed) — eager is the only race-free
-    # compute-once contract.
-    # NO .distinct() on either candidate relation (optimization r13,
-    # guide §2.3): both are consumed ONLY as the build side of
-    # broadcast (semi) hash joins, where duplicate keys cannot change
-    # semantics — the hash relation dedupes on insert — so each
-    # distinct was a full shuffle pipeline spent making rows unique
-    # that no consumer needed unique.  The checkpointed set grows from
-    # distinct pairs to essential-matched postings — the same
-    # candidate scale class either way.
-    cd_pairs = (
-        post.join(F.broadcast(essential), "term")
-        .select(query_id_col, id_col)
-        .localCheckpoint(eager=True)
-    )
-    # cand_docs is strictly smaller than cd_pairs, which the scoring
-    # tail ALREADY broadcasts — so broadcasting it into tf2's semi
-    # restriction makes no new scale assumption while removing the
-    # postings-by-id sort-merge shuffle of every vocab-matched
-    # posting.  tf2 itself (candidate-restricted postings) is then
-    # candidate-scale too, so tf_broadcast removes the corpus-dl
-    # shuffle the re-rank paid as well
-    # (optimization r13, VERDICT r12 next #2)
-    cand_docs = cd_pairs.select(id_col)
-    tf2 = post.join(F.broadcast(vocab), "term").join(
-        F.broadcast(cand_docs), id_col, "leftsemi"
-    )
-    s2 = _bm25_score_components(
-        tf2, dl, stats, qt, id_col, query_id_col, k1, b, fp_bits,
-        dfreq=dfreq, keep_fp=True, pairs=cd_pairs, tf_broadcast=True,
-    )
-    topk = (
-        s2.withColumn(
-            "rank", F.row_number().over(wk).cast("long")
-        )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select(
-            query_id_col, "rank", id_col, "n_terms_matched", "score"
-        )
+        .select(query_id_col, "rank", id_col, "n_terms_matched", "score")
     )
-    return {
-        "qub": qub,
-        "tf1": tf1,
-        "tf2": tf2,
-        "essential": essential,
-        "topk": topk,
-    }
 
 
 def bm25_topk_from_index(
@@ -817,81 +474,30 @@ def bm25_topk_from_index(
     k1: float = 1.2,
     b: float = 0.75,
     fp_bits: int = 20,
-    vocab_terms: list[str] | None = None,
-    query_pairs: list[tuple] | None = None,
 ) -> DataFrame:
-    """EXACT top-k BM25 over the maintained index with MAX-SCORE
-    pruning (VERDICT r11 next #4): full scoring evaluates every
-    matched posting per query — at corpus scale a common query term
-    (the/of/and-class) drags millions of postings through the scoring
-    tail to produce a top-10.  Max-score (Turtle & Flood 1995) bounds
-    each term's best-possible contribution and scores only documents
-    that could still reach the current k-th best:
-
-    1. Per-term upper bound ``ub = idf·(k1+1)`` from the MAINTAINED
-       (term, df) matview — O(|corpus vocab|), no posting touched.
-       The logless rational idf is strictly positive, so bounds sum.
-    2. Phase 1: score each query's single highest-ub (= rarest) term's
-       postings alone — one narrow pass over the SHORT lists; those
-       single-term partials underestimate true scores, so their k-th
-       best is a valid lower bound θ on the final k-th best.
-    3. Keep the minimal ub-descending prefix of terms whose suffix
-       bound still reaches θ ("essential"); docs matching ONLY pruned
-       terms score strictly below θ — beaten by ≥ k docs, ties
-       included — so the top-k over essential-term candidates is
-       EXACTLY the unpruned top-k (same integer ranking key, same
-       (score DESC, id) tie-break).
-
-    All bound arithmetic happens in the tail's own 2^fp_bits integer
-    domain (floor is monotone), so pruning decisions are exact — no
-    float-comparison edge can disagree with the unpruned ranking.
-    Scored rows scale with the rare (high-idf) terms' posting lists
-    and k, NOT with the document frequency of common terms.
+    """EXACT top-k BM25 over the maintained index: every matched
+    posting scored through :func:`bm25_scores_from_index` (document
+    frequencies read from the maintained ``term_df``), then cut per
+    query by :func:`bm25_topk` — the same ranking key and tie-break as
+    full scoring, so the result is its top-k row for row.
 
     ``term_df`` is the (term, df) relation the index maintains
     alongside postings (Bm25Index's termdf matview: one row-local
     array_distinct explode, df = docs containing the term).
 
-    Eager work: building the returned DataFrame already runs Spark
-    jobs.  Up to four driver collects turn the control plane into
-    literal relations, each bounded by ``_PRUNE_LITERAL_CAP`` rows:
-    the batch's (query_id, term) pairs (skipped when ``query_pairs``
-    is given), the distinct query terms (only when neither the pairs
-    nor ``vocab_terms`` are at hand), the vocabulary's (term, df)
-    rows from ``term_df``, and the one corpus-stats row.  Then one
-    eager ``localCheckpoint`` materializes the phase-1 (query, doc)
-    candidate pairs, which the tf2 restriction and the per-query
-    pairs join both consume; the result's lineage starts there, so
-    it is not re-derivable on executor loss.
+    There is no max-score pruned plan: on a 640k-document index
+    (16 queries, k=10, 4 vCPU) it never beat this path on wall time,
+    and its broadcasts grew with common-term document frequency.
+    Building the returned frame runs no Spark job.
 
     Returns ``(query_id, rank, doc_id, n_terms_matched, score)``,
     rank 1..k per query."""
-    return _bm25_pruned_plan(
-        postings, doc_lengths, corpus_stats, term_df, queries, k,
-        id_col, query_id_col, term_col, k1, b, fp_bits,
-        vocab_terms=vocab_terms, query_pairs=query_pairs,
-    )["topk"]
-
-
-def _bm25_partial_sfp(k1: float, b: float, fp_bits: int) -> Column:
-    """THE per-(doc, term) BM25 partial as a fixed-point integer —
-    one shared expression over columns (tf, dl, df, n_docs,
-    total_tokens), so the aggregated tail and the pruned path's
-    no-aggregate phase 1 compute bit-identical ``s_fp`` values."""
-    nd = F.col("n_docs").cast("double")
-    avgdl = F.col("total_tokens").cast("double") / nd
-    norm = F.lit(k1) * (
-        F.lit(1.0)
-        - F.lit(b)
-        + F.lit(b) * (F.col("dl").cast("double") / avgdl)
+    scored = bm25_scores_from_index(
+        postings, doc_lengths, corpus_stats, queries,
+        id_col=id_col, query_id_col=query_id_col, term_col=term_col,
+        k1=k1, b=b, fp_bits=fp_bits, term_df=term_df,
     )
-    tfd = F.col("tf").cast("double")
-    dfd = F.col("df").cast("double")
-    idf = (F.lit(2.0) * nd - F.lit(2.0) * dfd + F.lit(1.0)) / (
-        F.lit(2.0) * dfd + F.lit(1.0)
-    )
-    s = idf * (tfd * F.lit(k1 + 1.0)) / (tfd + norm)
-    return F.floor(s * F.lit(float(1 << fp_bits))).cast("long")
+    return bm25_topk(scored, k, id_col, query_id_col)
 
 
 def _bm25_score_components(
@@ -905,75 +511,53 @@ def _bm25_score_components(
     b: float,
     fp_bits: int,
     dfreq: DataFrame | None = None,
-    keep_fp: bool = False,
-    pairs: DataFrame | None = None,
-    tf_broadcast: bool = False,
 ) -> DataFrame:
     """Shared BM25 scoring tail: per-(doc, term) partials from the
     (tf, dl, corpus-stats) components, floor-quantized to fixed point
     and integer-summed per (query, doc) — the order-independent exact
     chain both the recompute and the maintained-index entry points
     share, so they cannot drift.  ``tf`` must already be restricted
-    to the query vocabulary.
-
-    ``dfreq`` (term, df) overrides the derive-from-tf document
-    frequencies — REQUIRED when tf is additionally restricted by
-    document (the max-score pruned path: counting the restricted tf
-    would understate df and change scores).  ``keep_fp`` appends the
-    integer ``score_fp`` column (the exact ranking key the pruned
-    top-k compares against its integer bounds).  ``pairs``
-    (query_id, id) restricts the scored (query, doc) combinations
-    BEFORE the aggregate — without it, a candidate doc pulled in by
-    one query is scored against EVERY query sharing any of its terms,
-    which re-inflates exactly the common-term row count the pruned
-    path exists to avoid.
-
-    ``tf_broadcast=True`` (optimization r13, VERDICT r12 next #2)
-    declares tf CANDIDATE-scale — the pruned top-k's phase inputs
-    (rarest-term posting lists; candidate-restricted re-rank postings),
-    the same scale class as the already-broadcast ``pairs`` — and
-    flips the dl join's build side: the corpus-sized dl STREAMS
-    through a broadcast hash join against tf, replacing the per-phase
-    corpus-dl sort-merge shuffle (the reason the pruned path's wall
-    trailed full scoring at probe scale) with one candidate-sized
-    broadcast and one columnar dl pass.  An inner join either way —
-    scores unchanged."""
+    to the query vocabulary.  ``dfreq`` (term, df) replaces the
+    derive-from-tf document frequencies (the maintained termdf)."""
     if dfreq is None:
         dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    nd = F.col("n_docs").cast("double")
+    avgdl = F.col("total_tokens").cast("double") / nd
+    norm = F.lit(k1) * (
+        F.lit(1.0)
+        - F.lit(b)
+        + F.lit(b) * (F.col("dl").cast("double") / avgdl)
+    )
+    tfd = F.col("tf").cast("double")
+    dfd = F.col("df").cast("double")
+    idf = (F.lit(2.0) * nd - F.lit(2.0) * dfd + F.lit(1.0)) / (
+        F.lit(2.0) * dfd + F.lit(1.0)
+    )
+    s = idf * (tfd * F.lit(k1 + 1.0)) / (tfd + norm)
     # dl is CORPUS-sized by definition (one row per document): the FULL
     # relation must never be driver-broadcast, which the auto threshold
     # did at probe scale (a 640k-row driver collect + broadcast build
     # per action — measured 11.2 s/pass; the pinned sort-merge join
     # reads 5.3 s and AQE may still downgrade it to a local
     # shuffled-hash join when the post-shuffle partitions are small).
-    # With ``tf_broadcast`` the broadcast side is the candidate-scale
-    # tf and dl STREAMS — still never collected.  Guide §3.1: pick the
-    # strategy deliberately when the operator knows a side's scale
-    # class by construction.
-    if tf_broadcast:
-        scored_join = dl.join(F.broadcast(tf), id_col)
-    else:
-        scored_join = tf.join(dl.hint("merge"), id_col)
     part = (
-        scored_join
+        tf.join(dl.hint("merge"), id_col)
         .join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
         .select(
             id_col,
             "term",
-            _bm25_partial_sfp(k1, b, fp_bits).alias("s_fp"),
+            F.floor(s * F.lit(float(1 << fp_bits))).cast("long")
+            .alias("s_fp"),
         )
     )
-    joined = part.join(F.broadcast(qt), "term")
-    if pairs is not None:
-        joined = joined.join(
-            F.broadcast(pairs), [query_id_col, id_col], "leftsemi"
-        )
-    hits = joined.groupBy(query_id_col, id_col).agg(
+    hits = part.join(F.broadcast(qt), "term").groupBy(
+        query_id_col, id_col
+    ).agg(
         F.count(F.lit(1)).cast("long").alias("n_terms_matched"),
         F.sum("s_fp").alias("score_fp"),
     )
-    cols = [
+    return hits.select(
         query_id_col,
         id_col,
         "n_terms_matched",
@@ -981,10 +565,7 @@ def _bm25_score_components(
             F.col("score_fp").cast("double")
             / F.lit(float(1 << fp_bits))
         ).alias("score"),
-    ]
-    if keep_fp:
-        cols.append(F.col("score_fp").cast("long").alias("score_fp"))
-    return hits.select(*cols)
+    )
 
 
 class Bm25Index:
@@ -992,7 +573,8 @@ class Bm25Index:
     convenience composition of the t99 machinery (VERDICT r10 next #6):
     four incrementally-maintained matviews (postings (term, id, tf),
     per-document lengths, one-row corpus totals, and per-term document
-    frequencies — the max-score top-k bounds) under one object with
+    frequencies, which scoring reads instead of re-counting the
+    matched postings) under one object with
     a build / refresh / score lifecycle, so a retrieval service calls
     ``refresh()`` after each corpus commit and ``score(queries)``
     per query batch — never a corpus re-tokenization.
@@ -1034,8 +616,7 @@ class Bm25Index:
         self.postings = TxTable(spark, root.rstrip("/") + "/postings")
         self.doclen = TxTable(spark, root.rstrip("/") + "/doclen")
         self.cstats = TxTable(spark, root.rstrip("/") + "/cstats")
-        # per-term document frequencies — the max-score upper-bound
-        # state (VERDICT r11 next #4): one row per corpus-vocabulary
+        # per-term document frequencies: one row per corpus-vocabulary
         # term, maintained by the same signed-delta algebra
         self.termdf = TxTable(spark, root.rstrip("/") + "/termdf")
 
@@ -1075,7 +656,7 @@ class Bm25Index:
         # DISTINCT terms per doc (row-local): grouped by term, n_rows
         # counts documents containing the term — df, exactly the count
         # the scoring tail derives from unrestricted postings, so
-        # bound arithmetic and scoring can never disagree
+        # reading it instead can never change a score
         return df.select(
             F.explode(
                 F.array_distinct(tokens(F.col(self.text_col)))
@@ -1160,56 +741,17 @@ class Bm25Index:
         the index instead of all of it.  A vocabulary above
         PRUNE_VOCAB_CAP (or one that touches every bucket) reads the
         full snapshot — correctness never depends on pruning, only
-        cost."""
-        df, _terms, _pairs = self._post_snapshot_with_terms(
-            queries, term_col, query_id_col=None
-        )
-        return df
-
-    def _post_snapshot_with_terms(
-        self, queries: DataFrame, term_col: str,
-        query_id_col: str | None = None,
-    ):
-        """(pruned postings, vocab terms or None, (query, term) pairs
-        or None): the terms and pairs are reused by the pruned top-k's
-        literal bound/dfreq construction (optimization r13 — ONE
-        bounded collect of the query batch feeds bucket pruning, the
-        driver-side bound table, and the literal dfreq fetch); both
-        None when the batch exceeded the cap.  With ``query_id_col``
-        None only the terms are collected (the non-top-k path needs
-        no pairs)."""
+        cost.  The bounded distinct-term collect is the one Spark job
+        this costs."""
         import hashlib as _hashlib
 
-        pairs = None
-        if query_id_col is not None:
-            qrows = (
-                queries.select(F.col(query_id_col), F.col(term_col))
-                .limit(self.PRUNE_VOCAB_CAP + 1)
-                .collect()
-            )
-            if len(qrows) <= self.PRUNE_VOCAB_CAP:
-                # repr-keyed: NULL-safe deterministic order (see
-                # _bm25_pruned_plan)
-                pairs = sorted({(r[0], r[1]) for r in qrows},
-                               key=lambda x: (repr(x[0]), repr(x[1])))
-                terms = sorted({t for _, t in pairs}, key=repr)
-            else:
-                terms = [
-                    r[0]
-                    for r in queries.select(term_col)
-                    .distinct()
-                    .limit(self.PRUNE_VOCAB_CAP + 1)
-                    .collect()
-                ]
-        else:
-            terms = [
-                r[0]
-                for r in queries.select(term_col)
-                .distinct()
-                .limit(self.PRUNE_VOCAB_CAP + 1)
-                .collect()
-            ]
-        capped = terms if len(terms) <= self.PRUNE_VOCAB_CAP else None
+        terms = [
+            r[0]
+            for r in queries.select(term_col)
+            .distinct()
+            .limit(self.PRUNE_VOCAB_CAP + 1)
+            .collect()
+        ]
         if 0 < len(terms) <= self.PRUNE_VOCAB_CAP:
             buckets = sorted({
                 int(_hashlib.md5(t.encode()).hexdigest()[:8], 16)
@@ -1219,12 +761,8 @@ class Bm25Index:
             if len(buckets) < self.TB_BUCKETS:
                 return self.postings.snapshot(
                     part=[str(b) for b in buckets]
-                ).select("term", "doc_id", "tf"), capped, pairs
-        return (
-            self.postings.snapshot().select("term", "doc_id", "tf"),
-            capped,
-            pairs,
-        )
+                ).select("term", "doc_id", "tf")
+        return self.postings.snapshot().select("term", "doc_id", "tf")
 
     def refresh(self) -> int:
         """Absorb every corpus commit since the last refresh into all
@@ -1262,51 +800,28 @@ class Bm25Index:
               term_col: str = "term", k1: float = 1.2, b: float = 0.75,
               fp_bits: int = 20, k: int | None = None) -> DataFrame:
         """BM25 scores for a query relation against the maintained
-        index — O(matched postings) per call.  With ``k`` set, routes
-        through :func:`bm25_topk_from_index`: max-score pruning on the
-        maintained per-term df bounds returns the EXACT top-k per
+        index — O(matched postings in the batch's term buckets) per
+        call.  With ``k`` set, routes through
+        :func:`bm25_topk_from_index` and returns the EXACT top-k per
         query — ``(query_id, rank, doc_id, n_terms_matched, score)``
-        — while scoring only candidates that can reach the k-th best
-        (cost follows rare-term posting lists and k, not common-term
-        document frequency)."""
-        post, vocab_terms, query_pairs = self._post_snapshot_with_terms(
-            queries, term_col, query_id_col=query_id_col
+        — the same scoring cut by (score DESC, doc_id)."""
+        post = self._post_snapshot(queries, term_col)
+        dl = self.doclen.snapshot().select("doc_id", "dl")
+        stats = self.cstats.snapshot().select("n_docs", "total_tokens")
+        # the maintained per-term stats replace the derive-from-tf
+        # second pass over matched postings (see bm25_scores_from_index;
+        # identical scores by the termdf invariant)
+        term_df = self.termdf.snapshot().select(
+            "term", F.col("n_rows").alias("df")
         )
+        kw = dict(id_col="doc_id", query_id_col=query_id_col,
+                  term_col=term_col, k1=k1, b=b, fp_bits=fp_bits)
         if k is not None:
-            return bm25_topk_from_index(
-                post,
-                self.doclen.snapshot().select("doc_id", "dl"),
-                self.cstats.snapshot().select("n_docs", "total_tokens"),
-                self.termdf.snapshot().select(
-                    "term", F.col("n_rows").alias("df")
-                ),
-                queries,
-                k=k,
-                id_col="doc_id",
-                query_id_col=query_id_col,
-                term_col=term_col,
-                k1=k1,
-                b=b,
-                fp_bits=fp_bits,
-                vocab_terms=vocab_terms,
-                query_pairs=query_pairs,
-            ).withColumnRenamed("doc_id", self.id_col)
-        return bm25_scores_from_index(
-            post,
-            self.doclen.snapshot().select("doc_id", "dl"),
-            self.cstats.snapshot().select("n_docs", "total_tokens"),
-            queries,
-            id_col="doc_id",
-            query_id_col=query_id_col,
-            term_col=term_col,
-            k1=k1,
-            b=b,
-            fp_bits=fp_bits,
-            # the maintained per-term stats replace the derive-from-tf
-            # second pass over matched postings (see
-            # bm25_scores_from_index; identical scores by the termdf
-            # invariant)
-            term_df=self.termdf.snapshot().select(
-                "term", F.col("n_rows").alias("df")
-            ),
-        ).withColumnRenamed("doc_id", self.id_col)
+            out = bm25_topk_from_index(
+                post, dl, stats, term_df, queries, k=k, **kw
+            )
+        else:
+            out = bm25_scores_from_index(
+                post, dl, stats, queries, term_df=term_df, **kw
+            )
+        return out.withColumnRenamed("doc_id", self.id_col)

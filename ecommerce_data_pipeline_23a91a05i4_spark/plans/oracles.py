@@ -5225,10 +5225,10 @@ LLMDATA_ORACLES["t98_concurrent_writers"] = """
 """
 
 
-# t101: max-score pruned top-k — the oracle IS t94's full-scoring
-# replay (identical derivation, ranking key, and tie-break): hash
-# equality against it is the pruning-exactness theorem, checked
-# cross-engine.
+# t101: top-k from the index relations — the oracle IS t94's
+# full-scoring replay (identical derivation, ranking key, and
+# tie-break): hash equality against it checks the index path against
+# the text recompute, cross-engine.
 CORPUS_ORACLES["t101_bm25_topk_pruned"] = CORPUS_ORACLES[
     "t94_bm25_query_relation"
 ]

@@ -62,7 +62,7 @@ def table_changes(
     BOTH sides; downstream consumers that aggregate the diff see those
     cancel exactly.  Raises across a schema change — a diff between
     incompatible row types has no single row shape."""
-    from .txtable import _col_mapping
+    from .txtable import _col_mapping, _file_diff
 
     m_to = t.manifest(to_version)
     m_from = t.manifest(from_version)
@@ -76,10 +76,7 @@ def table_changes(
             "consumers from the new snapshot instead"
         )
     schema = StructType.fromJson(json.loads(m_to["schema"]))
-    by_path_from = {e["path"]: e for e in m_from["files"]}
-    by_path_to = {e["path"]: e for e in m_to["files"]}
-    added = [e for e in m_to["files"] if e["path"] not in by_path_from]
-    removed = [e for e in m_from["files"] if e["path"] not in by_path_to]
+    added, removed, dv_changed = _file_diff(m_from["files"], m_to["files"])
     # entries on both sides read with their own side's deletion vector
     # applied (automatic in _read_entries), so a vectored file that is
     # later rewritten contributes exactly its visible rows to each side
@@ -96,11 +93,6 @@ def table_changes(
     # rows without changing files (delete_dv, or a restore across
     # one): the row-level diff is the POSITION diff of the two
     # vectors, read once against the raw (vector-free) file rows
-    dv_changed = [
-        (by_path_from[p], by_path_to[p])
-        for p in sorted(by_path_from.keys() & by_path_to.keys())
-        if by_path_from[p].get("dv") != by_path_to[p].get("dv")
-    ]
     if dv_changed:
         cols = [f.name for f in schema.fields]
         raw = t._read_entries(

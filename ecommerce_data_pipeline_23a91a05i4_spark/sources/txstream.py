@@ -80,7 +80,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .txtable import _dv_key
+from .txtable import _dv_key, _file_diff
 
 #: manifest ops that restate the same rows in new files (Delta's
 #: dataChange=false): the feed emits nothing for them
@@ -356,18 +356,9 @@ class TxChangeFeedReader(DataSourceStreamReader):
                 parent_files = _read_manifest(self.root, m["parent"])["files"]
             if m["op"].split(":", 1)[0] in _NON_DATA_OPS:
                 continue  # dataChange=false: same rows, new files
-            by_old = {e["path"]: e for e in parent_files}
-            by_new = {e["path"]: e for e in m["files"]}
-            added = [e for e in m["files"] if e["path"] not in by_old]
-            removed = [e for e in parent_files if e["path"] not in by_new]
-            # same path on both sides, different deletion vector: a
-            # delete_dv commit (or a restore across one) — the row
-            # change is the vector position diff, no file changed
-            dv_changed = [
-                (by_old[p], by_new[p])
-                for p in sorted(by_old.keys() & by_new.keys())
-                if by_old[p].get("dv") != by_new[p].get("dv")
-            ]
+            # dv_changed (same path, different deletion vector): the
+            # row change is the vector position diff, no file changed
+            added, removed, dv_changed = _file_diff(parent_files, m["files"])
             if not added and not removed and not dv_changed:
                 continue  # metadata-only commit (stream floors etc.)
             if _shape(m) != self._shape:

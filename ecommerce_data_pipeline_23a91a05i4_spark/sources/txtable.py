@@ -136,6 +136,31 @@ def _same_json(a, b) -> bool:
     return json.dumps(a, sort_keys=True) == json.dumps(b, sort_keys=True)
 
 
+def _meta_changed(a: dict, b: dict) -> list[str]:
+    """The _REBASE_META fields that differ between two manifests."""
+    return [f for f in _REBASE_META if not _same_json(a.get(f), b.get(f))]
+
+
+def _file_diff(
+    old: list[dict], new: list[dict]
+) -> tuple[list[dict], list[dict], list[tuple[dict, dict]]]:
+    """(added, removed, dv_changed) between two manifests' file lists:
+    entries only in ``new``, entries only in ``old``, and the (old,
+    new) entry pairs of a path on both sides whose deletion vector
+    differs (a delete_dv, or a restore across one: rows changed
+    without a file changing).  The change feed's one file diff."""
+    by_old = {e["path"]: e for e in old}
+    by_new = {e["path"]: e for e in new}
+    added = [e for e in new if e["path"] not in by_old]
+    removed = [e for e in old if e["path"] not in by_new]
+    dv_changed = [
+        (by_old[p], by_new[p])
+        for p in sorted(by_old.keys() & by_new.keys())
+        if by_old[p].get("dv") != by_new[p].get("dv")
+    ]
+    return added, removed, dv_changed
+
+
 def _col_mapping(manifest: dict) -> dict[str, str]:
     """logical -> PHYSICAL column names for one manifest.  Tables start
     with identity (no ``column_mapping`` key — every pre-mapping
@@ -1505,11 +1530,7 @@ class TxTable:
         WriteSerializable (Delta's default): a delete_dv that rebases
         over a concurrent blind append serializes logically BEFORE the
         append, so appended rows matching the predicate survive."""
-        changed = [
-            f
-            for f in _REBASE_META
-            if not _same_json(base_m.get(f), head_m.get(f))
-        ]
+        changed = _meta_changed(base_m, head_m)
         if changed:
             raise CommitConflict(
                 f"{op} on {self.path}: concurrent commit "
@@ -1903,7 +1924,10 @@ class TxTable:
         clean (ADVICE r9).  That drift is caught — CommitConflict from
         append's layout check, or the constraint guard's raise_error —
         and the WHOLE split re-runs against the fresh manifest, keeping
-        the 'nothing raises, rows route' contract."""
+        the 'nothing raises, rows route' contract.  A CommitConflict
+        with no metadata drift (append spent its own ``max_retries``
+        budget on data races) propagates as is: re-splitting cannot
+        change a data race."""
         from pyspark.errors import PySparkException
 
         for _ in range(max_retries + 1):
@@ -1932,6 +1956,8 @@ class TxTable:
                 if not clean.isEmpty():
                     v_clean = self.append(clean, max_retries=max_retries)
             except CommitConflict:
+                if not _meta_changed(m, self.manifest()):
+                    raise  # append's own race budget ran out
                 continue  # layout drifted under the split; re-split
             except PySparkException as exc:
                 if "TxTable constraint" not in str(exc):
@@ -2019,7 +2045,7 @@ class TxTable:
                 )
             evolved = StructType(list(schema.fields))
             for c, t in new_cols.items():
-                evolved = evolved.add(c, t, True)
+                evolved = evolved.add(c, _parse_ddl_type(t), True)
             cmap: dict[str, str] | None | object = _INHERIT
             if m.get("column_mapping") is not None:
                 # mapping-active table (a rename/drop happened): new
@@ -3861,11 +3887,7 @@ class TxTableStreamSink:
                 staged = self.table._stage(
                     df, m.get("partition_by"), _col_mapping(m), _constraints(m)
                 )
-            changed = [
-                f
-                for f in _REBASE_META
-                if not _same_json(orig.get(f), m.get(f))
-            ]
+            changed = _meta_changed(orig, m)
             if changed:
                 raise CommitConflict(
                     f"stream sink on {self.table.path}: concurrent "

@@ -9,7 +9,8 @@ The rebasing verbs must replay their staged work instead of re-running
 the plan; the re-deriving verbs re-run it per attempt.  A static test
 pins the single loop and the single raise site in the module, and the
 SCD2 test pins that scd2_merge_tx stages under the table's CHECK
-constraints like every other verb that stages rows.
+constraints like every other verb that stages rows.  append_quarantine
+re-splits only on a metadata drift; append's spent budget propagates.
 """
 
 from __future__ import annotations
@@ -156,6 +157,76 @@ def test_verb_makes_exactly_max_retries_commit_attempts(
     assert attempts == [head + 1] * 3
     assert stages["n"] == want_stages
     assert t.latest_version() == head
+
+
+def test_append_quarantine_propagates_append_budget(spark, tmp_path):
+    """An append that loses every race (no metadata drift) is not
+    re-split: append_quarantine makes append's max_retries attempts and
+    surfaces append's own error."""
+    t = _table(spark, tmp_path, _df(spark, [(1, "a")]))
+    q = TxTable(spark, str(tmp_path / "q"))
+    head = t.latest_version()
+    attempts: list[int] = []
+
+    def lose(manifest, version):
+        attempts.append(version)
+        raise CommitConflict(
+            f"version {version} of {t.path} was committed concurrently"
+        )
+
+    t._try_commit = lose
+    with pytest.raises(CommitConflict, match="^append on .* lost 3 commit races$"):
+        t.append_quarantine(_df(spark, [(9, "z")]), q, max_retries=3)
+    assert attempts == [head + 1] * 3
+    assert t.latest_version() == head
+    assert q.latest_version() is None
+
+
+@pytest.mark.parametrize("lands", ["before_stage", "before_commit"])
+def test_append_quarantine_resplits_on_constraint_drift(
+    spark, tmp_path, lands
+):
+    """A CHECK constraint committed by another writer between the split
+    and append's stage (the constraint guard fires) or its commit (the
+    rebase refuses the metadata change) re-runs the split: the rows
+    route, nothing raises."""
+    t = _table(spark, tmp_path, _df(spark, [(0, "seed")]))
+    q = TxTable(spark, str(tmp_path / "q"))
+    other = TxTable(spark, t.path)
+    fired: list[str] = []
+
+    def add_constraint() -> None:
+        fired.append(lands)
+        other.add_check_constraint("v_nonempty", "length(v) > 0")
+
+    if lands == "before_stage":
+        append = t.append
+
+        def drifting_append(df, **kw):
+            if not fired:
+                add_constraint()
+            return append(df, **kw)
+
+        t.append = drifting_append
+    else:
+        try_commit = t._try_commit
+
+        def drifting_commit(manifest, version):
+            if not fired:
+                add_constraint()  # the other writer wins this version
+                raise CommitConflict(f"version {version} was taken")
+            return try_commit(manifest, version)
+
+        t._try_commit = drifting_commit
+    v_clean, v_quar = t.append_quarantine(
+        _df(spark, [(1, "ok"), (2, "")]), q, max_retries=3
+    )
+    assert fired == [lands]
+    assert v_clean is not None and v_quar is not None
+    assert {r.k for r in t.snapshot().collect()} == {0, 1}
+    assert [(r.k, r._violated) for r in q.snapshot().collect()] == [
+        (2, "v_nonempty")
+    ]
 
 
 def _loops_that_commit(tree: ast.AST) -> list[ast.AST]:

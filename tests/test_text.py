@@ -340,19 +340,15 @@ def test_bm25_index_stamp_rides_refresh_commit(spark, tmp_path):
     assert got_dl == want_dl
 
 
-def test_bm25_maxscore_topk_equals_full_scoring_and_prunes(spark, tmp_path):
-    """Max-score pruned top-k (VERDICT r11 next #4): on a corpus with
-    one wall-to-wall common term and a few rare terms, the pruned
-    path must return EXACTLY the full-scoring top-k (same integer
-    ranking key, same tie-break) while pushing strictly fewer rows
-    through the scoring tail than the full matched-posting count —
-    the scored-rows-scale-with-k property."""
+def test_bm25_index_topk_equals_full_scoring(spark, tmp_path):
+    """Bm25Index.score(k) on a corpus with one wall-to-wall common term
+    and a few rare terms returns EXACTLY the full-scoring top-k (same
+    integer ranking key, same tie-break)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ecommerce_data_pipeline_23a91a05i4_spark.operators.text import (
         Bm25Index,
-        _bm25_pruned_plan,
     )
     from ecommerce_data_pipeline_23a91a05i4_spark.sources.txtable import (
         TxTable,
@@ -380,7 +376,7 @@ def test_bm25_maxscore_topk_equals_full_scoring_and_prunes(spark, tmp_path):
         "query_id long, term string",
     )
     k = 3
-    pruned = idx.score(qt, k=k)
+    topk = idx.score(qt, k=k)
     full = idx.score(qt)
     w = Window.partitionBy("query_id").orderBy(
         F.desc((F.col("score") * (1 << 20)).cast("long")), F.asc("doc_id")
@@ -390,33 +386,35 @@ def test_bm25_maxscore_topk_equals_full_scoring_and_prunes(spark, tmp_path):
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "n_terms_matched", "score")
     )
-    got = sorted(map(tuple, pruned.collect()))
+    got = sorted(map(tuple, topk.collect()))
     want = sorted(map(tuple, full_topk.collect()))
     assert got == want and got
 
-    # pruning property: 'common' (df=40) must be non-essential for
-    # query 0 (rare's docs fill the top-3 and common's bound cannot
-    # reach theta), so scored rows < full matched postings
-    parts = _bm25_pruned_plan(
-        idx.postings.snapshot().select("term", "doc_id", "tf"),
-        idx.doclen.snapshot().select("doc_id", "dl"),
-        idx.cstats.snapshot().select("n_docs", "total_tokens"),
-        idx.termdf.snapshot().select(
-            "term", F.col("n_rows").alias("df")
-        ),
-        qt, k, "doc_id", "query_id", "term", 1.2, 0.75, 20,
+
+def test_bm25_topk_from_index_builds_without_spark_jobs(spark, jobs):
+    """Building the top-k frame is lazy: no driver collect, no eager
+    checkpoint — the first Spark job is the caller's action."""
+    from ecommerce_data_pipeline_23a91a05i4_spark.operators.text import (
+        bm25_topk_from_index,
     )
-    ess = {
-        (r.query_id, r.term) for r in parts["essential"].collect()
-    }
-    assert (0, "rare") in ess
-    assert (0, "common") not in ess  # the common term got pruned
-    full_matched = (
-        idx.postings.snapshot()
-        .join(qt.select("term").distinct(), "term")
-        .count()
+
+    postings = spark.createDataFrame(
+        [("alpha", 1, 2), ("beta", 1, 1), ("alpha", 2, 1), ("beta", 3, 4)],
+        "term string, doc_id long, tf long",
     )
-    assert parts["tf2"].count() < full_matched
+    dl = spark.createDataFrame([(1, 3), (2, 1), (3, 4)], "doc_id long, dl long")
+    stats = spark.createDataFrame([(3, 8)], "n_docs long, total_tokens long")
+    termdf = spark.createDataFrame(
+        [("alpha", 2), ("beta", 2)], "term string, df long"
+    )
+    qt = spark.createDataFrame(
+        [(0, "alpha"), (0, "beta"), (1, "beta")], "query_id long, term string"
+    )
+    with jobs("bm25_topk_build") as ids:
+        out = bm25_topk_from_index(postings, dl, stats, termdf, qt, k=2)
+    assert ids == []
+    got = [(r.query_id, r.rank, r.doc_id) for r in out.collect()]
+    assert sorted(got) == [(0, 1, 1), (0, 2, 3), (1, 1, 3), (1, 2, 1)]
 
 
 def test_bm25_index_bucket_pruned_read_is_exact_and_partial(spark, tmp_path):

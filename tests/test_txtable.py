@@ -840,6 +840,10 @@ def test_add_columns_is_metadata_only_and_null_backfills(spark, tmp_path):
     assert got == {(1, None), (2, None), (3, 0.5)}
     # time travel still reads the pre-evolution schema
     assert "score" not in t.snapshot(version=1).columns
+    # DDL type spellings, the ones widen_column accepts too
+    t.add_columns({"n": "int", "big": "bigint"})
+    types = dict(t.snapshot().dtypes)
+    assert (types["n"], types["big"]) == ("int", "bigint")
 
 
 def test_add_columns_validations_and_dml_interplay(spark, tmp_path):
