@@ -37,6 +37,13 @@ time stay O(changed files), not O(table files), as the table grows
 (VERDICT r9 next #1: the v1 full-list manifest was a multi-hundred-MB
 JSON per commit at ~800k files).
 
+Manifest bookkeeping has one home per rule: ``_commit`` carries the
+_CARRIED table-metadata fields forward from the parent's raw manifest;
+``TxTable._file_delta`` computes a commit's (removed keys, added
+entries) and ``TxTable._apply_delta`` applies one (log replay, the
+post-commit cache, conflict rebase); ``TxTable._select_entries`` picks
+the entries a read, count or maintenance scope touches.
+
 Why this beats the stage-then-swap publish at 100 TB on object stores:
 
 - **Commit = one create-if-absent of a small JSON file** (the
@@ -93,8 +100,13 @@ DV_SCHEMA = StructType(
     [StructField("file_key", StringType()), StructField("pos", LongType())]
 )
 
-#: _commit sentinel: carry the parent manifest's column mapping forward
-_INHERIT = object()
+#: table-metadata manifest fields every commit carries forward from its
+#: parent unless the committing verb sets them (see _commit), in the
+#: order a manifest writes them
+_CARRIED = (
+    "stream_floors", "column_mapping", "constraints", "table_stats",
+    "generated", "copy_registry", "features",
+)
 
 #: internal column names the engine injects at read time: snapshot
 #: (_with_file=True) adds ``_tx_file`` for file-granular DML, so a user
@@ -567,11 +579,14 @@ class TxTable:
         """Reconstruct ``version``'s full file list: walk parents until
         a resolution BASE (cached state, legacy ``files`` manifest,
         parquet checkpoint, or the empty pre-v1 state), then replay the
-        delta chain forward.  With the default checkpoint cadence the
-        cold-path walk is bounded by ``checkpoint_interval`` manifests
-        — the property that keeps snapshot() driver time flat as the
-        commit count grows.  ``use_checkpoints=False`` forces a pure
-        full-log replay (the t93 gate pins both paths equal)."""
+        delta chain forward, each commit's (removed keys, sidecar
+        entries) through :meth:`_apply_delta` — the one apply step
+        _commit's cache seeding and _rebase_entries share.  With the
+        default checkpoint cadence the cold-path walk is bounded by
+        ``checkpoint_interval`` manifests — the property that keeps
+        snapshot() driver time flat as the commit count grows.
+        ``use_checkpoints=False`` forces a pure full-log replay (the t93
+        gate pins both paths equal)."""
         if use_checkpoints and version in self._entries_cache:
             return self._entries_cache[version]
         chain: list[dict] = []
@@ -599,13 +614,13 @@ class TxTable:
         state = {self._entry_key(e): e for e in base}
         for raw in reversed(chain):
             d = raw["delta"]
-            for k in d.get("remove") or []:
-                state.pop((k[0], k[1]), None)
-            if d.get("sidecar"):
-                for e in self._read_entries_parquet(
-                    self._sidecar_abs(d["sidecar"])
-                ):
-                    state[self._entry_key(e)] = e
+            self._apply_delta(
+                state,
+                d.get("remove") or [],
+                self._read_entries_parquet(self._sidecar_abs(d["sidecar"]))
+                if d.get("sidecar")
+                else [],
+            )
             if use_checkpoints:
                 self._entries_cache[raw["version"]] = self._canon_order(
                     state.values()
@@ -624,6 +639,40 @@ class TxTable:
         sequences (and restore()'s 'byte-identical to the restored
         version' contract would be order-fragile)."""
         return sorted(entries, key=cls._entry_key)
+
+    @classmethod
+    def _file_delta(
+        cls, old: list[dict], new: list[dict]
+    ) -> tuple[list[tuple], list[dict]]:
+        """(removed keys, added entries) taking file list ``old`` to
+        ``new``: a changed entry (same key, other JSON — a new deletion
+        vector, say) is both removed and added.  Removed keys keep
+        ``old``'s order, added entries ``new``'s — the order a commit
+        writes them in."""
+        by_old = {cls._entry_key(e): e for e in old}
+        by_new = {cls._entry_key(e): e for e in new}
+        removed = [
+            k
+            for k, e in by_old.items()
+            if k not in by_new or not _same_json(e, by_new[k])
+        ]
+        added = [
+            e
+            for k, e in by_new.items()
+            if k not in by_old or not _same_json(by_old[k], e)
+        ]
+        return removed, added
+
+    @classmethod
+    def _apply_delta(
+        cls, state: dict, removed: list, added: list[dict]
+    ) -> None:
+        """Apply a file-list delta to ``state`` (entry key -> entry) in
+        place.  Keys may come back from the JSON log as lists."""
+        for k in removed:
+            state.pop(tuple(k), None)
+        for e in added:
+            state[cls._entry_key(e)] = e
 
     def _abs(self, e: dict) -> str:
         """A manifest entry's absolute data path.  Entries carry paths
@@ -752,11 +801,38 @@ class TxTable:
         data-skipping observability number.  ``col`` is a column name
         with [lo, hi] bounds, or a list of (col, lo, hi) triples
         (ANDed, like snapshot(prune=...))."""
-        conds = self._norm_prune((col, lo, hi) if isinstance(col, str) else col)
         m = self.manifest(version)
-        conds = self._phys_conds(conds, _col_mapping(m), self.path)
+        prune = (col, lo, hi) if isinstance(col, str) else col
+        return len(self._select_entries(m, prune=prune)), len(m["files"])
+
+    def _select_entries(
+        self, m: dict, part=None, prune=None, prune_eq=None, bloom=True
+    ) -> list[dict]:
+        """THE entry selection of every read, count and maintenance
+        scope over manifest ``m``: entries whose partition value is in
+        ``part`` (a value or a list of values, compared with the
+        manifest's string form), then manifest-stats skipping on the
+        ``prune`` range triple(s) and on ``prune_eq``'s (col, value)
+        probes as lo=hi=value ranges, then — with ``bloom`` — the
+        probes' bloom filters.  Every condition names a current logical
+        column (see _phys_conds); entries without stats or a filter are
+        always kept."""
         entries = m["files"]
-        return len(self._prune_entries(entries, conds)), len(entries)
+        if part is not None:
+            wanted = {part} if isinstance(part, str) else set(part)
+            entries = [e for e in entries if e.get("part") in wanted]
+        conds = self._norm_prune(prune) if prune is not None else []
+        conds += [(c, v, v) for c, v in prune_eq or []]
+        if not conds:
+            return entries
+        mapping = _col_mapping(m)
+        entries = self._prune_entries(
+            entries, self._phys_conds(conds, mapping, self.path)
+        )
+        if prune_eq and bloom:
+            schema = StructType.fromJson(json.loads(m["schema"]))
+            entries = self._bloom_prune(entries, list(prune_eq), mapping, schema)
+        return entries
 
     def _bloom_prune(
         self,
@@ -857,35 +933,18 @@ class TxTable:
                 )
             version = self.version_at_timestamp(timestamp)
         m = self.manifest(version)
-        schema = StructType.fromJson(json.loads(m["schema"]))
         pcol = m.get("partition_by")
-        mapping = _col_mapping(m)
-        entries = m["files"]
-        if part is not None:
-            if pcol is None:
-                raise ValueError(
-                    f"snapshot(part=...) on {self.path}: table is not "
-                    "partitioned"
-                )
-            wanted = {part} if isinstance(part, str) else set(part)
-            entries = [e for e in entries if e.get("part") in wanted]
-        if prune is not None:
-            conds = self._phys_conds(
-                self._norm_prune(prune), mapping, self.path
-            )
-            entries = self._prune_entries(entries, conds)
-        if prune_eq:
-            conds = self._phys_conds(
-                self._norm_prune([(c, v, v) for c, v in prune_eq]),
-                mapping,
-                self.path,
-            )
-            entries = self._prune_entries(entries, conds)
-            entries = self._bloom_prune(
-                entries, list(prune_eq), mapping, schema
+        if part is not None and pcol is None:
+            raise ValueError(
+                f"snapshot(part=...) on {self.path}: table is not "
+                "partitioned"
             )
         return self._read_entries(
-            schema, pcol, entries, _with_file, mapping=mapping,
+            StructType.fromJson(json.loads(m["schema"])),
+            pcol,
+            self._select_entries(m, part, prune, prune_eq),
+            _with_file,
+            mapping=_col_mapping(m),
             _with_pos=_with_pos,
         )
 
@@ -899,17 +958,8 @@ class TxTable:
         ``bloom=False`` only min/max skipping runs, which is the
         before/after observability pair the bloom gate pins."""
         m = self.manifest(version)
-        mapping = _col_mapping(m)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        conds = self._phys_conds(
-            self._norm_prune([(c, v, v) for c, v in probes]),
-            mapping,
-            self.path,
-        )
-        entries = self._prune_entries(m["files"], conds)
-        if bloom:
-            entries = self._bloom_prune(entries, list(probes), mapping, schema)
-        return len(entries), len(m["files"])
+        kept = self._select_entries(m, prune_eq=probes, bloom=bloom)
+        return len(kept), len(m["files"])
 
     def _dv_abs(self, e: dict) -> str:
         """A manifest entry's absolute deletion-vector path.  The
@@ -992,25 +1042,6 @@ class TxTable:
                 out_schema = out_schema.add("_tx_key", "string")
                 out_schema = out_schema.add("_tx_pos", "long")
             return _empty_frame(self.spark, out_schema)
-        if pcol is None:
-            phys_schema = StructType(
-                [
-                    StructField(p(f.name), f.dataType, f.nullable)
-                    for f in schema.fields
-                ]
-            )
-            paths = [self._abs(e) for e in entries]
-            out = self.spark.read.schema(phys_schema).parquet(*paths)
-            if _with_file:
-                out = out.withColumn("_tx_file", F.input_file_name())
-            if need_pos:
-                out = out.withColumn(
-                    "_tx_key", _dv_key_col(None)
-                ).withColumn("_tx_pos", F.col("_metadata.row_index"))
-                if has_dv:
-                    out = self._apply_dv(out, entries)
-            return out.select(sel)
-        ptype = schema[pcol].dataType
         data_schema = StructType(
             [
                 StructField(p(f.name), f.dataType, f.nullable)
@@ -1018,9 +1049,12 @@ class TxTable:
                 if f.name != pcol
             ]
         )
+        # one scan per partition value; an unpartitioned read is ONE
+        # scan of every entry (the single None group, no literal column)
         by_val: dict[str | None, list[str]] = {}
         for e in entries:
-            by_val.setdefault(e["part"], []).append(self._abs(e))
+            val = e["part"] if pcol is not None else None
+            by_val.setdefault(val, []).append(self._abs(e))
         parts = []
         # None sorts first (a NULL partition; also files staged
         # unpartitioned before a concurrent layout change)
@@ -1036,7 +1070,11 @@ class TxTable:
                 part = part.withColumn(
                     "_tx_key", _dv_key_col(val)
                 ).withColumn("_tx_pos", F.col("_metadata.row_index"))
-            parts.append(part.withColumn(p(pcol), F.lit(val).cast(ptype)))
+            if pcol is not None:
+                part = part.withColumn(
+                    p(pcol), F.lit(val).cast(schema[pcol].dataType)
+                )
+            parts.append(part)
         out = parts[0]
         for part in parts[1:]:
             out = out.unionAll(part)
@@ -1285,25 +1323,36 @@ class TxTable:
         base_version: int | None,
         schema: StructType,
         partition_by: str | None,
-        stream_floors: dict[str, int] | None = None,
-        column_mapping: dict[str, str] | None | object = _INHERIT,
-        constraints: list[dict] | object = _INHERIT,
-        table_stats: dict | object = _INHERIT,
-        generated: dict[str, str] | None | object = _INHERIT,
         extra: dict | None = None,
-        copy_registry: dict | None | object = _INHERIT,
-        features: dict | None | object = _INHERIT,
+        **meta,
     ) -> int:
-        """``stream_floors`` — per-logical-stream highest committed
-        batch id (TxTableStreamSink's durable exactly-once floor, keyed
-        by the sink's ``app_id`` like Delta's txnAppId/txnVersion —
-        ADVICE r6: a single table-wide floor silently swallowed the
-        first batches of any NEW stream, whose fresh checkpoint restarts
-        batch ids at 0).  A monotone map EVERY commit carries forward
-        from its parent (pass None to inherit), so vacuum() can never
-        erase a sink's idempotence memory — any retained manifest knows
-        it.  The sink passes its own entry raised to max(floor,
-        batch_id) on its own commits."""
+        """Commit ``entries`` as the table's file list at version
+        ``base_version + 1`` (None: the first commit), with ``schema``
+        and ``partition_by``; raise CommitConflict when another writer
+        took that version.
+
+        ``meta`` sets any of the _CARRIED table-metadata fields; None or
+        an empty value clears one.  Every field the caller leaves out is
+        inherited from the parent's RAW manifest — no entry resolution —
+        so table metadata survives every verb that does not own it:
+        ``stream_floors`` (TxTableStreamSink's per-app durable
+        exactly-once floor, Delta's txnAppId/txnVersion — vacuum() can
+        never erase a sink's idempotence memory while any retained
+        manifest carries it; a legacy scalar ``stream_floor`` folds into
+        the default app), ``column_mapping`` (a mapped table stays
+        mapped; overwrite() and restore() set it), ``constraints``
+        (until drop_constraint()), ``table_stats`` (the freshest
+        ANALYZE; its computed_at says how stale), ``generated``,
+        ``copy_registry`` (COPY INTO's ingest memory) and ``features``
+        (a feature-gated table stays gated; an unknown writer feature
+        refuses the commit).  Non-empty fields are written in _CARRIED
+        order.
+
+        ``extra`` is commit-scoped metadata a verb records about itself
+        (copy_into's source files, an index stamp) — never carried
+        forward.  The payload is the file-list DIFF against the parent
+        (:meth:`_file_delta`): removed keys inline, added entries in a
+        columnar parquet sidecar, so a commit stays O(changed files)."""
         reserved = _RESERVED_COLS.intersection(f.name for f in schema.fields)
         if reserved:
             raise ValueError(
@@ -1311,71 +1360,23 @@ class TxTable:
                 f"internal row lineage on {self.path} (snapshot injects "
                 "them for delete()/merge()); pick different names"
             )
+        unknown = sorted(set(meta) - set(_CARRIED))
+        if unknown:
+            raise TypeError(f"_commit: unknown metadata field(s) {unknown}")
         version = (base_version or 0) + 1
-        parent = None
-        if base_version is not None and (
-            stream_floors is None
-            or column_mapping is _INHERIT
-            or constraints is _INHERIT
-            or table_stats is _INHERIT
-            or generated is _INHERIT
-            or copy_registry is _INHERIT
-            or features is _INHERIT
-        ):
-            parent = self.manifest(base_version)
-        if features is _INHERIT:
-            # protocol feature lists ride every commit forward, like
-            # stream_floors — a feature-gated table stays gated
-            features = (
-                parent.get("features") if parent is not None else None
-            )
-        if features:
-            unknown_w = sorted(
-                set(features.get("writer") or [])
-                - _SUPPORTED_WRITER_FEATURES
-            )
-            if unknown_w:
-                raise RuntimeError(
-                    f"cannot write {self.path}: the table log requires "
-                    f"writer feature(s) {unknown_w} this engine version "
-                    "does not implement; upgrade the writer (protocol "
-                    "feature gate, see _SUPPORTED_WRITER_FEATURES)"
-                )
-        if copy_registry is _INHERIT:
-            # the COPY INTO idempotence registry (see copy_into) is
-            # carried forward by every commit so vacuum can never erase
-            # ingest memory (ADVICE r10: the per-manifest copy_into keys
-            # alone forgot files once their manifests were pruned)
-            copy_registry = (
-                parent.get("copy_registry") if parent is not None else None
-            )
-        if stream_floors is None and parent is not None:
-            stream_floors = _stream_floors(parent)
-        if table_stats is _INHERIT:
-            # the freshest completed ANALYZE rides every commit forward
-            # (its computed_at version says how stale it is)
-            table_stats = (
-                parent.get("table_stats") if parent is not None else None
-            )
-        if generated is _INHERIT:
-            # generated-column declarations are table metadata, carried
-            # like constraints; overwrite() resets them explicitly
-            generated = (
-                _generated(parent) or None if parent is not None else None
-            )
-        if column_mapping is _INHERIT:
-            # every commit carries its parent's mapping forward (the
-            # stream_floors discipline) — a mapped table stays mapped
-            # through append/delete/merge/compact without those verbs
-            # knowing; overwrite() resets it explicitly
-            column_mapping = (
-                parent.get("column_mapping") if parent is not None else None
-            )
-        if constraints is _INHERIT:
-            # constraints are table metadata: carried by every commit
-            # (overwrite included) until drop_constraint()
-            constraints = (
-                _constraints(parent) if parent is not None else []
+        parent = {} if base_version is None else self._manifest_raw(base_version)
+        meta.setdefault("stream_floors", _stream_floors(parent))
+        meta = {f: meta.get(f, parent.get(f)) for f in _CARRIED}
+        unknown_w = sorted(
+            set((meta["features"] or {}).get("writer") or [])
+            - _SUPPORTED_WRITER_FEATURES
+        )
+        if unknown_w:
+            raise RuntimeError(
+                f"cannot write {self.path}: the table log requires "
+                f"writer feature(s) {unknown_w} this engine version "
+                "does not implement; upgrade the writer (protocol "
+                "feature gate, see _SUPPORTED_WRITER_FEATURES)"
             )
         manifest = {
             "version": version,
@@ -1384,70 +1385,28 @@ class TxTable:
             "schema": json.dumps(schema.jsonValue()),
             "partition_by": partition_by,
         }
-        if stream_floors:
-            manifest["stream_floors"] = {
-                app: int(v) for app, v in stream_floors.items()
-            }
-        if column_mapping:
-            manifest["column_mapping"] = dict(column_mapping)
-        if constraints:
-            manifest["constraints"] = [dict(c) for c in constraints]
-        if table_stats:
-            manifest["table_stats"] = dict(table_stats)
-        if generated:
-            manifest["generated"] = dict(generated)
-        if copy_registry:
-            manifest["copy_registry"] = dict(copy_registry)
-        if features:
-            manifest["features"] = {
-                k: sorted(v) for k, v in features.items() if v
-            }
+        manifest.update((f, v) for f, v in meta.items() if v)
         if extra:
-            # commit-scoped metadata a VERB records about itself (e.g.
-            # copy_into's ingested source-file names) — not carried
-            # forward, readable from the raw manifest
-            reserved_keys = set(manifest) | {
-                "files",
-                "delta",
-                "committed_at",
-                "metrics",
-            }
-            clash = sorted(set(extra) & reserved_keys)
+            clash = sorted(
+                set(extra)
+                & (
+                    set(manifest)
+                    | set(_CARRIED)
+                    | {"files", "delta", "committed_at", "metrics"}
+                )
+            )
             if clash:
                 raise ValueError(
                     f"_commit: extra keys {clash} collide with manifest "
                     "structure"
                 )
             manifest.update(extra)
-        # v2 commit payload = the DIFF against the parent state, not the
-        # full file list (VERDICT r9 next #1: a full list made every
-        # commit O(n_files) JSON — multi-hundred-MB per commit at 100 TB
-        # scale).  Added/changed entries — the carriers of per-file
-        # stats and bloom bitsets — ride a columnar parquet SIDECAR
-        # written before the commit file, so the JSON stays O(changed).
         parent_entries = (
             self._resolve_entries(base_version)
             if base_version is not None
             else []
         )
-        old = {self._entry_key(e): e for e in parent_entries}
-        new = {self._entry_key(e): e for e in entries}
-
-        def _same(a: dict, b: dict) -> bool:
-            return json.dumps(a, sort_keys=True) == json.dumps(
-                b, sort_keys=True
-            )
-
-        removes = [
-            list(k)
-            for k, e in old.items()
-            if k not in new or not _same(e, new[k])
-        ]
-        adds = [
-            e
-            for k, e in new.items()
-            if k not in old or not _same(old[k], e)
-        ]
+        removes, adds = self._file_delta(parent_entries, entries)
         sidecar = None
         if adds:
             self.fs.mkdirs(self._log)  # first commit: log dir not yet made
@@ -1477,14 +1436,11 @@ class TxTable:
                 # it now rather than leaving it for vacuum
                 self.fs.delete(self._sidecar_abs(sidecar))
             raise
-        # seed the cache with the REPLAY result (parent order minus
-        # removes, adds appended) so every handle resolves the same
+        # seed the cache with the REPLAY result (the parent state with
+        # this delta applied) so every handle resolves the same
         # canonical order regardless of the caller's entry order
-        state = dict(old)
-        for k in removes:
-            state.pop((k[0], k[1]), None)
-        for e in adds:
-            state[self._entry_key(e)] = e
+        state = {self._entry_key(e): e for e in parent_entries}
+        self._apply_delta(state, removes, adds)
         resolved = json.loads(
             json.dumps(self._canon_order(state.values()))
         )
@@ -1507,13 +1463,13 @@ class TxTable:
         op: str,
         base_m: dict,
         head_m: dict,
-        base_state: dict,
-        removed_keys: set,
+        removed_keys: list,
         adds: list[dict],
     ) -> list[dict]:
         """Delta-style LOGICAL conflict check (VERDICT r10 next #1):
         given a transaction that read ``base_m`` and wants to remove
-        ``removed_keys`` / add ``adds``, decide whether the interleaved
+        ``removed_keys`` / add ``adds`` (its :meth:`_file_delta`
+        against ``base_m``), decide whether the interleaved
         commits up to ``head_m`` COMMUTE with it.  They do when (a) no
         table metadata changed (_REBASE_META — schema, layout, mapping,
         constraints, generated columns: staged files were validated
@@ -1523,13 +1479,14 @@ class TxTable:
         transaction computed from stale bytes).  Commuting interleaves
         — append vs append, compact vs disjoint append, delete_dv vs
         append, scoped compacts of disjoint partitions — REBASE: the
-        transaction's delta replays onto head's file state and lands
-        without re-running its plan.  Anything else raises a specific
-        CommitConflict and the verb falls back to re-derivation (or
-        surfaces it, per verb).  Isolation level for rebasing verbs is
-        WriteSerializable (Delta's default): a delete_dv that rebases
-        over a concurrent blind append serializes logically BEFORE the
-        append, so appended rows matching the predicate survive."""
+        transaction's delta replays onto head's file state
+        (:meth:`_apply_delta`) and lands without re-running its plan.
+        Anything else raises a specific CommitConflict and the verb
+        falls back to re-derivation (or surfaces it, per verb).
+        Isolation level for rebasing verbs is WriteSerializable
+        (Delta's default): a delete_dv that rebases over a concurrent
+        blind append serializes logically BEFORE the append, so
+        appended rows matching the predicate survive."""
         changed = _meta_changed(base_m, head_m)
         if changed:
             raise CommitConflict(
@@ -1538,6 +1495,7 @@ class TxTable:
                 f"table metadata/layout ({', '.join(changed)}); "
                 "re-derive against the new snapshot"
             )
+        base_state = {self._entry_key(e): e for e in base_m["files"]}
         head_state = {self._entry_key(e): e for e in head_m["files"]}
         for k in removed_keys:
             if not _same_json(base_state.get(k), head_state.get(k)):
@@ -1547,12 +1505,8 @@ class TxTable:
                     f"rewrote, vectored, or removed input file {k[1]!r}; "
                     "re-derive against the new snapshot"
                 )
-        out = {
-            k: e for k, e in head_state.items() if k not in removed_keys
-        }
-        for e in adds:
-            out[self._entry_key(e)] = e
-        return self._canon_order(out.values())
+        self._apply_delta(head_state, removed_keys, adds)
+        return self._canon_order(head_state.values())
 
     def _commit_loop(
         self,
@@ -1603,7 +1557,7 @@ class TxTable:
                 head = self.manifest()
                 rebased = None
                 if rebase:
-                    delta = delta or self._rebase_delta(m, entries)
+                    delta = delta or self._file_delta(m["files"], entries)
                     try:
                         rebased = self._rebase_entries(op, m, head, *delta)
                     except CommitConflict:
@@ -1638,26 +1592,6 @@ class TxTable:
         raise CommitConflict(
             f"{verb} on {self.path} lost {max_retries} commit races"
         )
-
-    def _rebase_delta(
-        self, base_m: dict, entries: list[dict]
-    ) -> tuple[dict, set, list[dict]]:
-        """(base state, removed keys, added entries) of a transaction
-        that read ``base_m`` and proposes ``entries`` — the delta
-        _rebase_entries replays onto a newer head."""
-        base_state = {self._entry_key(e): e for e in base_m["files"]}
-        desired = {self._entry_key(e): e for e in entries}
-        removed_keys = {
-            k
-            for k, e in base_state.items()
-            if k not in desired or not _same_json(e, desired[k])
-        }
-        adds = [
-            e
-            for k, e in desired.items()
-            if k not in base_state or not _same_json(base_state[k], e)
-        ]
-        return base_state, removed_keys, adds
 
     @staticmethod
     def _check_schema(df: DataFrame, table_schema: StructType) -> None:
@@ -1842,26 +1776,27 @@ class TxTable:
         if not new:
             return None, []
         df = self.spark.read.parquet(*new)
-        pcol = base.get("partition_by")
-        schema_json = base["schema"]
-        cmap = base.get("column_mapping")
         df, gen_guards = self._complete_generated(df, _generated(base))
         self._check_schema(
-            df, StructType.fromJson(json.loads(schema_json))
+            df, StructType.fromJson(json.loads(base["schema"]))
         )
         staged = self._stage(
-            df, pcol, _col_mapping(base), _constraints(base) + gen_guards
+            df,
+            base.get("partition_by"),
+            _col_mapping(base),
+            _constraints(base) + gen_guards,
         )
 
         def attempt(head: dict) -> dict:
-            if (
-                head.get("partition_by") != pcol
-                or head["schema"] != schema_json
-                or head.get("column_mapping") != cmap
-            ):
+            # the files were staged (and their rows checked) against
+            # base's metadata: any drift — layout, mapping, a constraint
+            # or generated column added meanwhile — needs a re-run
+            changed = _meta_changed(base, head)
+            if changed:
                 raise CommitConflict(
-                    f"copy_into {self.path}: table layout changed "
-                    "concurrently; re-run against the new layout"
+                    f"copy_into {self.path}: concurrent commit changed "
+                    f"table metadata/layout ({', '.join(changed)}); "
+                    "re-run against the new layout"
                 )
             # O(1) with a registry: one manifest key + one sidecar read
             # per retry, never a log walk (ADVICE r10 was O(versions^2)
@@ -2046,7 +1981,7 @@ class TxTable:
             evolved = StructType(list(schema.fields))
             for c, t in new_cols.items():
                 evolved = evolved.add(c, _parse_ddl_type(t), True)
-            cmap: dict[str, str] | None | object = _INHERIT
+            plan = dict(entries=m["files"], schema=evolved)
             if m.get("column_mapping") is not None:
                 # mapping-active table (a rename/drop happened): new
                 # columns get NEVER-USED physical names, so a column
@@ -2054,12 +1989,11 @@ class TxTable:
                 # type — cannot resurrect the dropped column's bytes
                 # out of pre-drop files (which still carry the old
                 # physical column for time travel)
-                cmap = dict(m["column_mapping"])
-                for c in new_cols:
-                    cmap[c] = _fresh_physical(c)
-            return dict(
-                entries=m["files"], schema=evolved, column_mapping=cmap
-            )
+                plan["column_mapping"] = {
+                    **m["column_mapping"],
+                    **{c: _fresh_physical(c) for c in new_cols},
+                }
+            return plan
 
         return self._commit_loop("add_columns", attempt, max_retries)
 
@@ -2623,16 +2557,12 @@ class TxTable:
         stat-less entry cannot be proven cold, so it lands IN scope —
         harmless (maintenance rewrites preserve data) but wasteful;
         record stats on the scope column to make scoping sharp."""
-        entries = m["files"]
         if isinstance(where, str):
-            scoped = [e for e in entries if e.get("part") == where]
+            scoped = self._select_entries(m, part=where)
         else:
-            conds = self._phys_conds(
-                self._norm_prune(where), _col_mapping(m), self.path
-            )
-            scoped = self._prune_entries(entries, conds)
+            scoped = self._select_entries(m, prune=where)
         in_paths = {e["path"] for e in scoped}
-        return scoped, [e for e in entries if e["path"] not in in_paths]
+        return scoped, [e for e in m["files"] if e["path"] not in in_paths]
 
     def compact(
         self,
@@ -3240,7 +3170,7 @@ class TxTable:
         # add_columns' anti-resurrection rule) but commit NOTHING yet;
         # the evolution rides the merge's own manifest
         schema = base_schema
-        evolved_cmap: dict[str, str] | None | object = _INHERIT
+        evolved = {}  # the evolved column_mapping, when one is due
         new_fields = []
         if evolve_schema:
             tbl_cols = {f.name for f in base_schema.fields}
@@ -3254,9 +3184,10 @@ class TxTable:
                 for f in new_fields:
                     schema = schema.add(f.name, f.dataType, True)
                 if m0.get("column_mapping") is not None:
-                    evolved_cmap = dict(m0["column_mapping"])
-                    for f in new_fields:
-                        evolved_cmap[f.name] = _fresh_physical(f.name)
+                    evolved["column_mapping"] = {
+                        **m0["column_mapping"],
+                        **{f.name: _fresh_physical(f.name) for f in new_fields},
+                    }
         data_cols = [f.name for f in schema.fields]
         src, gen_guards = self._complete_generated(src, _generated(m0))
         self._check_schema(src.drop(*([delete_col] if delete_col else [])), schema)
@@ -3295,15 +3226,10 @@ class TxTable:
             # a legacy type mismatch falls back to the full scan rather
             # than failing a merge that used to work.
             entries_all = m["files"]
-            scan_entries = entries_all
-            if key_bounds:
-                try:
-                    conds = self._phys_conds(
-                        self._norm_prune(key_bounds), mapping, self.path
-                    )
-                    scan_entries = self._prune_entries(entries_all, conds)
-                except TypeError:
-                    scan_entries = entries_all
+            try:
+                scan_entries = self._select_entries(m, prune=key_bounds)
+            except TypeError:
+                scan_entries = entries_all
             self.last_merge_scan_counts = {
                 "files_total": len(entries_all),
                 "hit_scan_candidates": len(scan_entries),
@@ -3360,8 +3286,7 @@ class TxTable:
                 # narrow coalesce, same reason as delete(): without it
                 # the scan's partitioning stages empty part files
                 survivors = survivors.coalesce(max(1, len(hit_uris)))
-            if new_fields and evolved_cmap is not _INHERIT:
-                mapping = dict(evolved_cmap)
+            mapping = evolved.get("column_mapping", mapping)
             # survivors and upserts stage as ONE write (one job, one
             # commit dir, one stats/bloom pass)
             parts = [survivors] if hit_uris else []
@@ -3382,10 +3307,7 @@ class TxTable:
                 _constraints(m) + gen_guards,
             )
             return dict(
-                entries=carry + staged,
-                schema=schema,
-                extra=extra,
-                column_mapping=evolved_cmap,
+                entries=carry + staged, schema=schema, extra=extra, **evolved
             )
 
         # merge re-derives on every lost race (see the docstring)

@@ -11,6 +11,7 @@ pins the single loop and the single raise site in the module, and the
 SCD2 test pins that scd2_merge_tx stages under the table's CHECK
 constraints like every other verb that stages rows.  append_quarantine
 re-splits only on a metadata drift; append's spent budget propagates.
+copy_into refuses to commit files staged before a metadata drift.
 """
 
 from __future__ import annotations
@@ -227,6 +228,34 @@ def test_append_quarantine_resplits_on_constraint_drift(
     assert [(r.k, r._violated) for r in q.snapshot().collect()] == [
         (2, "v_nonempty")
     ]
+
+
+def test_copy_into_refuses_constraint_drift(spark, tmp_path):
+    """copy_into stages once, under the base manifest's constraints.  A
+    CHECK committed by another writer after that staging must fail the
+    commit loudly instead of landing rows the constraint rejects; the
+    re-run stages under the new constraint and rejects the bad row."""
+    land = str(tmp_path / "landing")
+    _df(spark, [(-1, "bad"), (1, "a")]).coalesce(1).write.parquet(land)
+    t = _table(spark, tmp_path, _df(spark, [(0, "seed")]))
+    other = TxTable(spark, t.path)
+    stage = t._stage
+
+    def drifting_stage(*args, **kw):
+        staged = stage(*args, **kw)
+        t._stage = stage
+        other.add_check_constraint("k_nonneg", "k >= 0")
+        return staged
+
+    t._stage = drifting_stage
+    with pytest.raises(CommitConflict, match="re-run"):
+        t.copy_into(land)
+    assert t.latest_version() == 2  # init + the constraint only
+    assert {r.k for r in t.snapshot().collect()} == {0}
+    with pytest.raises(Exception, match="k_nonneg"):
+        t.copy_into(land)
+    assert t.latest_version() == 2
+    assert {r.k for r in t.snapshot().collect()} == {0}
 
 
 def _loops_that_commit(tree: ast.AST) -> list[ast.AST]:

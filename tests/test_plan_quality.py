@@ -458,12 +458,11 @@ def test_ann_index_scoring_plan_is_clean(spark, tmp_path):
     assert "label" in plan and "PushedFilters" in plan
 
 
-def test_bm25_pruned_topk_plan_is_clean(spark):
-    """bm25_topk_from_index (max-score pruning): bound computation,
-    candidate restriction, and both scoring phases broadcast the
-    query-sized relations — no cartesian beyond the one-row stats
-    broadcast, no Python workers; the postings relation is the only
-    large input."""
+def test_bm25_index_topk_plan_is_clean(spark):
+    """bm25_topk_from_index (full scoring plus the per-query top-k
+    cut): the scoring joins broadcast the query-sized relations — no
+    cartesian beyond the one-row stats broadcast, no Python workers;
+    the postings relation is the only large input."""
     from ecommerce_data_pipeline_23a91a05i4_spark.operators.text import (
         bm25_topk_from_index,
     )
