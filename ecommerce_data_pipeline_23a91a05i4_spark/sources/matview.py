@@ -100,7 +100,7 @@ def table_changes(
             m_to.get("partition_by"),
             [{k: v for k, v in e.items() if k != "dv"} for _, e in dv_changed],
             mapping=_col_mapping(m_to),
-            _with_pos=True,
+            _lineage=True,
         )
 
         def dv_pos(side: list[dict]) -> DataFrame | None:

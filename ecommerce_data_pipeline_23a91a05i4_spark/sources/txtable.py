@@ -86,7 +86,7 @@ from collections.abc import Callable
 from operator import or_
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -108,15 +108,23 @@ _CARRIED = (
     "generated", "copy_registry", "features",
 )
 
-#: internal column names the engine injects at read time: snapshot
-#: (_with_file=True) adds ``_tx_file`` for file-granular DML, so a user
-#: column under that name would collide with the lineage column and
-#: break delete()/merge() on the table.  Enforced at the _commit
+#: the lineage columns a read injects (_read_entries(_lineage=True)) for
+#: file-granular DML: each row's file URI, deletion-vector key and row
+#: index.  A user column under one of these names would collide with a
+#: lineage column and break delete()/merge()/delete_dv() on the table,
+#: so they are reserved (_RESERVED_COLS).  Enforced at the _commit
 #: chokepoint, so EVERY schema-carrying verb (init, overwrite,
 #: add_columns, rename_column) rejects them; append can't introduce
 #: one (its _check_schema exact-match is against a committed schema,
 #: which by this invariant never contains a reserved name).
-_RESERVED_COLS = frozenset({"_tx_file", "_tx_key", "_tx_pos"})
+_LINEAGE = StructType(
+    [
+        StructField("_tx_file", StringType()),
+        StructField("_tx_key", StringType()),
+        StructField("_tx_pos", LongType()),
+    ]
+)
+_RESERVED_COLS = frozenset(_LINEAGE.names)
 
 #: table-metadata manifest fields that must be byte-identical between a
 #: transaction's base manifest and the winning head for a REBASE to be
@@ -244,15 +252,38 @@ _COMMIT_DIR_RE = re.compile(r"/(c-[0-9a-f]{32})/")
 def _commit_rel(path: str) -> str:
     """A file path reduced to its ``c-<uuid>/...`` suffix — the
     globally-unique key shared by manifest entries (``data/c-…/rel``)
-    and decoded input_file_name URIs (``…/table/data/c-…/rel``).  The
-    LAST commit-dir component wins, so a table rooted under a path that
-    itself contains a look-alike segment cannot confuse it."""
+    and decoded scan URIs (``…/table/data/c-…/rel``, see
+    :func:`_uri_rel`).  The LAST commit-dir component wins, so a table
+    rooted under a path that itself contains a look-alike segment
+    cannot confuse it."""
     last = None
     for last in _COMMIT_DIR_RE.finditer(path):
         pass
     if last is None:
         return path
     return path[last.start() + 1 :]
+
+
+def _uri_rel(uri: str) -> str:
+    """The :func:`_commit_rel` key of a scanned file's URI — THE decoder
+    from a scan's file column back to a manifest entry.  A scan names
+    files by URI, encoded exactly once (a literal space reads ``%20``,
+    an on-disk Hive escape ``%25`` reads ``%2525``), while the manifest
+    stores the raw on-disk name: decode the URI side once and leave the
+    manifest side untouched.  The scheme spelling does not matter
+    (``_metadata.file_path`` reads ``file:/…``, ``input_file_name``
+    ``file:///…``): only the suffix from the commit dir on is kept."""
+    return _commit_rel(unquote(uri))
+
+
+def _scan_file(df: DataFrame) -> Column:
+    """The file column of a parquet scan ``df``: its own
+    ``_metadata.file_path``, bound through the DataFrame so a user
+    column named ``_metadata`` cannot shadow it.  A URI (see
+    :func:`_uri_rel`), and deterministic, so filters above it still
+    reach the scan (the nondeterministic file-name function blocks
+    that pushdown)."""
+    return df.metadataColumn("_metadata").getField("file_path")
 
 
 #: separator inside deletion-vector file keys — a char no filesystem
@@ -267,8 +298,7 @@ def _dv_key(e: dict) -> str:
     use [a-zA-Z0-9._-]; the partition VALUE comes from the manifest,
     never from a Hive-escaped dir name), so the Python form here and
     the Spark form (:func:`_dv_key_col`) agree for any table path or
-    partition value — the property input_file_name-style URI keys do
-    not have."""
+    partition value — the property URI-derived keys do not have."""
     path = e["path"]
     last = None
     for last in _COMMIT_DIR_RE.finditer("/" + path):
@@ -279,11 +309,12 @@ def _dv_key(e: dict) -> str:
     )
 
 
-def _dv_key_col(part_value: str | None):
-    """The Spark-side twin of :func:`_dv_key`, computed from the scan's
-    ``_metadata.file_path`` (greedy ``.*`` prefix = the LAST commit-dir
-    component, matching _commit_rel's last-match rule)."""
-    fp = F.col("_metadata.file_path")
+def _dv_key_col(fp: Column, part_value: str | None) -> Column:
+    """The Spark-side twin of :func:`_dv_key`, computed per row from a
+    scan's bound file column ``fp`` (greedy ``.*`` prefix = the LAST
+    commit-dir component, matching _commit_rel's last-match rule) —
+    a regexp and a split per row, so reads derive it only where a row
+    meets a deletion vector."""
     return F.concat(
         F.regexp_extract(fp, ".*/(c-[0-9a-f]{32})/", 1),
         F.lit(_DV_SEP),
@@ -380,7 +411,7 @@ class TxTable:
         manifest entry records that column's — or, given a list, EVERY
         named column's — [min, max] (ONE extra distributed pass over
         the freshly staged files whatever the column count, grouped by
-        input_file_name), and ``snapshot(prune=(col, lo, hi))`` (or a
+        file), and ``snapshot(prune=(col, lo, hi))`` (or a
         list of such triples, ANDed) skips files whose ranges cannot
         intersect — the per-file-stats design Delta/Iceberg manifests
         use.  Entries staged without stats (older commits, other
@@ -890,9 +921,7 @@ class TxTable:
     def snapshot(
         self,
         version: int | None = None,
-        _with_file: bool = False,
         prune: tuple | None = None,
-        _with_pos: bool = False,
         prune_eq: list[tuple[str, object]] | None = None,
         part: str | list[str] | None = None,
         timestamp: float | None = None,
@@ -922,10 +951,7 @@ class TxTable:
 
         ``timestamp=`` (epoch seconds, exclusive with ``version``) is
         ``TIMESTAMP AS OF``: the state a reader at that moment saw —
-        resolved via :meth:`version_at_timestamp`.
-
-        ``_with_file`` (internal, used by :meth:`delete`) appends a
-        ``_tx_file`` column holding each row's source file URI."""
+        resolved via :meth:`version_at_timestamp`."""
         if timestamp is not None:
             if version is not None:
                 raise ValueError(
@@ -943,9 +969,7 @@ class TxTable:
             StructType.fromJson(json.loads(m["schema"])),
             pcol,
             self._select_entries(m, part, prune, prune_eq),
-            _with_file,
-            mapping=_col_mapping(m),
-            _with_pos=_with_pos,
+            _col_mapping(m),
         )
 
     def prune_counts_eq(
@@ -977,17 +1001,23 @@ class TxTable:
         delete_dv().  An anti-join on the two-column key, which AQE
         plans as a broadcast for the typical (small-vector) case; a
         vector file may carry rows for files outside ``entries`` or
-        already rewritten — those keys match nothing, harmlessly."""
+        already rewritten — those keys match nothing, harmlessly.
+        _read_entries joins each vectored scan with the vectors of all
+        its ``entries``: the same relation in every scan, so the
+        broadcast is built once."""
         dv_paths = sorted(
             {self._dv_abs(e) for e in entries if e.get("dv")}
         )
         if not dv_paths:
             return out
-        dv = self._read_dvs(dv_paths).select(
-            F.col("file_key").alias("_tx_key"),
-            F.col("pos").alias("_tx_pos"),
+        dv = self._read_dvs(dv_paths)
+        # an expression join keeps ``out``'s column order (a USING join
+        # moves the keys first), so vectored and plain scans still union
+        return out.join(
+            dv,
+            (out["_tx_key"] == dv["file_key"]) & (out["_tx_pos"] == dv["pos"]),
+            "left_anti",
         )
-        return out.join(dv, ["_tx_key", "_tx_pos"], "left_anti")
 
     def _read_dvs(self, paths: list[str]) -> DataFrame:
         """Deletion-vector rows of ``paths``, read with the schema
@@ -999,10 +1029,8 @@ class TxTable:
         schema: StructType,
         pcol: str | None,
         entries: list[dict],
-        _with_file: bool = False,
         mapping: dict[str, str] | None = None,
-        _with_pos: bool = False,
-        _apply_dvs: bool = True,
+        _lineage: bool = False,
     ) -> DataFrame:
         """Read an arbitrary SUBSET of manifest file entries with the
         partition-column reinjection snapshot() uses — also the engine
@@ -1016,32 +1044,29 @@ class TxTable:
         logical names, so a rename never touches a data file.
 
         Entries carrying a ``dv`` (deletion vector, see delete_dv) have
-        the recorded row positions filtered out unless
-        ``_apply_dvs=False`` (table_changes' raw diff needs the
-        pre-vector rows).  ``_with_pos`` keeps the internal ``_tx_key``
-        / ``_tx_pos`` lineage columns (the vector's join key) in the
-        output."""
+        the recorded row positions filtered out (table_changes strips
+        ``dv`` from entries whose raw rows it needs).  ``_lineage``
+        keeps each row's lineage in the output, bound from the scan's
+        own ``_metadata`` (so a user column named ``_metadata`` cannot
+        shadow it): ``_tx_file`` (the file's URI, see _uri_rel),
+        ``_tx_pos`` (its row index) and ``_tx_key`` (the vector join
+        key derived from ``_tx_file``, see _dv_key_col).  All are
+        deterministic projections, so a predicate on the data columns
+        still reaches the parquet scan, and a plan that never uses
+        ``_tx_key`` never computes it."""
         phys = mapping or {}
 
         def p(name: str) -> str:
             return phys.get(name, name)
 
-        has_dv = _apply_dvs and any(e.get("dv") for e in entries)
-        need_pos = _with_pos or has_dv
+        has_dv = any(e.get("dv") for e in entries)
+        lineage = _LINEAGE.fields if _lineage else []
         sel = [F.col(p(f.name)).alias(f.name) for f in schema.fields]
-        if _with_file:
-            sel.append(F.col("_tx_file"))
-        if _with_pos:
-            sel.append(F.col("_tx_key"))
-            sel.append(F.col("_tx_pos"))
+        sel += [f.name for f in lineage]
         if not entries:
-            out_schema = StructType(schema.fields)
-            if _with_file:
-                out_schema = out_schema.add("_tx_file", "string")
-            if _with_pos:
-                out_schema = out_schema.add("_tx_key", "string")
-                out_schema = out_schema.add("_tx_pos", "long")
-            return _empty_frame(self.spark, out_schema)
+            return _empty_frame(
+                self.spark, StructType([*schema.fields, *lineage])
+            )
         data_schema = StructType(
             [
                 StructField(p(f.name), f.dataType, f.nullable)
@@ -1051,36 +1076,40 @@ class TxTable:
         )
         # one scan per partition value; an unpartitioned read is ONE
         # scan of every entry (the single None group, no literal column)
-        by_val: dict[str | None, list[str]] = {}
+        by_val: dict[str | None, list[dict]] = {}
         for e in entries:
             val = e["part"] if pcol is not None else None
-            by_val.setdefault(val, []).append(self._abs(e))
+            by_val.setdefault(val, []).append(e)
         parts = []
         # None sorts first (a NULL partition; also files staged
         # unpartitioned before a concurrent layout change)
-        for val, paths in sorted(
+        for val, ents in sorted(
             by_val.items(), key=lambda kv: (kv[0] is not None, kv[0] or "")
         ):
-            part = self.spark.read.schema(data_schema).parquet(*paths)
-            if _with_file:
-                # input_file_name must bind before the union/literal cols
-                part = part.withColumn("_tx_file", F.input_file_name())
-            if need_pos:
-                # _metadata likewise binds per-scan, before the union
-                part = part.withColumn(
-                    "_tx_key", _dv_key_col(val)
-                ).withColumn("_tx_pos", F.col("_metadata.row_index"))
+            part = self.spark.read.schema(data_schema).parquet(
+                *map(self._abs, ents)
+            )
+            if _lineage or has_dv:
+                # _metadata binds per scan, before the union/literal
+                # cols; column pruning drops the key wherever neither a
+                # vector join nor the caller uses it
+                fp = _scan_file(part)
+                part = part.select(
+                    "*",
+                    fp.alias("_tx_file"),
+                    _dv_key_col(fp, val).alias("_tx_key"),
+                    part.metadataColumn("_metadata")
+                    .getField("row_index")
+                    .alias("_tx_pos"),
+                )
+            if any(e.get("dv") for e in ents):
+                part = self._apply_dv(part, entries)
             if pcol is not None:
                 part = part.withColumn(
                     p(pcol), F.lit(val).cast(schema[pcol].dataType)
                 )
             parts.append(part)
-        out = parts[0]
-        for part in parts[1:]:
-            out = out.unionAll(part)
-        if has_dv:
-            out = self._apply_dv(out, entries)
-        return out.select(sel)
+        return functools.reduce(DataFrame.unionAll, parts).select(sel)
 
     # ---------------------------------------------------------- writes
     def _split_count(self, n_rows: int, schema: StructType) -> int:
@@ -1199,31 +1228,26 @@ class TxTable:
                 aggs.append(F.max(F.col(c)).alias(f"mx_{i}"))
             # read back with the schema just written (partition column
             # included): no inference job
+            back = self.spark.read.schema(df.schema).parquet(commit_dir)
             stats_rows = (
-                self.spark.read.schema(df.schema)
-                .parquet(commit_dir)
-                .select(F.input_file_name().alias("_f"), *map(F.col, pcols))
+                back.select(_scan_file(back).alias("_f"), *map(F.col, pcols))
                 .groupBy("_f")
                 .agg(*aggs)
                 .collect()
             )
             # O(1) lookups keyed by the path under the (uuid-unique)
-            # commit dir — decode the URI side once (see delete()'s
-            # note); the manifest path is the raw on-disk name (ADVICE
-            # r5: the nested endswith scan was O(entries × files))
-            cbase = posixpath.basename(commit_dir)
-            by_rel: dict[str, dict] = {}
-            for r in stats_rows:
-                dec = unquote(r._f.split("://", 1)[-1])
-                rel = dec.split("/" + cbase + "/", 1)[1]
-                by_rel[rel] = {
+            # commit dir (ADVICE r5: the nested endswith scan was
+            # O(entries × files))
+            by_rel = {
+                _uri_rel(r._f): {
                     c: [r[f"mn_{i}"], r[f"mx_{i}"]]
                     for i, c in enumerate(pcols)
                 }
+                for r in stats_rows
+            }
             kept = []
             for e in entries:
-                rel = e["path"].split("/" + cbase + "/", 1)[1]
-                st = by_rel.get(rel)
+                st = by_rel.get(_commit_rel(e["path"]))
                 if st is None:
                     # ZERO-ROW file (an empty coalesce/partition write):
                     # no group row, nothing to record — and nothing to
@@ -1272,32 +1296,27 @@ class TxTable:
                     ]
                 )
             ).alias("cp")
+            back = self.spark.read.schema(df.schema).parquet(commit_dir)
             pos_rows = (
-                self.spark.read.schema(df.schema)
-                .parquet(commit_dir)
-                .select(F.input_file_name().alias("_f"), probes)
+                back.select(_scan_file(back).alias("_f"), probes)
                 .select("_f", "cp.ci", "cp.pos")
                 .distinct()
                 .groupBy("_f", "ci")
                 .agg(F.collect_set("pos").alias("ps"))
                 .collect()
             )
-            cbase = posixpath.basename(commit_dir)
             by_rel_bloom: dict[str, dict] = {}
             for r in pos_rows:
-                dec = unquote(r._f.split("://", 1)[-1])
-                rel = dec.split("/" + cbase + "/", 1)[1]
                 bits = bytearray((m_bits + 7) // 8)
                 for pos in r.ps:
                     bits[pos >> 3] |= 1 << (pos & 7)
-                by_rel_bloom.setdefault(rel, {})[bcols[r.ci]] = {
+                by_rel_bloom.setdefault(_uri_rel(r._f), {})[bcols[r.ci]] = {
                     "m": m_bits,
                     "k": k,
                     "b64": base64.b64encode(bytes(bits)).decode("ascii"),
                 }
             for e in entries:
-                rel = e["path"].split("/" + cbase + "/", 1)[1]
-                bl = by_rel_bloom.get(rel)
+                bl = by_rel_bloom.get(_commit_rel(e["path"]))
                 if bl:
                     e["bloom"] = bl
         return entries
@@ -2383,7 +2402,8 @@ class TxTable:
             est = approx_count_distinct_portable(
                 snap, [c], None, p=p, hash=hash
             ).collect()
-            ndv = float(est[0]["approx_distinct"]) if est else 0.0
+            # an all-NULL column estimates NULL distinct values: NDV 0
+            ndv = float(est[0]["approx_distinct"] or 0) if est else 0.0
             col_stats[c] = {
                 "nulls": int(row[f"nul_{i}"] or 0),
                 "ndv": ndv,
@@ -2637,7 +2657,6 @@ class TxTable:
     def optimize_small(
         self,
         target_bytes: int,
-        include_vectored: bool = True,
         max_retries: int = 5,
         where=None,
     ) -> int:
@@ -2651,11 +2670,11 @@ class TxTable:
         debt, not the table.
 
         Partition-aware: files bin strictly within their partition
-        value.  Entries carrying a deletion vector are rewritten too by
-        default (``include_vectored`` — the rewrite materializes the
-        vector, Delta's REORG/PURGE), whatever their size.  A partition
-        whose only candidate is a single small vector-free file keeps
-        it: rewriting one file into one file is pure churn.  The commit
+        value.  Entries carrying a deletion vector are rewritten too,
+        whatever their size (the rewrite materializes the vector,
+        Delta's REORG/PURGE).  A partition whose only candidate is a
+        single small vector-free file keeps it: rewriting one file into
+        one file is pure churn.  The commit
         (op ``optimize``) is data-preserving — the streaming change
         feed skips it, exactly like compact.  Returns the committed
         version, or the current one when there is no debt.
@@ -2687,9 +2706,7 @@ class TxTable:
             for e in scoped:
                 size = self.fs.size(self._abs(e))
                 sizes[e["path"]] = size
-                if size < target_bytes or (
-                    include_vectored and e.get("dv")
-                ):
+                if size < target_bytes or e.get("dv"):
                     by_part.setdefault(e.get("part"), []).append((e, size))
             rewrite: dict[str | None, list[dict]] = {}
             for part, cand in by_part.items():
@@ -2729,6 +2746,34 @@ class TxTable:
             "optimize_small", attempt, max_retries, rebase=True
         )
 
+    def _hit_entries(
+        self, verb: str, m: dict, rows: list
+    ) -> tuple[dict[str, dict], list[dict]]:
+        """Split manifest ``m``'s entries by the files a lineage scan
+        (_read_entries(_lineage=True)) found hits in — ``rows``, one
+        collected row per hit file, carrying its ``_tx_file`` URI:
+        ({uri: entry} for every hit file, in manifest order; every
+        other entry, which carries by reference).  The one map from
+        "which file did this row come from" back to the manifest for
+        the file-granular verbs (delete, merge, delete_dv): URIs decode
+        through _uri_rel; a URI naming no entry means the scanned file
+        set no longer matches the manifest, and raises."""
+        want = {_uri_rel(r._tx_file): r._tx_file for r in rows}
+        hits: dict[str, dict] = {}
+        carry = []
+        for e in m["files"]:
+            u = want.get(_commit_rel(e["path"]))
+            if u is None:
+                carry.append(e)
+            else:
+                hits[u] = e
+        if len(hits) != len(want):
+            raise RuntimeError(
+                f"{verb} on {self.path}: scanned file set does not "
+                "match the manifest (concurrent vacuum?)"
+            )
+        return hits, carry
+
     def delete(
         self,
         predicate,
@@ -2742,8 +2787,9 @@ class TxTable:
         Column or a SQL string over the table's columns.
 
         Only the files that CONTAIN matching rows are read twice and
-        rewritten (found via input_file_name on a predicate-filtered
-        scan — the same pruning trick Delta's DELETE uses); every other
+        rewritten (found via the scan's file column on a
+        predicate-filtered scan — the same pruning trick Delta's DELETE
+        uses, see _hit_entries); every other
         file carries into the child manifest by reference, untouched.
         Readers of the parent snapshot are undisturbed, and every
         retained version still time-travels to the pre-delete data —
@@ -2794,58 +2840,29 @@ class TxTable:
         def attempt(m: dict) -> int | dict:
             pcol = m.get("partition_by")
             schema = StructType.fromJson(json.loads(m["schema"]))
-            snap = self.snapshot(m["version"], _with_file=True)
-            hit = F.coalesce(pred.cast("boolean"), F.lit(False))
-            hit_uris = [
-                r._tx_file
-                for r in snap.filter(hit).select("_tx_file").distinct().collect()
-            ]
-            if not hit_uris:
-                return m["version"]
-            # map URIs back to manifest entries by their path under the
-            # uuid-named commit dir (globally unique, so the key is
-            # unambiguous — and a dict beats the former O(entries×files)
-            # nested suffix scan, ADVICE r5).  input_file_name
-            # URI-ENCODES the on-disk path (a literal space becomes %20,
-            # a literal %20 becomes %2520), while the manifest stores
-            # the raw on-disk name; decode the URI side ONCE and leave
-            # the manifest side untouched, or any partition value with
-            # an encodable character makes every delete miss its
-            # entries and raise
-            hit_keys = {
-                _commit_rel(unquote(u.split("://", 1)[-1])) for u in hit_uris
-            }
-            carry = [
-                e for e in m["files"] if _commit_rel(e["path"]) not in hit_keys
-            ]
-            if len(carry) + len(hit_keys) != len(m["files"]):
-                raise RuntimeError(
-                    f"delete on {self.path}: scanned file set does not "
-                    "match the manifest (concurrent vacuum?)"
-                )
-            # survivors re-read from the HIT manifest entries only
-            # (optimization r13 — the former full-snapshot read
-            # filtered on _tx_file re-scanned every file, because
-            # input_file_name cannot prune the file list; this makes
-            # the rewrite O(hit files), the docstring's contract)
-            hit_entries = [
-                e for e in m["files"] if _commit_rel(e["path"]) in hit_keys
-            ]
-            survivors = (
-                self._read_entries(
-                    schema, pcol, hit_entries, mapping=_col_mapping(m)
-                )
-                .filter(~hit)
-                .select([f.name for f in schema.fields])
+            mapping = _col_mapping(m)
+            snap = self._read_entries(
+                schema, pcol, m["files"], mapping, _lineage=True
             )
+            hit = F.coalesce(pred.cast("boolean"), F.lit(False))
+            hits, carry = self._hit_entries(
+                "delete",
+                m,
+                snap.filter(hit).select("_tx_file").distinct().collect(),
+            )
+            if not hits:
+                return m["version"]
+            survivors = self._read_entries(
+                schema, pcol, list(hits.values()), mapping
+            ).filter(~hit)
             if pcol is None:
                 # one replacement file per rewritten file (narrow
                 # coalesce, no shuffle): without this, survivors keep
                 # the full scan's partitioning and the mostly-empty
                 # tasks stage empty part files — dead manifest entries
                 # that also read as unprunable under data skipping
-                survivors = survivors.coalesce(max(1, len(hit_uris)))
-            staged = self._stage(survivors, pcol, _col_mapping(m), _constraints(m))
+                survivors = survivors.coalesce(len(hits))
+            staged = self._stage(survivors, pcol, mapping, _constraints(m))
             return dict(entries=carry + staged)
 
         return self._commit_loop(
@@ -2929,12 +2946,18 @@ class TxTable:
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
 
         def attempt(m: dict) -> int | dict:
-            snap = self.snapshot(m["version"], _with_pos=True)
+            snap = self._read_entries(
+                StructType.fromJson(json.loads(m["schema"])),
+                m.get("partition_by"),
+                m["files"],
+                _col_mapping(m),
+                _lineage=True,
+            )
             hit = F.coalesce(pred.cast("boolean"), F.lit(False))
             # one pass: per-file matched and visible counts (bounded
             # by file count) — visible==hits detects full deletion
             stats = (
-                snap.groupBy("_tx_key")
+                snap.groupBy("_tx_file")
                 .agg(
                     F.sum(hit.cast("long")).alias("hits"),
                     F.count(F.lit(1)).alias("visible"),
@@ -2942,39 +2965,36 @@ class TxTable:
                 .filter(F.col("hits") > 0)
                 .collect()
             )
-            hit_info = {r._tx_key: (r.hits, r.visible) for r in stats}
-            if not hit_info:
+            if not stats:
                 return m["version"]
-            by_key = {_dv_key(e): e for e in m["files"]}
-            unknown = set(hit_info) - set(by_key)
-            if unknown:
-                raise RuntimeError(
-                    f"delete_dv on {self.path}: scanned file set does "
-                    "not match the manifest (concurrent vacuum?)"
-                )
+            hit_files, _ = self._hit_entries("delete_dv", m, stats)
+            hit_info = {
+                hit_files[r._tx_file]["path"]: (r.hits, r.visible)
+                for r in stats
+            }
             # the new vector = new hits ∪ the hit files' OLD vector
             # rows (each entry references exactly ONE vector file);
-            # entries outside the hit set keep their old reference
+            # entries outside the hit set keep their old reference.
+            # Only the hit rows derive their vector key.
             dv_rows = snap.filter(hit).select(
                 F.col("_tx_key").alias("file_key"),
                 F.col("_tx_pos").alias("pos"),
             )
             old_paths = sorted(
-                {
-                    self._dv_abs(by_key[k])
-                    for k in hit_info
-                    if by_key[k].get("dv")
-                }
+                {self._dv_abs(e) for e in hit_files.values() if e.get("dv")}
             )
             if old_paths:
                 dv_rows = dv_rows.unionByName(
-                    self._read_dvs(old_paths)
-                    .filter(F.col("file_key").isin(list(hit_info)))
+                    self._read_dvs(old_paths).filter(
+                        F.col("file_key").isin(
+                            [_dv_key(e) for e in hit_files.values()]
+                        )
+                    )
                 )
             dv_rel = self._stage_dv(dv_rows)
             new_entries = []
             for e in m["files"]:
-                info = hit_info.get(_dv_key(e))
+                info = hit_info.get(e["path"])
                 if info is None:
                     new_entries.append(e)
                     continue
@@ -3202,15 +3222,21 @@ class TxTable:
             # a concurrent add_columns/overwrite would make a retried
             # commit silently drop the new columns' values from the
             # rewritten files (append()'s rule, same reason)
+            # — and the source's generated columns were completed with
+            # m0's expressions, so a redeclared expression must refuse
+            # the commit too (constraints, by contrast, are re-read from
+            # ``m`` on every attempt)
             if (
                 m["schema"] != schema_json0
                 or m.get("partition_by") != pcol0
                 or m.get("column_mapping") != m0.get("column_mapping")
+                or _generated(m) != _generated(m0)
             ):
                 raise CommitConflict(
                     f"merge on {self.path}: table layout changed "
-                    "concurrently (schema, partition column, or column "
-                    "mapping); restage the merge against the new layout"
+                    "concurrently (schema, partition column, column "
+                    "mapping or generated columns); restage the merge "
+                    "against the new layout"
                 )
             pcol = m.get("partition_by")
             mapping = _col_mapping(m)
@@ -3235,61 +3261,41 @@ class TxTable:
                 "hit_scan_candidates": len(scan_entries),
             }
             snap = self._read_entries(
-                base_schema, pcol, scan_entries, _with_file=True,
-                mapping=mapping,
+                base_schema, pcol, scan_entries, mapping, _lineage=True
             )
-            hit_uris = [
-                r._tx_file
-                for r in snap.join(src_keys, on=keys, how="leftsemi")
+            hits, carry = self._hit_entries(
+                "merge",
+                m,
+                snap.join(src_keys, on=keys, how="leftsemi")
                 .select("_tx_file")
                 .distinct()
-                .collect()
-            ]
-            if not hit_uris and (not n_upserts or not insert_unmatched):
+                .collect(),
+            )
+            if not hits and (not n_upserts or not insert_unmatched):
                 return m["version"]  # nothing matched, nothing to insert
-            hit_keys = {
-                _commit_rel(unquote(u.split("://", 1)[-1])) for u in hit_uris
-            }
-            carry = [
-                e for e in m["files"] if _commit_rel(e["path"]) not in hit_keys
-            ]
-            if len(carry) + len(hit_keys) != len(m["files"]):
-                raise RuntimeError(
-                    f"merge on {self.path}: scanned file set does not "
-                    "match the manifest (concurrent vacuum?)"
-                )
-            self.last_merge_scan_counts["hit_files"] = len(hit_keys)
+            self.last_merge_scan_counts["hit_files"] = len(hits)
             # survivors: unmatched rows of the HIT FILES ONLY (matched
             # rows are replaced by their source version or dropped) —
-            # read back from just those manifest entries (optimization
-            # r13: the former full-snapshot read filtered on _tx_file
-            # re-scanned EVERY file, because input_file_name cannot
-            # prune the file list; re-reading the hit entries makes
-            # the rewrite cost O(hit files), the contract the
-            # docstring promises).  Under in-commit evolution the
-            # rewritten survivors carry the new columns as explicit
-            # NULLs.
-            hit_entries = [
-                e
-                for e in m["files"]
-                if _commit_rel(e["path"]) in hit_keys
-            ]
+            # read back from just those manifest entries, so the
+            # rewrite costs O(hit files), the contract the docstring
+            # promises.  Under in-commit evolution the rewritten
+            # survivors carry the new columns as explicit NULLs.
             survivors = self._read_entries(
-                base_schema, pcol, hit_entries, mapping=mapping
+                base_schema, pcol, list(hits.values()), mapping=mapping
             ).join(src_keys, on=keys, how="left_anti")
             for f in new_fields:
                 survivors = survivors.withColumn(
                     f.name, F.lit(None).cast(f.dataType)
                 )
             survivors = survivors.select(data_cols)
-            if pcol is None and hit_uris:
+            if pcol is None and hits:
                 # narrow coalesce, same reason as delete(): without it
                 # the scan's partitioning stages empty part files
-                survivors = survivors.coalesce(max(1, len(hit_uris)))
+                survivors = survivors.coalesce(len(hits))
             mapping = evolved.get("column_mapping", mapping)
             # survivors and upserts stage as ONE write (one job, one
             # commit dir, one stats/bloom pass)
-            parts = [survivors] if hit_uris else []
+            parts = [survivors] if hits else []
             if n_upserts:
                 ins = upserts
                 if not insert_unmatched:

@@ -11,7 +11,9 @@ pins the single loop and the single raise site in the module, and the
 SCD2 test pins that scd2_merge_tx stages under the table's CHECK
 constraints like every other verb that stages rows.  append_quarantine
 re-splits only on a metadata drift; append's spent budget propagates.
-copy_into refuses to commit files staged before a metadata drift.
+copy_into refuses to commit files staged before a metadata drift, and
+merge refuses to commit generated values completed before a
+redeclaration of the generated columns.
 """
 
 from __future__ import annotations
@@ -256,6 +258,35 @@ def test_copy_into_refuses_constraint_drift(spark, tmp_path):
         t.copy_into(land)
     assert t.latest_version() == 2
     assert {r.k for r in t.snapshot().collect()} == {0}
+
+
+def test_merge_refuses_generated_column_drift(spark, tmp_path):
+    """merge completes a source's generated columns once, with the
+    expressions of the manifest it set up against.  A generated column
+    redeclared by another writer before the commit must fail the merge
+    loudly instead of landing values of the old expression under the
+    new declaration; the re-run completes them with the new one."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.init(_df(spark, [(1, "a")]).select("k"), generated={"g": "k * 2"})
+    other = TxTable(spark, t.path)
+    complete = t._complete_generated
+
+    def drifting_complete(*args, **kw):
+        out = complete(*args, **kw)
+        t._complete_generated = complete
+        other.overwrite(
+            _df(spark, [(1, "a")]).select("k"), generated={"g": "k * 3"}
+        )
+        return out
+
+    t._complete_generated = drifting_complete
+    src = _df(spark, [(5, "x")]).select("k")
+    with pytest.raises(CommitConflict, match="generated columns"):
+        t.merge(src, "k")
+    assert t.latest_version() == 2  # init + the overwrite only
+    assert {(r.k, r.g) for r in t.snapshot().collect()} == {(1, 3)}
+    t.merge(src, "k")
+    assert {(r.k, r.g) for r in t.snapshot().collect()} == {(1, 3), (5, 15)}
 
 
 def _loops_that_commit(tree: ast.AST) -> list[ast.AST]:

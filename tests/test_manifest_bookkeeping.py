@@ -113,7 +113,10 @@ def test_unpartitioned_read_is_one_scan(spark, tmp_path):
     t.init(_df(spark, [(1, "a")]))
     t.append(_df(spark, [(2, "b")]))
     t.append(_df(spark, [(3, "c")]))
-    snap = t.snapshot(_with_file=True)
+    m = t.manifest()
+    snap = t._read_entries(
+        t.snapshot().schema, None, m["files"], _lineage=True
+    )
     plan = snap._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in plan
     assert plan.count("Relation ") == 1

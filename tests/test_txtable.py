@@ -229,29 +229,118 @@ def test_delete_then_vacuum_destroys_predelete_bytes(spark, tmp_path):
 def test_delete_and_stats_survive_uri_encoded_partition_values(
     spark, tmp_path
 ):
-    """input_file_name URI-encodes the on-disk path exactly once
-    (probed: literal space -> %20, on-disk Hive escape %25 -> %2525),
-    while the manifest stores the raw on-disk name.  Deletes touching
-    such partitions must find their manifest entries (not raise
-    'scanned file set does not match'), and staged stats must attach
-    to those files instead of silently vanishing."""
+    """A scan names its files by URI, encoded exactly once (probed:
+    literal space -> %20, on-disk Hive escape %25 -> %2525, '+' kept),
+    while the manifest stores the raw on-disk name.  Every file-granular
+    verb (delete, merge, delete_dv) must find its manifest entries (not
+    raise 'scanned file set does not match'), and staged stats and
+    bloom filters must attach to those files instead of silently
+    vanishing — on a table whose root path holds the same characters."""
     rows = [
         (1, "north america"), (2, "north america"),  # literal space
         (3, "50%off"), (4, "50%off"),                # Hive-escaped '%'
+        (5, "a+b"), (6, "a+b"),                      # literal '+'
     ]
-    t = TxTable(spark, str(tmp_path / "t"), stats_col="k")
+    t = TxTable(
+        spark, str(tmp_path / "root 5%+x" / "t"), stats_col="k",
+        bloom_col="k",
+    )
     t.init(
-        spark.createDataFrame(rows, "k long, region string"),
+        spark.createDataFrame(rows, "k long, region string").coalesce(1),
         partition_by="region",
     )
+
+    def check_indexes():
+        files = t.manifest()["files"]
+        assert all("stats" in e and "bloom" in e for e in files)
+
+    def vectored_parts():
+        return [e["part"] for e in t.manifest()["files"] if e.get("dv")]
+
     m = t.manifest()
     assert any(" " in e["path"] for e in m["files"])    # literal space
     assert any("%25" in e["path"] for e in m["files"])  # escaped '%'
-    assert all("stats" in e for e in m["files"])        # stats attached
+    assert any("+" in e["path"] for e in m["files"])    # literal '+'
+    check_indexes()
+    assert t.prune_counts_eq([("k", 5)]) == (1, 3)
     t.delete("region = 'north america' AND k = 1")
     t.delete("region = '50%off' AND k = 3")
+    check_indexes()
+    t.delete_dv("region = 'a+b' AND k = 6")
+    assert vectored_parts() == ["a+b"]
+    # the merge's scans read the vectored a+b file through its vector
+    t.merge(
+        spark.createDataFrame(
+            [(5, "a+b"), (7, "50%off"), (8, "50%off")],
+            "k long, region string",
+        ),
+        "k",
+    )
+    check_indexes()
+    assert vectored_parts() == []
+    t.delete_dv("region = '50%off' AND k = 7")
+    t.delete_dv("region = 'north america' AND k = 2")  # drops its file
+    assert vectored_parts() == ["50%off"]
     got = sorted((r.k, r.region) for r in t.snapshot().collect())
-    assert got == [(2, "north america"), (4, "50%off")]
+    assert got == [(4, "50%off"), (5, "a+b"), (8, "50%off")]
+
+
+def test_delete_predicate_reaches_the_lineage_scan(
+    spark, tmp_path, monkeypatch
+):
+    """delete's hit-file scan binds each row's file from the scan's
+    deterministic ``_metadata``, so its predicate is pushed into the
+    parquet scan (DataFilters) instead of being evaluated above a
+    scan of every row."""
+    import re
+
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.init(_df(spark, [(1, "a"), (2, "b"), (3, "c")]))
+    plans = []
+    frame = type(t.snapshot())
+    collect = frame.collect
+
+    def spy(df):
+        if "_tx_file" in df.columns:
+            plans.append(df._jdf.queryExecution().sparkPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", spy)
+    t.delete(F.col("v") == "b")
+    monkeypatch.undo()
+    assert len(plans) == 1
+    found = re.findall(r"DataFilters: \[([^\]]*)\]", plans[0])
+    assert found and all("v#" in f for f in found), plans[0]
+    assert sorted(r.k for r in t.snapshot().collect()) == [1, 3]
+
+
+def test_user_column_named_metadata_keeps_lineage_working(spark, tmp_path):
+    """A table may have a column named ``_metadata``: lineage binds
+    through the scan's own metadata column, so file-granular DML,
+    vectored reads and the change feed still find each row's file."""
+    from ecommerce_data_pipeline_23a91a05i4_spark.sources import (
+        matview as mvx,
+    )
+
+    schema = "k long, _metadata long"
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.init(
+        spark.createDataFrame(
+            [(k, k * 10) for k in range(1, 7)], schema
+        ).coalesce(1)
+    )
+    t.delete("k = 1")
+    v = t.delete_dv("k = 4")
+    assert any(e.get("dv") for e in t.manifest()["files"])
+    got = sorted(tuple(r) for r in t.snapshot().collect())
+    assert got == [(2, 20), (3, 30), (5, 50), (6, 60)]
+    ch = mvx.table_changes(t, v - 1, v).collect()
+    assert [(r.k, r._metadata, r._change_type) for r in ch] == [
+        (4, 40, "delete")
+    ]
+    t.merge(spark.createDataFrame([(2, 99), (7, 70)], schema), "k")
+    got = sorted(tuple(r) for r in t.snapshot().collect())
+    assert got == [(2, 99), (3, 30), (5, 50), (6, 60), (7, 70)]
 
 
 def test_data_skipping_stats_prune_safely_and_survive_carry(spark, tmp_path):
@@ -742,7 +831,7 @@ def test_empty_entry_read_launches_no_job(spark, jobs, tmp_path):
     with jobs("empty_read") as ids:
         rows = t._read_entries(schema, None, []).collect()
     assert rows == [] and ids == []
-    got = t._read_entries(schema, None, [], _with_file=True, _with_pos=True)
+    got = t._read_entries(schema, None, [], _lineage=True)
     assert got.columns == ["k", "v", "_tx_file", "_tx_key", "_tx_pos"]
 
 
@@ -1290,8 +1379,8 @@ def test_widen_column_accepts_ddl_aliases(spark, tmp_path):
 
 
 def test_reserved_internal_column_names_rejected_everywhere(spark, tmp_path):
-    """'_tx_file' is the lineage column snapshot(_with_file=True) injects
-    for file-granular DML; a user column under that name would shadow it
+    """'_tx_file' is the lineage column _read_entries(_lineage=True)
+    injects for file-granular DML; a user column under that name would shadow it
     and break delete()/merge().  The _commit chokepoint rejects it on
     every schema-carrying verb (ADVICE r8)."""
     t = TxTable(spark, str(tmp_path / "t"))
@@ -1763,6 +1852,17 @@ def test_analyze_stats_carry_and_validation(spark, tmp_path):
     assert st2 == st and t.latest_version() == v2 + 1
     with pytest.raises(ValueError, match="unknown column"):
         t.analyze(columns=["nope"])
+
+
+def test_analyze_records_zero_ndv_for_an_all_null_column(spark, tmp_path):
+    """An all-NULL column has no distinct values: its HLL estimate row
+    reads NULL, and analyze() records NDV 0 instead of failing."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.init(spark.createDataFrame([(1, None), (2, None)], "k long, x int"))
+    t.analyze()
+    x = t.table_stats()["columns"]["x"]
+    assert x == {"nulls": 2, "ndv": 0.0, "min": None, "max": None}
+    assert t.table_stats()["columns"]["k"]["ndv"] > 0
 
 
 def test_generated_columns_lifecycle(spark, tmp_path):
