@@ -388,6 +388,11 @@ class _NotUniqueError(ValueError):
     a duplicate ``(key, seq)`` event in its own terms."""
 
 
+class _SchemaMismatch(ValueError):
+    """A frame to write does not carry exactly its table's columns (see
+    TxTable._check_schema); _commit_loop names the verb that staged it."""
+
+
 class TxTable:
     """Handle on one manifest-log table rooted at ``path``.
 
@@ -1124,33 +1129,48 @@ class TxTable:
         )
         return max(1, -(-n_rows * _estimated_row_bytes(schema) // split))
 
-    def _stage(
-        self,
-        df: DataFrame,
-        partition_by: str | None,
-        mapping: dict[str, str] | None = None,
-        constraints: list[dict] | None = None,
-    ) -> list[dict]:
+    def _invariants(
+        self, df: DataFrame, m: dict
+    ) -> tuple[DataFrame, list[dict]]:
+        """``df`` completed with the generated columns of manifest (or
+        layout) ``m`` it omits, and the invariants each of its rows
+        must satisfy to be staged under ``m``: m's CHECK constraints
+        plus an equality guard per generated column ``df`` provides.
+        The one invariant list: _stage rejects rows by it,
+        append_quarantine routes them by it."""
+        gen = _generated(m)
+        guards = _generated_guards(gen, df.columns)
+        return self._complete_generated(df, gen), _constraints(m) + guards
+
+    def _stage(self, df: DataFrame, m: dict) -> list[dict]:
         """Write ``df``'s files under a fresh commit dir (never visible
         until a manifest references them); return their file entries.
-        ``df`` and ``partition_by`` use LOGICAL names; ``mapping``
-        (logical -> physical) renames columns on the way to disk so
-        every staged file carries the physical layout its manifest's
-        column mapping expects.  Stats are keyed by PHYSICAL name —
-        the key that survives renames.
+        ``m`` is the manifest (for init/overwrite: the layout) the
+        files will be committed under, and every row invariant comes
+        from it: the generated columns ``df`` omits are computed and
+        the ones it provides guarded (_invariants), the completed frame
+        must carry exactly m's columns (_check_schema), and m's
+        partition column and column mapping (logical -> physical)
+        shape the files, so every staged file carries the physical
+        layout its manifest's column mapping expects.  ``df`` uses
+        LOGICAL names; stats are keyed by PHYSICAL name — the key that
+        survives renames.
 
-        ``constraints`` (the owning manifest's CHECK invariants, see
-        add_check_constraint) are enforced IN the write plan: each row
-        passes through a plan_guard filter that raises on violation,
-        so enforcement is distributed, costs zero extra jobs, and the
-        write fails before a single violating row can be committed —
-        Delta's invariant-check operator re-expressed as a Catalyst
-        filter.  SQL CHECK semantics: a row violates only when the
-        expression is FALSE; NULL passes (add NOT NULL explicitly via
-        add_not_null)."""
+        The invariants (m's CHECK constraints, see
+        add_check_constraint, plus the generated-column guards) are
+        enforced IN the write plan: each row passes through a
+        plan_guard filter that raises on violation, so enforcement is
+        distributed, costs zero extra jobs, and the write fails before
+        a single violating row can be committed — Delta's
+        invariant-check operator re-expressed as a Catalyst filter.
+        SQL CHECK semantics: a row violates only when the expression is
+        FALSE; NULL passes (add NOT NULL explicitly via add_not_null)."""
         from ..functions.exprs import plan_guard
 
-        for c in constraints or []:
+        df, invariants = self._invariants(df, m)
+        self._check_schema(df, StructType.fromJson(json.loads(m["schema"])))
+        partition_by = m.get("partition_by")
+        for c in invariants:
             cond = F.coalesce(F.expr(c["expr"]), F.lit(True))
             df = df.filter(
                 F.coalesce(
@@ -1165,7 +1185,7 @@ class TxTable:
                     F.lit(True),
                 )
             )
-        phys = mapping or {}
+        phys = _col_mapping(m)
         if any(phys.get(c, c) != c for c in df.columns):
             df = df.select(
                 [F.col(c).alias(phys.get(c, c)) for c in df.columns]
@@ -1361,7 +1381,8 @@ class TxTable:
         the default app), ``column_mapping`` (a mapped table stays
         mapped; overwrite() and restore() set it), ``constraints``
         (until drop_constraint()), ``table_stats`` (the freshest
-        ANALYZE; its computed_at says how stale), ``generated``,
+        ANALYZE; its computed_at says how stale), ``generated`` (like
+        the mapping, set by overwrite() and restore()),
         ``copy_registry`` (COPY INTO's ingest memory) and ``features``
         (a feature-gated table stays gated; an unknown writer feature
         refuses the commit).  Non-empty fields are written in _CARRIED
@@ -1550,7 +1571,9 @@ class TxTable:
         lists files the attempt wrote for its own commit alone (a
         registry sidecar); they are deleted when the loop drops the
         attempt.  A CommitConflict ``attempt`` raises itself (a verb's
-        own layout or overlap check) propagates.
+        own layout or overlap check) propagates, and so does a frame
+        that does not match the table schema, its error prefixed with
+        ``verb``.
 
         On a lost race with ``rebase=True`` the interleaved commits are
         classified by _rebase_entries: disjoint data commits REBASE —
@@ -1589,7 +1612,10 @@ class TxTable:
                 else:
                     entries = rebased
             if plan is None:
-                plan = attempt(m)
+                try:
+                    plan = attempt(m)
+                except _SchemaMismatch as e:  # name the verb that staged
+                    raise _SchemaMismatch(f"{verb} {e}") from None
                 if not isinstance(plan, dict):
                     return plan
                 plan = dict(plan)
@@ -1620,9 +1646,9 @@ class TxTable:
         got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         want = {f.name: f.dataType.simpleString() for f in table_schema.fields}
         if got != want:
-            raise ValueError(
-                f"append schema mismatch: table has {want}, frame has "
-                f"{got}; schema changes go through overwrite()"
+            raise _SchemaMismatch(
+                f"schema mismatch: table has {want}, frame has {got}; "
+                "schema changes go through overwrite()"
             )
 
     def init(
@@ -1636,51 +1662,109 @@ class TxTable:
 
         ``generated`` declares GENERATED COLUMNS (Delta's
         ``GENERATED ALWAYS AS``): name -> SQL expression over the
-        frame's columns.  They are computed here and on every append/
-        merge whose frame omits them; a frame that PROVIDES one is
-        accepted only when the value equals the expression (enforced
-        in the write plan, the constraint machinery).  The canonical
-        use is time-partitioning a fact table by a derived key —
-        ``partition_by`` may name a generated column — so writers
-        stream raw events and the engine derives the layout."""
+        frame's columns.  They are computed here and on every write
+        whose frame omits them; a frame that PROVIDES one is accepted
+        only when the value equals the expression (enforced in the
+        write plan, the constraint machinery; see _stage).  The
+        canonical use is time-partitioning a fact table by a derived
+        key — ``partition_by`` may name a generated column — so
+        writers stream raw events and the engine derives the layout."""
         if self.latest_version() is not None:
             raise FileExistsError(f"table already initialized: {self.path}")
-        generated = dict(generated or {})
-        for c in generated:
-            if c in df.columns:
-                raise ValueError(
-                    f"init: generated column {c!r} also present in the "
-                    "frame; declare it generated OR provide it, not both"
-                )
-        if generated:
-            df = df.select(
-                "*", *[F.expr(e).alias(c) for c, e in generated.items()]
+        return self._restate("init", df, None, partition_by, generated, extra)
+
+    def _restate(
+        self,
+        verb: str,
+        df: DataFrame,
+        base: dict | None,
+        partition_by: str | None,
+        generated: dict[str, str] | None,
+        extra: dict | None = None,
+    ) -> int:
+        """init's and overwrite's one body: commit ``df`` as the whole
+        table on top of ``base`` (None: the first commit) under a NEW
+        layout — df's columns plus the ``generated`` ones it declares,
+        partitioned by ``partition_by``, identity column mapping, and
+        base's CHECK constraints.  Declared columns are computed, as
+        _stage computes any omitted one; a frame that also provides
+        one is refused."""
+        gen = dict(generated or {})
+        have = [c for c in gen if c in df.columns]
+        if have:
+            raise ValueError(
+                f"{verb}: generated column(s) {have} also present in the "
+                "frame; declare generated OR provide, not both"
             )
+        layout = {
+            "partition_by": partition_by,
+            "generated": gen,
+            "constraints": _constraints(base or {}),
+        }
+        schema = self._invariants(df, layout)[0].schema
+        layout["schema"] = json.dumps(schema.jsonValue())
         return self._commit(
-            self._stage(df, partition_by),
-            "init",
-            None,
-            df.schema,
+            self._stage(df, layout),
+            verb,
+            base and base["version"],
+            schema,
             partition_by,
             extra=extra,
-            generated=generated or None,
+            column_mapping=None,
+            generated=gen or None,
         )
 
     def _complete_generated(
         self, df: DataFrame, gen: dict[str, str]
-    ) -> tuple[DataFrame, list[dict]]:
-        """Compute the generated columns ``df`` omits; return the
-        completed frame plus the equality guards for the ones it
-        provided (enforced at stage time)."""
-        if not gen:
-            return df, []
-        provided = [c for c in gen if c in df.columns]
+    ) -> DataFrame:
+        """``df`` with the generated columns of ``gen`` it omits
+        computed from their expressions."""
         missing = [c for c in gen if c not in df.columns]
-        if missing:
-            df = df.select(
-                "*", *[F.expr(gen[c]).alias(c) for c in missing]
-            )
-        return df, _generated_guards(gen, provided)
+        if not missing:
+            return df
+        return df.select("*", *[F.expr(gen[c]).alias(c) for c in missing])
+
+    def _stage_once(
+        self,
+        verb: str,
+        df: DataFrame,
+        plan: Callable[[dict, list[dict]], dict],
+        max_retries: int = 5,
+        replayed: Callable[[dict], bool] = lambda head: False,
+    ) -> int:
+        """The append family's one commit body (append, copy_into, the
+        stream sink): the first attempt stages ``df`` under its head
+        manifest (_stage: that head's generated columns, schema and
+        invariants), and every attempt commits ``entries`` — the head's
+        files plus the staged ones — with the commit fields
+        ``plan(head, entries)`` returns.  A lost race re-proposes the
+        same files onto the new head without restaging, so concurrent
+        appends never invalidate each other.  A concurrent change to
+        the table metadata the rows were staged under (_REBASE_META)
+        refuses the commit instead: the staged files were written and
+        validated against the old metadata.  ``replayed(head)`` runs
+        first in every attempt; True makes the attempt a no-op that
+        stages nothing (the sink's exactly-once check)."""
+        base = staged = None
+
+        def attempt(head: dict) -> int | dict:
+            nonlocal base, staged
+            if replayed(head):
+                return head["version"]
+            if base is None:
+                base, staged = head, self._stage(df, head)
+            changed = _meta_changed(base, head)
+            if changed:
+                raise CommitConflict(
+                    f"{verb} on {self.path}: concurrent commit "
+                    f"{head['version']} (op {head.get('op')!r}) changed "
+                    f"table metadata/layout ({', '.join(changed)}); re-run "
+                    "against the new layout"
+                )
+            entries = head["files"] + staged
+            return dict(plan(head, entries), entries=entries)
+
+        return self._commit_loop(verb, attempt, max_retries)
 
     def append(
         self,
@@ -1689,38 +1773,25 @@ class TxTable:
         extra: dict | None = None,
     ) -> int:
         """Blind append: stage once, then race to commit; on conflict the
-        staged files REBASE onto the new head (_commit_loop) —
+        staged files re-propose onto the new head (_stage_once) —
         CONCURRENT APPENDS never invalidate each other, and an append
         racing a compact / delete / copy_into lands without restaging
         too (its read set is empty, so any pure data interleave
         commutes).  A concurrent change to the table's metadata/layout
         (partition column, schema, column mapping, constraints, or
         generated columns) DOES invalidate the staged files — they were
-        written and validated against the old metadata — so the rebase
-        check surfaces a CommitConflict instead of committing a
-        manifest whose entries mix layouts or dodge a new invariant.
+        written and validated against the old metadata — so the retry
+        surfaces a CommitConflict instead of committing a manifest
+        whose entries mix layouts or dodge a new invariant.
 
-        The incoming frame must MATCH the table schema (names + types;
-        nullability free): parquet reads match columns by name, so a
-        mismatched append would not fail loudly — its missing columns
-        would read back as NULLs and its extra columns would vanish,
-        silent corruption.  Schema changes go through overwrite()."""
-
-        def attempt(base: dict) -> dict:
-            dfx, gen_guards = self._complete_generated(df, _generated(base))
-            self._check_schema(
-                dfx, StructType.fromJson(json.loads(base["schema"]))
-            )
-            staged = self._stage(
-                dfx,
-                base.get("partition_by"),
-                _col_mapping(base),
-                _constraints(base) + gen_guards,
-            )
-            return dict(entries=base["files"] + staged, extra=extra)
-
-        return self._commit_loop(
-            "append", attempt, max_retries, rebase=True, rederive=False
+        The incoming frame must MATCH the table schema once its omitted
+        generated columns are computed (names + types; nullability
+        free): parquet reads match columns by name, so a mismatched
+        append would not fail loudly — its missing columns would read
+        back as NULLs and its extra columns would vanish, silent
+        corruption.  Schema changes go through overwrite()."""
+        return self._stage_once(
+            "append", df, lambda head, entries: dict(extra=extra), max_retries
         )
 
     def _ingested_files_legacy(self) -> set[str]:
@@ -1790,33 +1861,12 @@ class TxTable:
         as a loud CommitConflict — the re-run then skips what landed."""
         src_dir = str(src_dir).rstrip("/")
         found = sorted(self.fs.glob(src_dir, pattern))
-        base = self.manifest()
-        new = [p for p in found if p not in self._ingested_files(base)]
+        done = self._ingested_files()
+        new = [p for p in found if p not in done]
         if not new:
             return None, []
-        df = self.spark.read.parquet(*new)
-        df, gen_guards = self._complete_generated(df, _generated(base))
-        self._check_schema(
-            df, StructType.fromJson(json.loads(base["schema"]))
-        )
-        staged = self._stage(
-            df,
-            base.get("partition_by"),
-            _col_mapping(base),
-            _constraints(base) + gen_guards,
-        )
 
-        def attempt(head: dict) -> dict:
-            # the files were staged (and their rows checked) against
-            # base's metadata: any drift — layout, mapping, a constraint
-            # or generated column added meanwhile — needs a re-run
-            changed = _meta_changed(base, head)
-            if changed:
-                raise CommitConflict(
-                    f"copy_into {self.path}: concurrent commit changed "
-                    f"table metadata/layout ({', '.join(changed)}); "
-                    "re-run against the new layout"
-                )
+        def plan(head: dict, entries: list[dict]) -> dict:
             # O(1) with a registry: one manifest key + one sidecar read
             # per retry, never a log walk (ADVICE r10 was O(versions^2)
             # across a many-batch backfill)
@@ -1842,7 +1892,6 @@ class TxTable:
                 set(feats.get("writer") or []) | {"copy-registry"}
             )
             return dict(
-                entries=head["files"] + staged,
                 extra={"copy_into": new},
                 copy_registry={"sidecar": sidecar, "n": len(registry)},
                 features=feats,
@@ -1850,7 +1899,10 @@ class TxTable:
                 discard=[self._sidecar_abs(sidecar)],
             )
 
-        return self._commit_loop("copy_into", attempt, max_retries), new
+        # _stage_once stages (and checks every row) before plan() writes
+        # the registry sidecar: a rejected row leaves no sidecar behind
+        df = self.spark.read.parquet(*new)
+        return self._stage_once("copy_into", df, plan, max_retries), new
 
     def append_quarantine(
         self, df: DataFrame, quarantine: "TxTable", max_retries: int = 5
@@ -1868,9 +1920,9 @@ class TxTable:
 
         The quarantine table is created on first use with the main
         schema plus ``_violated``; triage is a normal read + re-append
-        after repair.  Generated columns are completed first, so a
-        provided-but-wrong generated value routes to quarantine like
-        any other violation.
+        after repair.  Rows are completed and tagged by the invariant
+        list _stage enforces (_invariants), so a provided-but-wrong
+        generated value routes to quarantine like any other violation.
 
         Concurrency: the split reads one manifest and the delegated
         append() re-reads it, so a constraint added in between would
@@ -1886,11 +1938,11 @@ class TxTable:
 
         for _ in range(max_retries + 1):
             m = self.manifest()
-            gen = _generated(m)
-            dfx, gen_guards = self._complete_generated(df, gen)
-            cons = _constraints(m) + gen_guards
+            # the invariant list _stage rejects by: what routes here is
+            # exactly what append() would refuse
+            dfx, invariants = self._invariants(df, m)
             checks = []
-            for c in cons:
+            for c in invariants:
                 ok = F.coalesce(F.expr(c["expr"]), F.lit(True))
                 checks.append(F.when(~ok, F.lit(c["name"])))
             violated = (
@@ -1944,26 +1996,8 @@ class TxTable:
         logical names, so the indirection (and any dropped column's
         ghost bytes) ends here; older versions keep their own mapping
         for time travel."""
-        base = self.manifest()
-        generated = dict(generated or {})
-        if generated:
-            have = [c for c in generated if c in df.columns]
-            if have:
-                raise ValueError(
-                    f"overwrite: generated column(s) {have} also present "
-                    "in the frame; declare generated OR provide, not both"
-                )
-            df = df.select(
-                "*", *[F.expr(e).alias(c) for c, e in generated.items()]
-            )
-        return self._commit(
-            self._stage(df, partition_by, constraints=_constraints(base)),
-            "overwrite",
-            base["version"],
-            df.schema,
-            partition_by,
-            column_mapping=None,
-            generated=generated or None,
+        return self._restate(
+            "overwrite", df, self.manifest(), partition_by, generated
         )
 
     def add_columns(
@@ -2222,12 +2256,10 @@ class TxTable:
 
         def attempt(m: dict) -> dict:
             files = max(1, len(m["files"])) if n_files is None else n_files
-            pcol = m.get("partition_by")
             df = self.snapshot(m["version"])
-            if pcol is None:
+            if m.get("partition_by") is None:
                 df = df.repartition(files)
-            staged = self._stage(df, pcol, _col_mapping(m), _constraints(m))
-            return dict(entries=staged, op="purge_columns")
+            return dict(entries=self._stage(df, m), op="purge_columns")
 
         return self._commit_loop("purge_dropped_columns", attempt, max_retries)
 
@@ -2463,8 +2495,9 @@ class TxTable:
 
     def restore(self, version: int, max_retries: int = 5) -> int:
         """Roll the table BACK to ``version`` as a NEW commit (Delta's
-        RESTORE): the old version's file list, schema, and partition
-        column are re-committed at the head — metadata-only, O(1)
+        RESTORE): the old version's file list, schema, partition
+        column, column mapping and generated columns are re-committed
+        at the head — metadata-only, O(1)
         whatever the table size, and the bad intermediate versions
         remain time-travelable for forensics until vacuum().  Only
         versions whose manifest is still retained can be restored
@@ -2498,9 +2531,11 @@ class TxTable:
             entries=src["files"],
             schema=StructType.fromJson(json.loads(src["schema"])),
             partition_by=src.get("partition_by"),
-            # the restored version's OWN mapping, not the head's: its
-            # files' physical names belong to that mapping
+            # the restored version's OWN mapping and generated columns,
+            # not the head's: its files' physical names belong to that
+            # mapping, and its schema to those declarations
             column_mapping=src.get("column_mapping"),
+            generated=src.get("generated"),
         )
         return self._commit_loop("restore", lambda m: restored, max_retries)
 
@@ -2641,8 +2676,7 @@ class TxTable:
                 from ..operators.zorder import zorder_frame
 
                 df = zorder_frame(src, list(zorder_by), n_files)
-            staged = self._stage(df, pcol, mapping, _constraints(m))
-            return dict(entries=carry + staged)
+            return dict(entries=carry + self._stage(df, m))
 
         # a compact racing disjoint data commits (appends, a scoped
         # compact of another partition) rebases and lands without
@@ -2695,7 +2729,6 @@ class TxTable:
             pcol = m.get("partition_by")
             schema = StructType.fromJson(json.loads(m["schema"]))
             mapping = _col_mapping(m)
-            cons = _constraints(m)
             scoped = (
                 m["files"]
                 if where is None
@@ -2735,7 +2768,7 @@ class TxTable:
                 df = self._read_entries(
                     schema, pcol, ents, mapping=mapping
                 ).repartition(n)
-                staged += self._stage(df, pcol, mapping, cons)
+                staged += self._stage(df, m)
             return dict(entries=carry + staged, op="optimize")
 
         # rebase first: a nightly OPTIMIZE racing a steady append stream
@@ -2862,8 +2895,7 @@ class TxTable:
                 # tasks stage empty part files — dead manifest entries
                 # that also read as unprunable under data skipping
                 survivors = survivors.coalesce(len(hits))
-            staged = self._stage(survivors, pcol, mapping, _constraints(m))
-            return dict(entries=carry + staged)
+            return dict(entries=carry + self._stage(survivors, m))
 
         return self._commit_loop(
             "delete",
@@ -3105,6 +3137,10 @@ class TxTable:
         keys = [on] if isinstance(on, str) else list(on)
         if not keys:
             raise ValueError("merge: 'on' must name at least one key column")
+        m0 = self.manifest()
+        # completed before the key checks: a merge key may be a
+        # generated column the source omits
+        source = self._complete_generated(source, _generated(m0))
         for k in keys:
             if k not in source.columns:
                 raise ValueError(f"merge: key column {k!r} not in source")
@@ -3181,7 +3217,6 @@ class TxTable:
                 and not isinstance(hi, bool)
             ):
                 key_bounds.append((k, lo, hi))
-        m0 = self.manifest()
         schema_json0 = m0["schema"]
         pcol0 = m0.get("partition_by")
         base_schema = StructType.fromJson(json.loads(schema_json0))
@@ -3209,9 +3244,6 @@ class TxTable:
                         **{f.name: _fresh_physical(f.name) for f in new_fields},
                     }
         data_cols = [f.name for f in schema.fields]
-        src, gen_guards = self._complete_generated(src, _generated(m0))
-        self._check_schema(src.drop(*([delete_col] if delete_col else [])), schema)
-        upserts = src.filter(~is_del).select(data_cols)
         # already proven unique on the keys, and delta-sized: broadcast
         # whenever the counted key set fits, so neither the detection
         # semi-join nor the survivors anti-join shuffles the table side
@@ -3225,7 +3257,7 @@ class TxTable:
             # — and the source's generated columns were completed with
             # m0's expressions, so a redeclared expression must refuse
             # the commit too (constraints, by contrast, are re-read from
-            # ``m`` on every attempt)
+            # ``m`` on every attempt, by _stage)
             if (
                 m["schema"] != schema_json0
                 or m.get("partition_by") != pcol0
@@ -3238,6 +3270,9 @@ class TxTable:
                     "mapping or generated columns); restage the merge "
                     "against the new layout"
                 )
+            self._check_schema(
+                src.drop(*([delete_col] if delete_col else [])), schema
+            )
             pcol = m.get("partition_by")
             mapping = _col_mapping(m)
             # hit-FILE detection over a stats-pruned entry set
@@ -3292,12 +3327,11 @@ class TxTable:
                 # narrow coalesce, same reason as delete(): without it
                 # the scan's partitioning stages empty part files
                 survivors = survivors.coalesce(len(hits))
-            mapping = evolved.get("column_mapping", mapping)
             # survivors and upserts stage as ONE write (one job, one
             # commit dir, one stats/bloom pass)
             parts = [survivors] if hits else []
             if n_upserts:
-                ins = upserts
+                ins = src.filter(~is_del).select(data_cols)
                 if not insert_unmatched:
                     ins = ins.join(snap.select(keys), on=keys, how="leftsemi")
                 # the upserts never inherit the source's partitioning (a
@@ -3306,11 +3340,10 @@ class TxTable:
                 parts.append(
                     ins.coalesce(self._split_count(n_upserts, ins.schema))
                 )
+            # staged under m as this commit evolves it (schema, mapping)
             staged = self._stage(
                 functools.reduce(DataFrame.unionByName, parts),
-                pcol,
-                mapping,
-                _constraints(m) + gen_guards,
+                {**m, "schema": json.dumps(schema.jsonValue()), **evolved},
             )
             return dict(
                 entries=carry + staged, schema=schema, extra=extra, **evolved
@@ -3596,9 +3629,7 @@ def scd2_merge_tx(
         ).withColumn(
             SCD2_BUCKET_COL, scd2_bucket(F.col(business_key), n_buckets)
         )
-        staged = table._stage(
-            merged, SCD2_BUCKET_COL, mapping, _constraints(m)
-        )
+        staged = table._stage(merged, m)
         staged_parts = {e["part"] for e in staged}
         # an affected bucket holds >=1 update key and scd2_merge never
         # drops rows — enforce the invariant the swap path also checks
@@ -3697,7 +3728,12 @@ class TxTableStreamSink:
     pre-compaction files stay time-travelable until vacuum(); and a
     compact that loses a commit race is simply skipped (the next
     batch retries — compaction is a maintenance heuristic, never a
-    correctness step)."""
+    correctness step).
+
+    Each batch stages exactly like ``TxTable.append`` (one stage-once
+    body, TxTable._stage_once): generated columns the batch omits are
+    computed, provided ones must equal their expression, and the
+    table's CHECK constraints guard every row."""
 
     def __init__(
         self,
@@ -3765,7 +3801,7 @@ class TxTableStreamSink:
         for v in self.table.versions():
             if v in self._scanned:
                 continue
-            parsed = _parse_batch_op(self.table.manifest(v)["op"])
+            parsed = _parse_batch_op(self.table._manifest_raw(v)["op"])
             if parsed is not None and parsed[0] == self.app_id:
                 self._seen_ids.add(parsed[1])
             self._scanned.add(v)
@@ -3788,52 +3824,38 @@ class TxTableStreamSink:
         # handles the (impossible under monotone batch ids, cheap to
         # keep) gap case.
         #
-        # Lost-race handling re-proposes the batch ONCE staged: a
-        # DISJOINT interleaved commit — a maintenance optimize, another
-        # app's stream batch, a batch append — must not fail this
-        # micro-batch; the staged files re-propose onto the new head
-        # (floors max-merged from it) and the batch lands.  Per retry
-        # the exactly-once check re-runs FIRST: if another instance of
-        # the SAME app committed this batch_id in the interleave, drop
-        # out instead of double-appending.  A metadata/layout change
-        # stays loud — the staged files were validated against the old
+        # Lost-race handling is append's (_stage_once): the batch is
+        # staged once — completed, checked and guarded like an append —
+        # and a DISJOINT interleaved commit (a maintenance optimize,
+        # another app's stream batch, a batch append) must not fail
+        # this micro-batch: the staged files re-propose onto the new
+        # head (floors max-merged from it) and the batch lands.  Per
+        # attempt the exactly-once check runs FIRST, so a replayed batch
+        # stages nothing, and if another instance of the SAME app
+        # committed this batch_id in the interleave, this one drops out
+        # instead of double-appending.  A metadata/layout change stays
+        # loud — the staged files were validated against the old
         # metadata, and a schema-changed table needs a restarted stream.
-        orig = staged = n_files = None  # n_files: what our commit leaves
+        n_files = None  # what our commit leaves
 
-        def attempt(m: dict) -> int | dict:
-            nonlocal orig, staged, n_files
-            n_files = None
-            if batch_id <= self._floor(m) or (
+        def replayed(m: dict) -> bool:
+            nonlocal n_files
+            n_files = None  # until this attempt plans a commit
+            return batch_id <= self._floor(m) or (
                 batch_id in self.committed_batch_ids()
-            ):
-                return m["version"]  # replayed, or another instance won
-            if orig is None:  # stage once, against the first head read
-                orig = m
-                self.table._check_schema(
-                    df, StructType.fromJson(json.loads(m["schema"]))
-                )
-                staged = self.table._stage(
-                    df, m.get("partition_by"), _col_mapping(m), _constraints(m)
-                )
-            changed = _meta_changed(orig, m)
-            if changed:
-                raise CommitConflict(
-                    f"stream sink on {self.table.path}: concurrent "
-                    f"commit changed table metadata/layout "
-                    f"({', '.join(changed)}); restart the stream "
-                    "against the new layout"
-                )
-            floors = _stream_floors(m)
-            floors[self.app_id] = max(floors.get(self.app_id, -1), batch_id)
-            n_files = len(m["files"]) + len(staged)
-            return dict(
-                entries=m["files"] + staged,
-                op=_batch_op(self.app_id, batch_id),
-                stream_floors=floors,
             )
 
-        self.table._commit_loop(
-            f"stream sink batch {batch_id}", attempt, max_retries=5
+        def plan(m: dict, entries: list[dict]) -> dict:
+            nonlocal n_files
+            floors = _stream_floors(m)
+            floors[self.app_id] = max(floors.get(self.app_id, -1), batch_id)
+            n_files = len(entries)
+            return dict(
+                op=_batch_op(self.app_id, batch_id), stream_floors=floors
+            )
+
+        self.table._stage_once(
+            f"stream sink batch {batch_id}", df, plan, replayed=replayed
         )
         if n_files is not None:
             self._maybe_compact(n_files)

@@ -61,7 +61,7 @@ def test_commit_is_create_if_absent_and_append_retries(
 
     # stage b's data first, then let a commit version 2 out from under it
     base = b.manifest()
-    staged_b = b._stage(_df(spark, [(3, "c")]), None)
+    staged_b = b._stage(_df(spark, [(3, "c")]), b.manifest())
     a.append(_df(spark, [(2, "b")]))
     from pyspark.sql.types import StructType
     import json as _json
@@ -86,7 +86,7 @@ def test_crash_before_commit_leaves_table_unchanged_and_vacuum_collects(
     t = TxTable(spark, str(tmp_path / "t"), fs=_make_fs(spark, fs_kind))
     t.init(_df(spark, [(1, "a")]))
     # simulate a writer dying after staging but before committing
-    t._stage(_df(spark, [(99, "zz")]), None)
+    t._stage(_df(spark, [(99, "zz")]), t.manifest())
     assert {r.k for r in t.snapshot().collect()} == {1}
     t.append(_df(spark, [(2, "b")]))
     removed = t.vacuum(keep_versions=1, min_age_seconds=0)
@@ -531,7 +531,8 @@ def test_vacuum_age_guard_spares_fresh_stages(spark, tmp_path):
     manifest is about to land."""
     t = TxTable(spark, str(tmp_path / "t"))
     t.init(_df(spark, [(1, "a")]))
-    staged = t._stage(_df(spark, [(2, "b")]), None)  # "in-flight" writer
+    # an "in-flight" writer
+    staged = t._stage(_df(spark, [(2, "b")]), t.manifest())
     assert t.vacuum(keep_versions=1, min_age_seconds=3600) == []
     # the spared stage can still be committed and read
     base = t.manifest()
@@ -571,8 +572,8 @@ def test_append_refuses_after_concurrent_layout_change(spark, tmp_path):
 
     orig_stage = b._stage
 
-    def stage_then_lose_race(df, pcol, *args, **kw):
-        out = orig_stage(df, pcol, *args, **kw)
+    def stage_then_lose_race(df, m):
+        out = orig_stage(df, m)
         a.overwrite(
             spark.createDataFrame([(9, "z", 0)], "k long, v string, p int"),
             partition_by="p",
@@ -584,6 +585,55 @@ def test_append_refuses_after_concurrent_layout_change(spark, tmp_path):
         b.append(_df(spark, [(3, "c")]))
     # the table stays readable on the new layout throughout
     assert {(r.k, r.p) for r in a.snapshot().collect()} == {(9, 0)}
+
+
+def test_stream_sink_stages_nothing_for_a_replayed_batch(spark, tmp_path):
+    """The sink's exactly-once check runs before staging: a new batch
+    stages once, a replayed one writes no file at all."""
+    from ecommerce_data_pipeline_23a91a05i4_spark.sources.txtable import (
+        TxTableStreamSink,
+    )
+
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.init(_df(spark, []))
+    stages = []
+    stage = t._stage
+
+    def counted(df, m):
+        stages.append(m["version"])
+        return stage(df, m)
+
+    t._stage = counted
+    sink = TxTableStreamSink(t)
+    sink(_df(spark, [(1, "a")]), 0)
+    assert stages == [1]
+    sink(_df(spark, [(1, "a")]), 0)  # replayed
+    assert stages == [1]
+    assert t.latest_version() == 2
+    # a fresh sink instance (no cached ids) replays off the floor
+    TxTableStreamSink(t)(_df(spark, [(1, "a")]), 0)
+    assert stages == [1]
+    assert [r.k for r in t.snapshot().collect()] == [1]
+
+
+def test_restore_recommits_the_versions_generated_columns(spark, tmp_path):
+    """restore() re-commits the restored version's own generated-column
+    declaration, like its schema: restoring past an overwrite that
+    declared one leaves a table that plain appends still fit."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    k = spark.createDataFrame([(1,)], "k long")
+    t.init(k)
+    t.overwrite(k, generated={"g": "k * 3"})
+    assert set(t.snapshot().columns) == {"k", "g"}
+    t.restore(1)
+    assert "generated" not in t.manifest()
+    t.append(spark.createDataFrame([(2,)], "k long"))
+    assert {r.k for r in t.snapshot().collect()} == {1, 2}
+    # and restoring the declaring version brings the declaration back
+    t.restore(2)
+    assert t.manifest()["generated"] == {"g": "k * 3"}
+    t.append(spark.createDataFrame([(4,)], "k long"))
+    assert {(r.k, r.g) for r in t.snapshot().collect()} == {(1, 3), (4, 12)}
 
 
 def test_stream_sink_is_exactly_once_on_replayed_batches(spark, tmp_path):
@@ -1894,6 +1944,31 @@ def test_generated_columns_lifecycle(spark, tmp_path):
     # merge source without the column: computed
     t.merge(spark.createDataFrame([(1, 99)], "k long, v long"), on="k")
     assert t.snapshot().filter("k = 1").first().bucket == "9"
+    # copy_into and the stream sink complete and guard like append
+    from ecommerce_data_pipeline_23a91a05i4_spark.sources.txtable import (
+        TxTableStreamSink,
+    )
+
+    land_ok, land_bad = str(tmp_path / "ok"), str(tmp_path / "bad")
+    spark.createDataFrame([(7, 72)], "k long, v long").write.parquet(land_ok)
+    spark.createDataFrame(
+        [(8, 88, "1")], "k long, v long, bucket string"
+    ).write.parquet(land_bad)
+    t.copy_into(land_ok)
+    assert t.snapshot().filter("k = 7").first().bucket == "2"
+    with pytest.raises(Exception, match="generated"):
+        t.copy_into(land_bad)
+    sink = TxTableStreamSink(t)
+    sink(spark.createDataFrame([(9, 93)], "k long, v long"), 0)
+    assert t.snapshot().filter("k = 9").first().bucket == "3"
+    with pytest.raises(Exception, match="generated"):
+        sink(
+            spark.createDataFrame(
+                [(10, 104, "9")], "k long, v long, bucket string"
+            ),
+            1,
+        )
+    assert not t.snapshot().filter("k IN (6, 8, 10)").count()
     # declaring AND providing at init is ambiguous
     with pytest.raises(ValueError, match="not both"):
         TxTable(spark, str(tmp_path / "x")).init(
@@ -2069,7 +2144,7 @@ def test_commit_conflict_cleans_loser_sidecar(spark, tmp_path):
     b = TxTable(spark, str(tmp_path / "t"))
     a.init(_df(spark, [(1, "a")]))
     base = b.manifest()
-    staged = b._stage(_df(spark, [(2, "b")]), None)
+    staged = b._stage(_df(spark, [(2, "b")]), b.manifest())
     a.append(_df(spark, [(3, "c")]))
     before = set((tmp_path / "t" / "_txlog").glob("sc-*.parquet"))
     with pytest.raises(CommitConflict):
